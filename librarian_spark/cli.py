@@ -320,8 +320,10 @@ def _cmd_materialize(args) -> int:
         q = materialize(spark, stream, cfg)
         read_back = lambda: read_state(spark, cfg)  # noqa: E731
     if args.once:
-        q.processAllAvailable()
-        q.stop()
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
         print(json.dumps({"mode": args.mode, "rows": read_back().count()}))
         return 0
     q.awaitTermination()

@@ -104,24 +104,9 @@ WHERE p.n_common * 1.0 / (LEN(s1.shingles) + LEN(s2.shingles) - p.n_common)
 """
 
 
-# Round-12 G4b-style adjudication switch (flipped per arm by
-# scripts/opt_ab.py via OPT_PY_B): when True, the shared cached minhash
-# feature stage is materialized by ONE dedicated count job before any
-# consumer fans it into concurrent subtrees. Without it, the first job that
-# contains the cached frame in >=2 independent subtrees (self-join sides,
-# size broadcasts) computes the Python signature pass once per subtree in a
-# per-partition cache race — the same failure mode the round-11 G4b fix
-# measured on q111/q112's distinct.
-_PRIME_SHARED_FEATURES = False
 # round-12 A/B switch: SHUFFLE_HASH hint on dedup_minhash_recall's
 # truth-side left join (see the in-op comment)
 _RECALL_SHJ_HINT = True
-
-
-def _primed(df: DataFrame) -> DataFrame:
-    if _PRIME_SHARED_FEATURES:
-        df.count()
-    return df
 
 
 def shared_shingle_pairs(spark: SparkSession, sf: str) -> DataFrame:
@@ -134,7 +119,7 @@ def shared_shingle_pairs(spark: SparkSession, sf: str) -> DataFrame:
     100 TB-prep change (stop-shingle document-frequency cap, hash widening)
     lands here once and every downstream verify inherits it.
     """
-    sh = _primed(minhash_features(spark, sf)).select("doc_id", "shingle_hashes")
+    sh = minhash_features(spark, sf).select("doc_id", "shingle_hashes")
     sizes = sh.select("doc_id", F.size("shingle_hashes").alias("n_shingles"))
     ex = sh.select("doc_id", F.explode("shingle_hashes").alias("s"))
     a, b = ex.alias("a"), ex.alias("b")
@@ -318,7 +303,7 @@ def minhash_features(
 
 def minhash_lsh_candidates(spark: SparkSession, sf: str) -> DataFrame:
     """Candidate pairs from banded LSH: docs sharing ≥1 identical band signature."""
-    bands = _primed(minhash_features(spark, sf)).select(
+    bands = minhash_features(spark, sf).select(
         "doc_id", F.posexplode("band_sigs").alias("band", "band_sig")
     )
     a, b = bands.alias("a"), bands.alias("b")

@@ -11,8 +11,11 @@ from __future__ import annotations
 import hashlib
 import os
 import threading
+import uuid
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.streaming import StreamingQuery
 
 from librarian_spark.operators.registry import query
 from librarian_spark.scratch import scratch_root
@@ -20,6 +23,12 @@ from librarian_spark.scratch import scratch_root
 _SNAP_QUERY = "SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice FROM source"
 
 _RUN_DIR_TTL_S = 1800  # sweep only run dirs older than this
+
+# Shuffle/state width of every drain: streaming state partitioning is FIXED
+# at a query's first run and its file IO is partitions x batches x stores,
+# so it is sized to the drains' per-BATCH volume (a few thousand rows; 8
+# measured 5x faster than 32), not to the session's batch-shuffle width.
+_DRAIN_WIDTH = 8
 
 
 def _sweep_run_dirs(base: str, prefixes: tuple[str, ...]) -> None:
@@ -63,6 +72,48 @@ def _sweep_run_dirs(base: str, prefixes: tuple[str, ...]) -> None:
         except OSError:  # raced with another sweep — someone cleaned it
             pass
 
+
+def _run_dirs(base: str, *prefixes: str) -> list[str]:
+    """Sweep previous runs' ``<prefix>*`` dirs under ``base`` and return one
+    fresh ``base/<prefix><run id>`` path per prefix, all under ONE run id —
+    the swept prefixes and the allocated names come from the same list, so
+    they cannot disagree. Nothing is created on disk."""
+    _sweep_run_dirs(base, prefixes)
+    run_id = uuid.uuid4().hex[:8]
+    return [f"{base}/{p}{run_id}" for p in prefixes]
+
+
+def _drain(
+    spark: SparkSession,
+    start: Callable[[], StreamingQuery],
+    *,
+    width: int | None = _DRAIN_WIDTH,
+    wait: Callable[[StreamingQuery], object] = StreamingQuery.processAllAvailable,
+) -> StreamingQuery:
+    """Start a streaming query at ``width`` shuffle partitions (``None``: at
+    the caller's own width), wait for it and stop it; returns the stopped
+    query (its progress stays readable).
+
+    The width is set on the caller's session ONLY across ``start()``: a
+    query clones its session when it starts and records the width in its
+    offset log, so its state partitions and every frame a batch function
+    plans on ``bdf.sparkSession`` keep it, while the caller's session is
+    back at its own width for anything planned concurrently. ``wait`` is
+    ``processAllAvailable`` by default, ``StreamingQuery.awaitTermination``
+    for availableNow triggers, or a site's own drain loop; the query is
+    stopped even when ``wait`` raises."""
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, prev if width is None else str(width))
+    try:
+        q = start()
+    finally:
+        spark.conf.set(key, prev)
+    try:
+        wait(q)
+    finally:
+        q.stop()
+    return q
 
 
 _EVENT_STREAM_SCHEMA = "event_id long, ts timestamp, user_id long, event_type string"
@@ -190,8 +241,6 @@ archiver:
     "full drain is measured, not a no-op resume.",
 )
 def pipeline_replicate(spark: SparkSession, sf: str) -> DataFrame:
-    import uuid
-
     from pyspark.sql import functions as F
 
     from librarian_spark.sources.batch import load_table
@@ -214,17 +263,12 @@ def pipeline_replicate(spark: SparkSession, sf: str) -> DataFrame:
         )
         ev.select("value").write.mode("overwrite").text(in_dir)
 
-    # best-effort cleanup of previous runs' out/ckpt dirs (bounded /tmp use)
-
-    _sweep_run_dirs(base, ("out_", "ckpt_"))
-
-    run_id = uuid.uuid4().hex[:8]
-    out = f"{base}/out_{run_id}"
+    out, ckpt = _run_dirs(base, "out_", "ckpt_")
     rep = Replicator(
         spark,
         ReplicateConfig(
-            replicator_id=f"bench_{run_id}",
-            checkpoint_dir=f"{base}/ckpt_{run_id}",
+            replicator_id=f"bench_{os.path.basename(ckpt)}",
+            checkpoint_dir=ckpt,
             source_format="files",
             source_path=in_dir,
             source_schema="value string",
@@ -237,8 +281,10 @@ def pipeline_replicate(spark: SparkSession, sf: str) -> DataFrame:
         ),
     )
     rep.start()
-    rep.process_available()
-    rep.stop()
+    try:
+        rep.process_available()
+    finally:
+        rep.stop()
     t = spark.read.parquet(out)
     return t.select(
         "op",
@@ -275,8 +321,6 @@ def pipeline_replicate(spark: SparkSession, sf: str) -> DataFrame:
     "batch cdc_scd2 operator commits to.",
 )
 def pipeline_scd2(spark: SparkSession, sf: str) -> DataFrame:
-    import uuid
-
     from pyspark.sql import functions as F
 
     from librarian_spark.sources.batch import load_table
@@ -312,19 +356,20 @@ def pipeline_scd2(spark: SparkSession, sf: str) -> DataFrame:
         )
         ev.select("value").write.mode("overwrite").text(in_dir)
 
-    _sweep_run_dirs(base, ("state_", "ckpt_"))
-
-    run_id = uuid.uuid4().hex[:8]
+    state, ckpt = _run_dirs(base, "state_", "ckpt_")
     cfg = SCD2Config(
-        state_dir=f"{base}/state_{run_id}",
-        checkpoint_dir=f"{base}/ckpt_{run_id}",
+        state_dir=state,
+        checkpoint_dir=ckpt,
         key_cols=["user_id"],
         row_ddl="user_id long, value double",
     )
     stream = spark.readStream.schema("value string").text(in_dir)
-    q = scd2_materialize(spark, parse_envelope(stream, "value"), cfg)
-    q.processAllAvailable()
-    q.stop()
+    # stateless foreachBatch drain: plans its batches at the caller's width
+    _drain(
+        spark,
+        lambda: scd2_materialize(spark, parse_envelope(stream, "value"), cfg),
+        width=None,
+    )
     return read_history(spark, cfg)
 
 
@@ -356,8 +401,6 @@ from librarian_spark.operators.dedup import _IDX_QUERY_MOD, _NGRAM_ORACLE
     "corpus itself is never rescanned.",
 )
 def pipeline_dedup_gate(spark: SparkSession, sf: str) -> DataFrame:
-    import uuid
-
     from pyspark.sql import functions as F
 
     from librarian_spark.operators.dedup import (
@@ -384,13 +427,10 @@ def pipeline_dedup_gate(spark: SparkSession, sf: str) -> DataFrame:
             .parquet(in_dir)
         )
 
-    _sweep_run_dirs(base, ("out_", "ckpt_"))
-
-    run_id = uuid.uuid4().hex[:8]
-    out = f"{base}/out_{run_id}"
+    out, ckpt = _run_dirs(base, "out_", "ckpt_")
 
     def gate(batch_df: DataFrame, batch_id: int) -> None:
-        pairs = minhash_index_probe(spark, sf, index_dir, batch_df)
+        pairs = minhash_index_probe(batch_df.sparkSession, sf, index_dir, batch_df)
         rejected = (
             pairs.select(F.col("doc_id_1").alias("doc_id"))
             .union(pairs.select(F.col("doc_id_2").alias("doc_id")))
@@ -410,13 +450,14 @@ def pipeline_dedup_gate(spark: SparkSession, sf: str) -> DataFrame:
         .option("maxFilesPerTrigger", 1)
         .parquet(in_dir)
     )
-    q = (
+    # stateless foreachBatch drain: plans its batches at the caller's width
+    _drain(
+        spark,
         stream.writeStream.foreachBatch(gate)
-        .option("checkpointLocation", f"{base}/ckpt_{run_id}")
-        .start()
+        .option("checkpointLocation", ckpt)
+        .start,
+        width=None,
     )
-    q.processAllAvailable()
-    q.stop()
     return spark.read.parquet(out)
 
 
@@ -436,8 +477,6 @@ def pipeline_dedup_gate(spark: SparkSession, sf: str) -> DataFrame:
     "so the measurement is never a no-op resume.",
 )
 def pipeline_compact(spark: SparkSession, sf: str) -> DataFrame:
-    import uuid
-
     from librarian_spark.maintenance import compact, dir_stats
     from librarian_spark.sources.batch import load_table
 
@@ -445,9 +484,7 @@ def pipeline_compact(spark: SparkSession, sf: str) -> DataFrame:
     mtime = int(os.path.getmtime(src)) if os.path.exists(src) else 0
     tag = hashlib.md5(f"{sf}:{mtime}".encode()).hexdigest()[:10]
     base = f"{scratch_root()}/librarian_bench_compact_{tag}"
-    _sweep_run_dirs(base, ("run_",))
-
-    data = f"{base}/run_{uuid.uuid4().hex[:8]}"
+    [data] = _run_dirs(base, "run_")
     # fragment count scales with source size (~2 MB fragments, floor 64) so
     # each fragment stays far below the 128 MB compaction target at ANY scale
     # factor — a fixed count would stop reproducing the small-files problem
@@ -621,8 +658,6 @@ archiver:
     "session state.",
 )
 def pipeline_session_agg(spark: SparkSession, sf: str) -> DataFrame:
-    import uuid
-
     from pyspark.sql import functions as F
 
     from librarian_spark.sources.batch import load_table
@@ -663,14 +698,7 @@ def pipeline_session_agg(spark: SparkSession, sf: str) -> DataFrame:
         with open(ready, "w") as fh:
             fh.write("ok\n")
 
-    _sweep_run_dirs(base, ("out_", "ckpt_"))
-
-    run_id = uuid.uuid4().hex[:8]
-    out = f"{base}/out_{run_id}"
-    # state partitions sized to per-batch volume (same reasoning and knob as
-    # pipeline_stream_join); restored after the drain
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
+    out, ckpt = _run_dirs(base, "out_", "ckpt_")
     stream = (
         spark.readStream.schema("event_id long, ts timestamp, user_id long, value double")
         .option("maxFilesPerTrigger", 3)
@@ -693,18 +721,16 @@ def pipeline_session_agg(spark: SparkSession, sf: str) -> DataFrame:
             (F.col("cents").cast("double") / F.lit(100.0)).alias("session_value"),
         )
     )
-    try:
-        q = (
-            sess.writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", f"{base}/ckpt_{run_id}")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+    _drain(
+        spark,
+        sess.writeStream.format("parquet")
+        .option("path", out)
+        .option("checkpointLocation", ckpt)
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .start,
+        wait=StreamingQuery.awaitTermination,
+    )
     t = spark.read.parquet(out)
     return t.filter(F.col("user_id") >= 0).select(
         "user_id", "session_start", "session_end", "n_events", "session_value"
@@ -728,7 +754,6 @@ def pipeline_session_agg(spark: SparkSession, sf: str) -> DataFrame:
 )
 def pipeline_incremental_snapshot(spark: SparkSession, sf: str) -> DataFrame:
     import shutil
-    import uuid
 
     from pyspark.sql import functions as F
 
@@ -749,10 +774,7 @@ def pipeline_incremental_snapshot(spark: SparkSession, sf: str) -> DataFrame:
         o.filter(F.col("o_orderkey") <= med).write.mode("overwrite").parquet(halves[0])
         o.filter(F.col("o_orderkey") > med).write.mode("overwrite").parquet(halves[1])
 
-    run_id = uuid.uuid4().hex[:8]
-    src_dir = f"{base}/src_{run_id}"
-    out = f"{base}/out_{run_id}"
-    _sweep_run_dirs(base, ("src_", "out_"))
+    src_dir, out = _run_dirs(base, "src_", "out_")
 
     def _cfg() -> str:
         return f"""
@@ -918,8 +940,6 @@ def pipeline_zorder_cluster(spark: SparkSession, sf: str) -> DataFrame:
     "event time passes.",
 )
 def pipeline_stream_join(spark: SparkSession, sf: str) -> DataFrame:
-    import uuid
-
     from pyspark.sql import functions as F
 
     from librarian_spark.sources.batch import load_table
@@ -937,22 +957,14 @@ def pipeline_stream_join(spark: SparkSession, sf: str) -> DataFrame:
             .write.mode("overwrite")
             .parquet(in_dir)
         )
-    _sweep_run_dirs(base, ("out_", "ckpt_"))
+    out, ckpt = _run_dirs(base, "out_", "ckpt_")
 
-    run_id = uuid.uuid4().hex[:8]
-    out = f"{base}/out_{run_id}"
-
-    # Streaming state partitioning is FIXED at the query's first run, and the
-    # per-batch cost of the symmetric-hash join is dominated by state-store
-    # file IO = partitions x batches x 4 stores (left/right x keyed/value).
-    # Size it to the stream's per-batch volume (a few thousand rows here), not
-    # to the session's batch-shuffle width: 8 partitions cuts the state IO 4x
+    # The symmetric-hash join's per-batch cost is dominated by state-store
+    # file IO = partitions x batches x 4 stores (left/right x keyed/value):
+    # the drain width cuts it 4x against the session's batch-shuffle width
     # (measured 14.7s -> see BENCH_DETAIL). On a real high-volume stream this
     # SAME knob goes the other way - state width should match peak per-batch
     # rows, and repartitioning a checkpoint requires a fresh one.
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
     views = _stream_event_side(
         spark, in_dir, "view", "view", watermark="400 days", max_files=2
     )
@@ -967,18 +979,16 @@ def pipeline_stream_join(spark: SparkSession, sf: str) -> DataFrame:
             F.unix_timestamp("purchase_ts") - F.unix_timestamp("view_ts")
         ).cast("long").alias("lag_sec"),
     )
-    try:
-        q = (
-            joined.writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", f"{base}/ckpt_{run_id}")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+    _drain(
+        spark,
+        joined.writeStream.format("parquet")
+        .option("path", out)
+        .option("checkpointLocation", ckpt)
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .start,
+        wait=StreamingQuery.awaitTermination,
+    )
     return spark.read.parquet(out)
 
 
@@ -1006,8 +1016,6 @@ def pipeline_stream_join(spark: SparkSession, sf: str) -> DataFrame:
     "from the target would read and overwrite the same files.",
 )
 def pipeline_partition_backfill(spark: SparkSession, sf: str) -> DataFrame:
-    import uuid
-
     from pyspark.sql import functions as F
 
     from librarian_spark.sources.batch import load_table
@@ -1016,8 +1024,7 @@ def pipeline_partition_backfill(spark: SparkSession, sf: str) -> DataFrame:
     mtime = int(os.path.getmtime(src)) if os.path.exists(src) else 0
     tag = hashlib.md5(f"{sf}:{mtime}:v1".encode()).hexdigest()[:10]
     base = f"{scratch_root()}/librarian_bench_backfill_{tag}"
-    _sweep_run_dirs(base, ("run_",))
-    out = f"{base}/run_{uuid.uuid4().hex[:8]}"
+    [out] = _run_dirs(base, "run_")
 
     ev = load_table(spark, sf, "events").select(
         F.date_trunc("day", F.col("ts")).cast("date").alias("day"),
@@ -1209,7 +1216,6 @@ _SNAPSTREAM_T0 = "2024-01-15 00:00:00"  # handoff point (mid-range of events)
 )
 def pipeline_snapshot_stream(spark: SparkSession, sf: str) -> DataFrame:
     import shutil
-    import uuid
 
     from pyspark.sql import functions as F
 
@@ -1283,12 +1289,10 @@ def pipeline_snapshot_stream(spark: SparkSession, sf: str) -> DataFrame:
         with open(marker, "w") as fh:
             fh.write("ok")
 
-    _sweep_run_dirs(base, ("state_", "ckpt_"))
-
-    run_id = uuid.uuid4().hex[:8]
+    state, ckpt = _run_dirs(base, "state_", "ckpt_")
     cfg = MaterializeConfig(
-        state_dir=f"{base}/state_{run_id}",
-        checkpoint_dir=f"{base}/ckpt_{run_id}",
+        state_dir=state,
+        checkpoint_dir=ckpt,
         key_cols=["user_id"],
         row_ddl="user_id long, value double",
     )
@@ -1297,14 +1301,7 @@ def pipeline_snapshot_stream(spark: SparkSession, sf: str) -> DataFrame:
         .option("maxFilesPerTrigger", 16)
         .text(in_dir)
     )
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")  # per-batch volume
-    try:
-        q = materialize(spark, parse_envelope(stream, "value"), cfg)
-        q.processAllAvailable()
-        q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+    _drain(spark, lambda: materialize(spark, parse_envelope(stream, "value"), cfg))
     return read_state(spark, cfg).select("user_id", F.col("value").alias("last_value"))
 
 
@@ -1335,7 +1332,6 @@ def pipeline_snapshot_stream(spark: SparkSession, sf: str) -> DataFrame:
 )
 def pipeline_cdc_fanout(spark: SparkSession, sf: str) -> DataFrame:
     import shutil
-    import uuid
 
     from pyspark.sql import functions as F
 
@@ -1377,15 +1373,12 @@ def pipeline_cdc_fanout(spark: SparkSession, sf: str) -> DataFrame:
         with open(marker, "w") as fh:
             fh.write("ok")
 
-    _sweep_run_dirs(base, ("out_", "ckpt_"))
-
-    run_id = uuid.uuid4().hex[:8]
-    out = f"{base}/out_{run_id}"
+    out, ckpt = _run_dirs(base, "out_", "ckpt_")
     rep = Replicator(
         spark,
         ReplicateConfig(
-            replicator_id=f"fanout_{run_id}",
-            checkpoint_dir=f"{base}/ckpt_{run_id}",
+            replicator_id=f"fanout_{os.path.basename(ckpt)}",
+            checkpoint_dir=ckpt,
             source_format="files",
             source_path=in_dir,
             source_schema="value string",
@@ -1396,8 +1389,10 @@ def pipeline_cdc_fanout(spark: SparkSession, sf: str) -> DataFrame:
         ),
     )
     rep.start()
-    rep.process_available()
-    rep.stop()
+    try:
+        rep.process_available()
+    finally:
+        rep.stop()
 
     # per-table consumers: partition-pruned scans of their own directory
     def side(tbl: str) -> DataFrame:
@@ -1610,8 +1605,6 @@ def pipeline_manifest_prune(spark: SparkSession, sf: str) -> DataFrame:
     "proves no duplicate and no loss through stream→state→sink.",
 )
 def pipeline_stream_exact_dedup(spark: SparkSession, sf: str) -> DataFrame:
-    import uuid
-
     from pyspark.sql import functions as F
 
     from librarian_spark.sources.batch import load_table
@@ -1621,7 +1614,7 @@ def pipeline_stream_exact_dedup(spark: SparkSession, sf: str) -> DataFrame:
     # the keepalive above keeps base's TTL warm forever, so per-run dirs
     # inside it must be swept here too (a full parquet copy + checkpoint
     # each) — same discipline as pipeline_checkpoint_restart
-    _sweep_run_dirs(base, ("out_", "ckpt_"))
+    out, ckpt = _run_dirs(base, "out_", "ckpt_")
     in_dir = f"{base}/in"
     ev = load_table(spark, sf, "events").select(
         "event_id", "ts", "user_id", "event_type", "value"
@@ -1636,8 +1629,6 @@ def pipeline_stream_exact_dedup(spark: SparkSession, sf: str) -> DataFrame:
         with open(os.path.join(in_dir, "_f2marker"), "w") as fh:
             fh.write("ok")
 
-    run_id = uuid.uuid4().hex[:8]
-    out, ckpt = f"{base}/out_{run_id}", f"{base}/ckpt_{run_id}"
     stream = (
         spark.readStream.schema(
             "event_id long, ts timestamp, user_id long, event_type string, "
@@ -1652,19 +1643,13 @@ def pipeline_stream_exact_dedup(spark: SparkSession, sf: str) -> DataFrame:
     deduped = stream.withWatermark("ts", "365 days").dropDuplicatesWithinWatermark(
         ["event_id"]
     )
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")  # per-BATCH volume
-    try:
-        q = (
-            deduped.writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    _drain(
+        spark,
+        deduped.writeStream.format("parquet")
+        .option("path", out)
+        .option("checkpointLocation", ckpt)
+        .start,
+    )
     return spark.read.parquet(out).select(
         "event_id", "user_id", "event_type", "value"
     )
@@ -1696,7 +1681,6 @@ _VACUUM_KEEP = 2
 )
 def pipeline_vacuum_snapshots(spark: SparkSession, sf: str) -> DataFrame:
     import shutil
-    import uuid
 
     from pyspark.sql import functions as F
 
@@ -1705,8 +1689,7 @@ def pipeline_vacuum_snapshots(spark: SparkSession, sf: str) -> DataFrame:
     base = _cache_base(
         "vacuum", sf, "orders", salt=f"{_VACUUM_GENS}:{_VACUUM_KEEP}"
     )
-    _sweep_run_dirs(base, ("run_",))
-    run = f"{base}/run_{uuid.uuid4().hex[:8]}"  # destroyed below: never shared
+    [run] = _run_dirs(base, "run_")  # destroyed below: never shared
     o = load_table(spark, sf, "orders").select("o_orderkey", "o_totalprice")
     for g in range(1, _VACUUM_GENS + 1):
         o.filter(F.col("o_orderkey") % _VACUUM_GENS == g - 1).write.mode(
@@ -1743,16 +1726,13 @@ def pipeline_vacuum_snapshots(spark: SparkSession, sf: str) -> DataFrame:
     "guarantees observe metrics reflect exactly the committed tasks).",
 )
 def pipeline_observed_write(spark: SparkSession, sf: str) -> DataFrame:
-    import uuid
-
     from pyspark.sql import Observation
     from pyspark.sql import functions as F
 
     from librarian_spark.sources.batch import load_table
 
     base = _cache_base("obswrite", sf, "orders", salt="observe")
-    _sweep_run_dirs(base, ("run_",))
-    out = f"{base}/run_{uuid.uuid4().hex[:8]}"  # observation fires per action:
+    [out] = _run_dirs(base, "run_")  # observation fires per action:
     # the write must actually run, so the sink is run-private, not cached
     o = load_table(spark, sf, "orders").select("o_orderkey", "o_totalprice")
     obs = Observation("write_audit")
@@ -1800,7 +1780,6 @@ def pipeline_observed_write(spark: SparkSession, sf: str) -> DataFrame:
 )
 def pipeline_checkpoint_restart(spark: SparkSession, sf: str) -> DataFrame:
     import time
-    import uuid
 
     from librarian_spark.sources.batch import load_table
 
@@ -1810,8 +1789,6 @@ def pipeline_checkpoint_restart(spark: SparkSession, sf: str) -> DataFrame:
         load_table(spark, sf, "events").select(
             "event_id", "ts", "user_id", "event_type", "value"
         ).repartition(3).write.mode("overwrite").parquet(in_dir)
-
-    _sweep_run_dirs(base, ("out_", "ckpt_"))
 
     def start(out: str, ckpt: str):
         return (
@@ -1843,8 +1820,7 @@ def pipeline_checkpoint_restart(spark: SparkSession, sf: str) -> DataFrame:
     out = ckpt = ""
     c1 = 0
     for _ in range(3):
-        run_id = uuid.uuid4().hex[:8]
-        out, ckpt = f"{base}/out_{run_id}", f"{base}/ckpt_{run_id}"
+        out, ckpt = _run_dirs(base, "out_", "ckpt_")
         q1 = start(out, ckpt)
         deadline = time.time() + 60
         while time.time() < deadline:
@@ -1865,9 +1841,7 @@ def pipeline_checkpoint_restart(spark: SparkSession, sf: str) -> DataFrame:
     # batch count: the restarted source may re-plan the remaining files into
     # fewer triggers than maxFilesPerTrigger suggests (observed under bench
     # load), and row-level completeness is the oracle comparison's job.
-    q2 = start(out, ckpt)
-    q2.processAllAvailable()
-    q2.stop()
+    _drain(spark, lambda: start(out, ckpt))
     if c1 < 3 and committed(ckpt) <= c1:
         raise RuntimeError(
             f"restart resumed nothing after batch {c1} under {ckpt}"
@@ -2038,16 +2012,13 @@ def pipeline_incremental_mv(spark: SparkSession, sf: str) -> DataFrame:
 )
 def pipeline_atomic_multi_sink(spark: SparkSession, sf: str) -> DataFrame:
     import shutil
-    import uuid
 
     from pyspark.sql import functions as F
 
     from librarian_spark.sources.batch import load_table
 
     base = _cache_base("multisink", sf, "orders")
-    _sweep_run_dirs(base, ("run_", ".staging_"))
-    run = f"{base}/run_{uuid.uuid4().hex[:8]}"
-    staging = f"{base}/.staging_{uuid.uuid4().hex[:8]}"  # dot-hidden from Spark
+    run, staging = _run_dirs(base, "run_", ".staging_")  # dot: hidden from Spark
     o = load_table(spark, sf, "orders").select(
         "o_orderstatus",
         "o_orderpriority",
@@ -2122,7 +2093,6 @@ _RLD_PCT = (48, 52)  # delete the middle 4% of the custkey domain (scale-relativ
 def pipeline_row_level_delete(spark: SparkSession, sf: str) -> DataFrame:
     import glob
     import shutil
-    import uuid
 
     from pyspark.sql import functions as F
 
@@ -2131,7 +2101,7 @@ def pipeline_row_level_delete(spark: SparkSession, sf: str) -> DataFrame:
 
     base = _cache_base("rld", sf, "orders", salt="cust16")
     _sweep_run_dirs(scratch_root(), ("librarian_rld_",))
-    _sweep_run_dirs(base, ("run_",))
+    [run] = _run_dirs(base, "run_")
     # clean clustered SOURCE layout (read-only, shared, create-once) —
     # built in a run-private staging dir and published by ONE atomic
     # rename: two concurrent first-runs would both pass a _SUCCESS
@@ -2151,7 +2121,6 @@ def pipeline_row_level_delete(spark: SparkSession, sf: str) -> DataFrame:
         except OSError:  # lost the publish race — use the winner's copy
             shutil.rmtree(stage, ignore_errors=True)
     # run-private working copy — the delete mutates it
-    run = f"{base}/run_{uuid.uuid4().hex[:8]}"
     os.makedirs(run)
     table = f"{run}/orders"
     shutil.copytree(layout_src, table)
@@ -2215,7 +2184,6 @@ def write_audit_publish(spark, df, dest: str, audits) -> str:
     table.
     """
     import shutil
-    import uuid
 
     from librarian_spark.operators.dedup import _point_symlink
 
@@ -2273,16 +2241,13 @@ def write_audit_publish(spark, df, dest: str, audits) -> str:
     "never publishing a bad partition.",
 )
 def pipeline_wap(spark: SparkSession, sf: str) -> DataFrame:
-    import uuid
-
     from pyspark.sql import functions as F
 
     from librarian_spark.sources.batch import load_table
 
     base = _cache_base("wap", sf, "orders", salt="rollup1")
     _sweep_run_dirs(scratch_root(), ("librarian_wap_",))
-    _sweep_run_dirs(base, ("run_",))
-    run = f"{base}/run_{uuid.uuid4().hex[:8]}"
+    [run] = _run_dirs(base, "run_")
     os.makedirs(run)
     src = load_table(spark, sf, "orders")
     rollup = src.groupBy("o_custkey").agg(
@@ -2345,8 +2310,6 @@ def pipeline_wap(spark: SparkSession, sf: str) -> DataFrame:
     "this repo).",
 )
 def pipeline_stateful_totals(spark: SparkSession, sf: str) -> DataFrame:
-    import uuid
-
     from pyspark.sql import functions as F
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
@@ -2372,10 +2335,7 @@ def pipeline_stateful_totals(spark: SparkSession, sf: str) -> DataFrame:
             {"user_id": [key[0]], "total_cents": [total], "n": [n]}
         )
 
-    run_id = uuid.uuid4().hex[:8]
-    name = f"statetot_{run_id}"
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
+    name = f"statetot_{uuid.uuid4().hex[:8]}"
     stream = (
         spark.readStream.schema("event_id long, user_id long, cents long")
         .option("maxFilesPerTrigger", 3)
@@ -2388,17 +2348,15 @@ def pipeline_stateful_totals(spark: SparkSession, sf: str) -> DataFrame:
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    try:
-        q = (
-            totals.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+    _drain(
+        spark,
+        totals.writeStream.format("memory")
+        .queryName(name)
+        .outputMode("update")
+        .trigger(availableNow=True)
+        .start,
+        wait=StreamingQuery.awaitTermination,
+    )
     emitted = spark.table(name)
     # the run's answer: per user, the emission with the largest running n
     # (monotone — emissions only grow), i.e. the final state
@@ -2459,7 +2417,6 @@ def _bloom_m(rows_per_file: int) -> int:
 def pipeline_bloom_index(spark: SparkSession, sf: str) -> DataFrame:
     import json
     import shutil
-    import uuid
 
     from pyspark.sql import functions as F
 
@@ -2589,8 +2546,6 @@ def pipeline_bloom_index(spark: SparkSession, sf: str) -> DataFrame:
     "is one marker rename.",
 )
 def pipeline_idempotent_sink(spark: SparkSession, sf: str) -> DataFrame:
-    import uuid
-
     from pyspark.sql import functions as F  # noqa: F401 — parity with siblings
 
     from librarian_spark.sources.batch import load_table
@@ -2606,9 +2561,7 @@ def pipeline_idempotent_sink(spark: SparkSession, sf: str) -> DataFrame:
             .parquet(in_dir)
         )
 
-    _sweep_run_dirs(base, ("out_", "ckpt_"))
-    run_id = uuid.uuid4().hex[:8]
-    out = f"{base}/out_{run_id}"
+    out, ckpt = _run_dirs(base, "out_", "ckpt_")
     data_dir = f"{out}/data"
     commits_dir = f"{out}/_commits"
     os.makedirs(commits_dir, exist_ok=True)
@@ -2635,13 +2588,14 @@ def pipeline_idempotent_sink(spark: SparkSession, sf: str) -> DataFrame:
         .option("maxFilesPerTrigger", 1)
         .parquet(in_dir)
     )
-    q = (
+    # stateless foreachBatch drain: plans its batches at the caller's width
+    _drain(
+        spark,
         stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", f"{base}/ckpt_{run_id}")
-        .start()
+        .option("checkpointLocation", ckpt)
+        .start,
+        width=None,
     )
-    q.processAllAvailable()
-    q.stop()
 
     def _batch0_files() -> dict[str, tuple[int, int]]:
         d = f"{data_dir}/batch=0"
@@ -2714,7 +2668,6 @@ _LATE_DELAY = "5 days"  # watermark delay; span is ~30 days at every SF
 )
 def pipeline_late_data_metrics(spark: SparkSession, sf: str) -> DataFrame:
     import datetime as dt
-    import uuid
 
     from pyspark.sql import functions as F
 
@@ -2722,7 +2675,7 @@ def pipeline_late_data_metrics(spark: SparkSession, sf: str) -> DataFrame:
 
     base = _cache_base("latemetrics", sf, "events", salt="v2")
     _sweep_run_dirs(scratch_root(), ("librarian_latemetrics_",))
-    _sweep_run_dirs(base, ("out_", "ckpt_"))
+    out, ckpt, stage = _run_dirs(base, "out_", "ckpt_", "in_stage_")
     in_dir = f"{base}/in"
     ev = (
         load_table(spark, sf, "events")
@@ -2754,9 +2707,7 @@ def pipeline_late_data_metrics(spark: SparkSession, sf: str) -> DataFrame:
         # invocation's overwrite corrupt the cache mid-build; rename
         # preserves the per-file mtime order the source relies on).
         import shutil
-        import uuid as _uuid
 
-        stage = f"{base}/in_stage_{_uuid.uuid4().hex[:8]}"
         um = F.unix_micros("ts")
         ev.filter((um >= cut) & (um < hi)).coalesce(1).write.mode(
             "overwrite"
@@ -2774,8 +2725,6 @@ def pipeline_late_data_metrics(spark: SparkSession, sf: str) -> DataFrame:
         except OSError:  # a concurrent build won the publish — use theirs
             shutil.rmtree(stage, ignore_errors=True)
 
-    run_id = uuid.uuid4().hex[:8]
-    out, ckpt = f"{base}/out_{run_id}", f"{base}/ckpt_{run_id}"
     stream = (
         spark.readStream.schema("event_id long, ts timestamp")
         .option("maxFilesPerTrigger", 1)
@@ -2786,21 +2735,15 @@ def pipeline_late_data_metrics(spark: SparkSession, sf: str) -> DataFrame:
         .groupBy(F.window("ts", "1 day").alias("w"))
         .agg(F.count(F.lit(1)).alias("n_events"))
     )
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")  # per-BATCH volume
-    try:
-        q = (
-            agg.writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .start()
-        )
-        q.processAllAvailable()
-        total_in = sum(p.numInputRows for p in q.recentProgress)
-        q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    q = _drain(
+        spark,
+        agg.writeStream.format("parquet")
+        .option("path", out)
+        .option("checkpointLocation", ckpt)
+        .outputMode("append")
+        .start,
+    )
+    total_in = sum(p.numInputRows for p in q.recentProgress)
     sink_total = (
         spark.read.parquet(out).agg(F.sum("n_events")).collect()[0][0] or 0
     )
@@ -2836,7 +2779,6 @@ def pipeline_late_data_metrics(spark: SparkSession, sf: str) -> DataFrame:
 )
 def pipeline_orc_snapshot(spark: SparkSession, sf: str) -> DataFrame:
     import shutil
-    import uuid
 
     from librarian_spark.config import load_config_str
     from librarian_spark.snapshot import run_snapshot_config
@@ -2844,12 +2786,11 @@ def pipeline_orc_snapshot(spark: SparkSession, sf: str) -> DataFrame:
 
     base = _cache_base("orcsnap", sf, "orders")
     _sweep_run_dirs(scratch_root(), ("librarian_orcsnap_",))
-    _sweep_run_dirs(base, ("orc_stage_", "out_"))
+    stage, out = _run_dirs(base, "orc_stage_", "out_")
     orc_dir = f"{base}/orc"
     if not os.path.isdir(orc_dir):
         # build-in-stage + atomic rename: two concurrent cold starts must
         # never overwrite the same shared cache dir mid-write
-        stage = f"{base}/orc_stage_{uuid.uuid4().hex[:8]}"
         (
             load_table(spark, sf, "orders")
             .select("o_orderkey", "o_orderstatus", "o_totalprice", "o_orderdate")
@@ -2860,7 +2801,6 @@ def pipeline_orc_snapshot(spark: SparkSession, sf: str) -> DataFrame:
             os.rename(stage, orc_dir)
         except OSError:  # concurrent build won the publish — use theirs
             shutil.rmtree(stage, ignore_errors=True)
-    out = f"{base}/out_{uuid.uuid4().hex[:8]}"
     cfg = load_config_str(
         f"""
 name: bench-orc-snapshot
@@ -2917,7 +2857,6 @@ archiver:
 )
 def pipeline_stream_outer_join(spark: SparkSession, sf: str) -> DataFrame:
     import shutil
-    import uuid
 
     from pyspark.sql import functions as F
 
@@ -2927,7 +2866,13 @@ def pipeline_stream_outer_join(spark: SparkSession, sf: str) -> DataFrame:
 
     base = _cache_base("soutjoin", sf, "events", salt="v2")
     _sweep_run_dirs(scratch_root(), ("librarian_soutjoin_",))
-    _sweep_run_dirs(base, ("out_", "ckpt_", "in_", "slices_stage_"))
+    # the input dir is RUN-PRIVATE (hardlinks into the shared slice cache):
+    # the nudge loop appends sentinel files mid-run, which must never race
+    # another run; links preserve slice mtimes, so sentinel files written
+    # now always sort AFTER them in the source's mtime order
+    in_dir, out, ckpt, stage = _run_dirs(
+        base, "in_", "out_", "ckpt_", "slices_stage_"
+    )
     ev = (
         load_table(spark, sf, "events")
         .filter(F.col("ts").isNotNull() & F.col("event_type").isin("view", "purchase"))
@@ -2944,7 +2889,6 @@ def pipeline_stream_outer_join(spark: SparkSession, sf: str) -> DataFrame:
             F.max(F.unix_micros("ts")).alias("hi"),
             F.sum((F.col("event_type") == "view").cast("long")).alias("nv"),
         ).collect()[0]
-        stage = f"{base}/slices_stage_{uuid.uuid4().hex[:8]}"
         um = F.unix_micros("ts")
         mid = bounds["lo"] + (bounds["hi"] - bounds["lo"]) // 2
         # two DISJOINT ascending time slices — one micro-batch each; slice 2
@@ -2961,16 +2905,6 @@ def pipeline_stream_outer_join(spark: SparkSession, sf: str) -> DataFrame:
         meta = json.load(fh)
     hi, n_views = meta["hi"], meta["n_views"]
 
-    run_id = uuid.uuid4().hex[:8]
-    # the input dir is RUN-PRIVATE (hardlinks into the shared slice cache):
-    # the nudge loop appends sentinel files mid-run, which must never race
-    # another run; links preserve slice mtimes, so sentinel files written
-    # now always sort AFTER them in the source's mtime order
-    in_dir, out, ckpt = (
-        f"{base}/in_{run_id}",
-        f"{base}/out_{run_id}",
-        f"{base}/ckpt_{run_id}",
-    )
     os.makedirs(in_dir, exist_ok=True)
     for fn in os.listdir(slices_dir):
         if fn.endswith(".parquet") and not fn.startswith("."):
@@ -3008,37 +2942,30 @@ def pipeline_stream_outer_join(spark: SparkSession, sf: str) -> DataFrame:
     _sentinel(40)
     _sentinel(80)
 
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")  # per-BATCH volume
-    try:
-        # Sentinel rows must flow THROUGH the stream: any sentinel-excluding
-        # filter here gets pushed below the watermark operator all the way to
-        # the parquet scan (Catalyst pushes deterministic filters through
-        # stream-stream joins and EventTimeWatermark), so the watermark would
-        # never see the sentinel's event time and state would never drain —
-        # observed as per-source offsets advancing with numInputRows=0.
-        # Sentinels are excluded at the final BATCH read instead.
-        views = _stream_event_side(
-            spark, in_dir, "view", "view", watermark="30 minutes", max_files=1
-        )
-        buys = _stream_event_side(
-            spark, in_dir, "purchase", "purchase",
-            watermark="30 minutes", max_files=1,
-        )
-        joined = _user_window_join(
-            views, buys, "view", "purchase", 2, "leftOuter"
-        ).select(
-            F.col("view_id").cast("long").alias("view_id"),
-            F.col("purchase_id").cast("long").alias("purchase_id"),
-        )
-        q = (
-            joined.writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .start()
-        )
-        emitted = 0
+    # Sentinel rows must flow THROUGH the stream: any sentinel-excluding
+    # filter here gets pushed below the watermark operator all the way to
+    # the parquet scan (Catalyst pushes deterministic filters through
+    # stream-stream joins and EventTimeWatermark), so the watermark would
+    # never see the sentinel's event time and state would never drain —
+    # observed as per-source offsets advancing with numInputRows=0.
+    # Sentinels are excluded at the final BATCH read instead.
+    views = _stream_event_side(
+        spark, in_dir, "view", "view", watermark="30 minutes", max_files=1
+    )
+    buys = _stream_event_side(
+        spark, in_dir, "purchase", "purchase",
+        watermark="30 minutes", max_files=1,
+    )
+    joined = _user_window_join(
+        views, buys, "view", "purchase", 2, "leftOuter"
+    ).select(
+        F.col("view_id").cast("long").alias("view_id"),
+        F.col("purchase_id").cast("long").alias("purchase_id"),
+    )
+    emitted = 0
+
+    def drain_until_emitted(q: StreamingQuery) -> None:
+        nonlocal emitted
         for attempt in range(4):
             q.processAllAvailable()
             emitted = (
@@ -3050,12 +2977,20 @@ def pipeline_stream_outer_join(spark: SparkSession, sf: str) -> DataFrame:
                 .count()
             )
             if emitted >= n_views:
-                break
+                return
             # eviction lags one batch — nudge with a further sentinel pair
             _sentinel(120 + 40 * attempt)
-        q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+
+    _drain(
+        spark,
+        joined.writeStream.format("parquet")
+        .option("path", out)
+        .option("checkpointLocation", ckpt)
+        .outputMode("append")
+        .start,
+        width=4,  # per-BATCH volume of the two one-file slices
+        wait=drain_until_emitted,
+    )
     if emitted != n_views:
         raise RuntimeError(
             f"outer join did not drain: {emitted} of {n_views} views emitted"
@@ -3243,8 +3178,6 @@ _STK_K = 5
     "both engines, so the emitted board is fully deterministic.",
 )
 def pipeline_stream_topk(spark: SparkSession, sf: str) -> DataFrame:
-    import uuid
-
     from pyspark.sql import functions as F
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
@@ -3283,10 +3216,7 @@ def pipeline_stream_topk(spark: SparkSession, sf: str) -> DataFrame:
             }
         )
 
-    run_id = uuid.uuid4().hex[:8]
-    name = f"streamtopk_{run_id}"
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
+    name = f"streamtopk_{uuid.uuid4().hex[:8]}"
     stream = (
         spark.readStream.schema("event_id long, event_type string, user_id long")
         .option("maxFilesPerTrigger", 3)
@@ -3300,17 +3230,15 @@ def pipeline_stream_topk(spark: SparkSession, sf: str) -> DataFrame:
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    try:
-        q = (
-            boards.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+    _drain(
+        spark,
+        boards.writeStream.format("memory")
+        .queryName(name)
+        .outputMode("update")
+        .trigger(availableNow=True)
+        .start,
+        wait=StreamingQuery.awaitTermination,
+    )
     # pin the (tiny) emissions off the memory sink, then drop the view —
     # otherwise repeated runs in a long-lived session accumulate one
     # in-memory table per invocation
@@ -3363,8 +3291,6 @@ def pipeline_stream_topk(spark: SparkSession, sf: str) -> DataFrame:
     "read-side enrichment.",
 )
 def pipeline_stream_enrich(spark: SparkSession, sf: str) -> DataFrame:
-    import uuid
-
     from pyspark.sql import functions as F
 
     from librarian_spark.sources.batch import load_table
@@ -3393,9 +3319,7 @@ def pipeline_stream_enrich(spark: SparkSession, sf: str) -> DataFrame:
     # event-grain output goes to a PARQUET sink under a swept run dir (the
     # stream_exact_dedup discipline) — a memory sink would pin the full
     # enriched event set in driver heap once per invocation
-    _sweep_run_dirs(base, ("out_", "ckpt_"))
-    run_id = uuid.uuid4().hex[:8]
-    out, ckpt = f"{base}/out_{run_id}", f"{base}/ckpt_{run_id}"
+    out, ckpt = _run_dirs(base, "out_", "ckpt_")
     stream = (
         spark.readStream.schema(
             "event_id long, user_id long, event_type string, value double"
@@ -3411,20 +3335,16 @@ def pipeline_stream_enrich(spark: SparkSession, sf: str) -> DataFrame:
         "nation",
         F.round(F.col("value") * 100).cast("long").alias("value_cents"),
     )
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            enriched.writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    _drain(
+        spark,
+        enriched.writeStream.format("parquet")
+        .option("path", out)
+        .option("checkpointLocation", ckpt)
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .start,
+        wait=StreamingQuery.awaitTermination,
+    )
     return spark.read.parquet(out).select(
         "event_id", "user_id", "event_type", "segment", "nation", "value_cents"
     )
@@ -3534,7 +3454,6 @@ _SCDC_SLICES = 5  # micro-batches, sliced on ms boundaries (commit order)
 )
 def pipeline_stream_cdc_apply(spark: SparkSession, sf: str) -> DataFrame:
     import shutil
-    import uuid
 
     from pyspark.sql import functions as F
 
@@ -3637,11 +3556,10 @@ def pipeline_stream_cdc_apply(spark: SparkSession, sf: str) -> DataFrame:
             fh.write("")
 
     _sweep_run_dirs(scratch_root(), ("librarian_scdcapply_",))
-    _sweep_run_dirs(base, ("state_", "ckpt_"))
-    run_id = uuid.uuid4().hex[:8]
+    state, ckpt = _run_dirs(base, "state_", "ckpt_")
     cfg = MaterializeConfig(
-        state_dir=f"{base}/state_{run_id}",
-        checkpoint_dir=f"{base}/ckpt_{run_id}",
+        state_dir=state,
+        checkpoint_dir=ckpt,
         key_cols=["user_id"],
         row_ddl="user_id long, event_id long, value double",
     )
@@ -3650,14 +3568,7 @@ def pipeline_stream_cdc_apply(spark: SparkSession, sf: str) -> DataFrame:
         .option("maxFilesPerTrigger", 1)
         .text(in_dir)
     )
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = materialize(spark, parse_envelope(stream, "value"), cfg)
-        q.processAllAvailable()
-        q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    _drain(spark, lambda: materialize(spark, parse_envelope(stream, "value"), cfg))
     return read_state(spark, cfg).select(
         "user_id",
         F.col("event_id").alias("last_event_id"),
@@ -3698,15 +3609,13 @@ _DLQ_MOD = 7  # event_id % 7 == 3 rows are corrupted into invalid JSON
     "batch, so state is O(1) and the shape holds at any rate.",
 )
 def pipeline_dlq(spark: SparkSession, sf: str) -> DataFrame:
-    import uuid
-
     from pyspark.sql import functions as F
 
     from librarian_spark.sources.batch import load_table
 
     base = _cache_base("dlq", sf, "events", salt=f"v1:{_DLQ_MOD}")
     _sweep_run_dirs(scratch_root(), ("librarian_dlq_",))
-    _sweep_run_dirs(base, ("out_", "dlq_", "ckpt_"))
+    out, dlq, ckpt = _run_dirs(base, "out_", "dlq_", "ckpt_")
     in_dir = f"{base}/in"
     if not os.path.exists(os.path.join(in_dir, "_READY")):
         ev = load_table(spark, sf, "events").select(
@@ -3726,12 +3635,6 @@ def pipeline_dlq(spark: SparkSession, sf: str) -> DataFrame:
         with open(os.path.join(in_dir, "_READY"), "w") as fh:
             fh.write("")
 
-    run_id = uuid.uuid4().hex[:8]
-    out, dlq, ckpt = (
-        f"{base}/out_{run_id}",
-        f"{base}/dlq_{run_id}",
-        f"{base}/ckpt_{run_id}",
-    )
     # PERMISSIVE from_json yields an all-NULL struct (not a NULL struct) on
     # invalid JSON — the corrupt-record column is the idiomatic malformed
     # detector: non-null exactly when the payload failed to parse
@@ -3792,18 +3695,12 @@ def pipeline_dlq(spark: SparkSession, sf: str) -> DataFrame:
         finally:
             parsed.unpersist()
 
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            stream.writeStream.foreachBatch(route)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    _drain(
+        spark,
+        stream.writeStream.foreachBatch(route)
+        .option("checkpointLocation", ckpt)
+        .start,
+    )
     return spark.read.parquet(out).select(
         "event_id", "user_id", F.col("value").cast("double").alias("value")
     )  # batch_id partition col dropped by the projection
@@ -3816,9 +3713,6 @@ def pipeline_dlq(spark: SparkSession, sf: str) -> DataFrame:
 _NDG_BANDS = 8  # LSH bands
 _NDG_RPB = 4  # minhash rows per band -> catches jaccard >~ 0.5 per band
 _NDG_K = _NDG_BANDS * _NDG_RPB
-# merge-shuffle width for the neardup-gate drain (0 = full parallelism);
-# round-12 A/B switch — see the conf comment in neardup_gate_stream
-_NDG_MERGE_WIDTH = 8
 _NDG_P = (1 << 31) - 1  # Mersenne prime of the affine family
 _NDG_FILES = 4  # arrival micro-batches (doc_id-ordered ranges)
 
@@ -4073,7 +3967,7 @@ def neardup_gate_stream(
         )
         prev = _latest_registry_version(reg_root, int(batch_id))
         if prev is not None:
-            reg = spark.read.parquet(prev)
+            reg = bdf.sparkSession.read.parquet(prev)
             merged = batch_min.join(reg, ["band", "sig"], "left").select(
                 "band",
                 "sig",
@@ -4151,27 +4045,18 @@ def neardup_gate_stream(
         .option("maxFilesPerTrigger", 1)
         .parquet(in_dir)
     )
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
     # Two widths on purpose: the md5-shingle SIGNATURE pass is per-row
     # Python compute and keeps the explicit repartition(par) at full
     # parallelism, but the SHUFFLES behind it (bucket minima, registry
-    # merge, verdict join) carry only ~batch x bands rows — width 8 is the
-    # measured per-batch-volume setting every other drain here uses
-    # (32-wide merge shuffles burn ~2 x 32 task slots per micro-batch on
-    # few-thousand-row frames).
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(_NDG_MERGE_WIDTH or par)
+    # merge, verdict join) carry only ~batch x bands rows and run at the
+    # drain width (32-wide merge shuffles burn ~2 x 32 task slots per
+    # micro-batch on few-thousand-row frames).
+    _drain(
+        spark,
+        stream.writeStream.foreachBatch(process)
+        .option("checkpointLocation", ckpt)
+        .start,
     )
-    try:
-        q = (
-            stream.writeStream.foreachBatch(process)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
 
 
 @query(
@@ -4206,13 +4091,11 @@ def neardup_gate_stream(
     "drop and no false keep through stream->registry->verdict->sink.",
 )
 def pipeline_stream_neardup_gate(spark: SparkSession, sf: str) -> DataFrame:
-    import uuid
-
     from librarian_spark.sources.batch import load_table
 
     base = _cache_base("ndgate", sf, "documents", salt=f"{_NDG_K}:{_NDG_FILES}")
     _sweep_run_dirs(scratch_root(), ("librarian_ndgate_",))
-    _sweep_run_dirs(base, ("out_", "ckpt_"))
+    out, ckpt = _run_dirs(base, "out_", "ckpt_")
     in_dir = f"{base}/in"
     _stage_id_ranges(
         spark,
@@ -4223,9 +4106,6 @@ def pipeline_stream_neardup_gate(spark: SparkSession, sf: str) -> DataFrame:
         "doc_id",
         _NDG_FILES,
     )
-
-    run_id = uuid.uuid4().hex[:8]
-    out, ckpt = f"{base}/out_{run_id}", f"{base}/ckpt_{run_id}"
     neardup_gate_stream(spark, in_dir, out, ckpt)
     return spark.read.parquet(out).select("doc_id", "lang", "source")
 
@@ -4372,19 +4252,13 @@ def stream_quantile_sketch(
     def emit(bdf, _bid):
         bdf.write.mode("append").parquet(out)
 
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")  # per-BATCH volume
-    try:
-        q = (
-            sketches.writeStream.foreachBatch(emit)
-            .outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    _drain(
+        spark,
+        sketches.writeStream.foreachBatch(emit)
+        .outputMode("update")
+        .option("checkpointLocation", ckpt)
+        .start,
+    )
 
 
 @query(
@@ -4444,15 +4318,13 @@ def stream_quantile_sketch(
     "state keys).",
 )
 def pipeline_stream_quantile_sketch(spark: SparkSession, sf: str) -> DataFrame:
-    import uuid
-
     from pyspark.sql import functions as F
 
     from librarian_spark.sources.batch import load_table
 
     base = _cache_base("sqsk", sf, "events", salt=f"{_SQS_K}:{_SQS_FILES}")
     _sweep_run_dirs(scratch_root(), ("librarian_sqsk_",))
-    _sweep_run_dirs(base, ("out_", "ckpt_"))
+    out, ckpt = _run_dirs(base, "out_", "ckpt_")
     in_dir = f"{base}/in"
     _stage_id_ranges(
         spark,
@@ -4463,9 +4335,6 @@ def pipeline_stream_quantile_sketch(spark: SparkSession, sf: str) -> DataFrame:
         "event_id",
         _SQS_FILES,
     )
-
-    run_id = uuid.uuid4().hex[:8]
-    out, ckpt = f"{base}/out_{run_id}", f"{base}/ckpt_{run_id}"
     stream_quantile_sketch(spark, in_dir, out, ckpt)
     final = (
         spark.read.parquet(out)
@@ -4512,7 +4381,9 @@ def stream_domain_cap(
         prev = _latest_registry_version(out_reg, int(batch_id))
         if prev is not None:
             batch = batch.unionByName(
-                spark.read.parquet(prev).select("doc_id", "source", "lang", "hv")
+                bdf.sparkSession.read.parquet(prev).select(
+                    "doc_id", "source", "lang", "hv"
+                )
             )
         kept = two_level_bottom_k(
             batch, ["source"], n, salts, ("hv", "doc_id"), keep_rank=True
@@ -4522,7 +4393,8 @@ def stream_domain_cap(
         ).parquet(f"{out_reg}/v={int(batch_id)}")
         _prune_registry_versions(out_reg)
 
-    q = (
+    _drain(
+        spark,
         spark.readStream.schema(
             "doc_id long, text string, lang string, source string"
         )
@@ -4530,10 +4402,8 @@ def stream_domain_cap(
         .parquet(in_dir)
         .writeStream.foreachBatch(process)
         .option("checkpointLocation", ckpt)
-        .start()
+        .start,
     )
-    q.processAllAvailable()
-    q.stop()
 
 
 def _sdc_cap_oracle() -> str:
@@ -4572,8 +4442,6 @@ def _sdc_cap_oracle() -> str:
     "registry version read back.",
 )
 def pipeline_stream_domain_cap(spark: SparkSession, sf: str) -> DataFrame:
-    import uuid
-
     from pyspark.sql import functions as F
 
     from librarian_spark.operators.text import _CAP_N, _CAP_SALTS
@@ -4581,7 +4449,7 @@ def pipeline_stream_domain_cap(spark: SparkSession, sf: str) -> DataFrame:
 
     base = _cache_base("sdcap", sf, "documents", salt=f"{_CAP_N}:{_SDC_FILES}")
     _sweep_run_dirs(scratch_root(), ("librarian_sdcap_",))
-    _sweep_run_dirs(base, ("reg_", "ckpt_"))
+    reg, ckpt = _run_dirs(base, "reg_", "ckpt_")
     in_dir = f"{base}/in"
     _stage_id_ranges(
         spark,
@@ -4593,14 +4461,7 @@ def pipeline_stream_domain_cap(spark: SparkSession, sf: str) -> DataFrame:
         _SDC_FILES,
     )
 
-    run_id = uuid.uuid4().hex[:8]
-    reg, ckpt = f"{base}/reg_{run_id}", f"{base}/ckpt_{run_id}"
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")  # per-BATCH volume
-    try:
-        stream_domain_cap(spark, in_dir, reg, ckpt, _CAP_N, _CAP_SALTS)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    stream_domain_cap(spark, in_dir, reg, ckpt, _CAP_N, _CAP_SALTS)
     versions = sorted(
         int(d.split("=", 1)[1])
         for d in os.listdir(reg)

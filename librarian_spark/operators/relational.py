@@ -7155,9 +7155,6 @@ def graph_clustering_coeff(spark: SparkSession, sf: str) -> DataFrame:
 
 _KMV_K = 64
 _KMV_SALTS = 256  # first-level prune fan; bounds the final top-k input
-# round-12 A/B switch: pair-width exchange pin on the q111/q112 sketch DAG
-# (see the merged comment in q111_kmv_set_ops)
-_KMV_PAIR_PIN = True
 
 # 32-bit uniform hash both engines compute identically: first 8 hex chars of
 # md5(key-as-string) — the hash_bucket/o_hash_bucket idiom widened to 32 bits
@@ -7777,10 +7774,9 @@ def q111_kmv_set_ops(spark: SparkSession, sf: str) -> DataFrame:
         pairs.select("ta", "tb", F.explode(F.array("ta", "tb")).alias("t"))
         .join(su, "t")
         .select("ta", "tb", "hv")
+        .repartition(n_pairs, "ta", "tb")
+        .distinct()
     )
-    if _KMV_PAIR_PIN:
-        merged = merged.repartition(n_pairs, "ta", "tb")
-    merged = merged.distinct()
     wu = W.partitionBy("ta", "tb").orderBy("hv")
     uk = (
         merged.withColumn("rn", F.row_number().over(wu))
@@ -7790,12 +7786,15 @@ def q111_kmv_set_ops(spark: SparkSession, sf: str) -> DataFrame:
     )
     sa = sk.select(F.col("event_type").alias("ta"), "hv")
     sb = sk.select(F.col("event_type").alias("tb"), "hv")
-    common = pairs.join(sa, "ta").join(sb, ["tb", "hv"]).select("ta", "tb", "hv")
-    if _KMV_PAIR_PIN:
-        # co-partition with uk's explicit (ta, tb) width: without this the
-        # left join below re-exchanges uk back to cluster width (observed
-        # in the r12 plan pair) and the tiny sketch DAG fans out again
-        common = common.repartition(n_pairs, "ta", "tb")
+    # co-partition with uk's explicit (ta, tb) width: without this the left
+    # join below re-exchanges uk back to cluster width (observed in the r12
+    # plan pair) and the tiny sketch DAG fans out again
+    common = (
+        pairs.join(sa, "ta")
+        .join(sb, ["tb", "hv"])
+        .select("ta", "tb", "hv")
+        .repartition(n_pairs, "ta", "tb")
+    )
     cc = (
         uk.join(common, ["ta", "tb"], "left")
         .groupBy("ta", "tb", "ck", "theta")
@@ -7977,10 +7976,9 @@ def q112_theta_anotb(spark: SparkSession, sf: str) -> DataFrame:
         pairs.select("ta", "tb", F.explode(F.array("ta", "tb")).alias("t"))
         .join(su, "t")
         .select("ta", "tb", "hv")
+        .repartition(n_pairs, "ta", "tb")
+        .distinct()
     )
-    if _KMV_PAIR_PIN:
-        merged = merged.repartition(n_pairs, "ta", "tb")
-    merged = merged.distinct()
     wu = W.partitionBy("ta", "tb").orderBy("hv")
     uk = (
         merged.withColumn("rn", F.row_number().over(wu))
@@ -8330,15 +8328,6 @@ def graph_assortativity(spark: SparkSession, sf: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 _SQR_K = 64  # sample size per group; the mergeable-sample budget
-# Round-12 measured trade, kept as a switch: the exact percentile side as
-# ONE rollup pass (True) halves the corpus scans — the right shape when
-# the orders scan dominates (100 TB) — but the grouping-sets Expand
-# doubles the rows entering the sort-based percentile aggregate, and at
-# sf0.1 that codegen/agg cost outweighs the saved scan: interleaved A/B
-# (4 runs/arm, twice) read the two-aggregation form 0.83-0.92x of the
-# rollup form. Local default stays False (two aggregations); flip under a
-# scan-bound deployment profile.
-_SQR_ROLLUP_EXACT = False
 _SQR_SALTS = 256  # first-level prune fan, same two-level bottom-k as KMV
 
 _SQR_H_SPARK = (
@@ -8511,30 +8500,18 @@ def q113_sample_quantile_rollup(spark: SparkSession, sf: str) -> DataFrame:
     est_a = rank_pick(msk, [])
     pd50 = "percentile_disc(0.5) WITHIN GROUP (ORDER BY vc)"
     pd75 = "percentile_disc(0.75) WITHIN GROUP (ORDER BY vc)"
-    if _SQR_ROLLUP_EXACT:
-        # ONE rollup pass computes both exact levels (per-priority + global)
-        # instead of two separate aggregations — one orders scan and one
-        # shuffle instead of two of each (guide §2.4: the exact side is the
-        # only corpus-scale work in this query; grouping-sets expansion
-        # doubles the narrow (priority, vc) shuffle rows, far cheaper than a
-        # second scan at any scale). F.grouping() splits the levels exactly;
-        # o_orderpriority is non-null so no level conflation is possible.
-        ex = b.rollup("o_orderpriority").agg(
-            F.expr(pd50).cast("long").alias("p50_ex"),
-            F.expr(pd75).cast("long").alias("p75_ex"),
-            F.grouping("o_orderpriority").cast("int").alias("_lvl"),
-        )
-        ex_g = ex.filter(F.col("_lvl") == 0).drop("_lvl")
-        ex_a = ex.filter(F.col("_lvl") == 1).drop("_lvl", "o_orderpriority")
-    else:
-        ex_g = b.groupBy("o_orderpriority").agg(
-            F.expr(pd50).cast("long").alias("p50_ex"),
-            F.expr(pd75).cast("long").alias("p75_ex"),
-        )
-        ex_a = b.agg(
-            F.expr(pd50).cast("long").alias("p50_ex"),
-            F.expr(pd75).cast("long").alias("p75_ex"),
-        )
+    # Two exact aggregations, not one rollup pass: a rollup halves the
+    # corpus scans, but its grouping-sets Expand doubles the rows entering
+    # the sort-based percentile aggregate, and the round-12 interleaved A/B
+    # read the rollup 0.83-0.92x as fast as this form (OPTIMIZATION_r12.md).
+    ex_g = b.groupBy("o_orderpriority").agg(
+        F.expr(pd50).cast("long").alias("p50_ex"),
+        F.expr(pd75).cast("long").alias("p75_ex"),
+    )
+    ex_a = b.agg(
+        F.expr(pd50).cast("long").alias("p50_ex"),
+        F.expr(pd75).cast("long").alias("p75_ex"),
+    )
 
     def out(est, ex, on):
         # 1-row x 1-row combine WITHOUT a join: a crossJoin (or an equi-join

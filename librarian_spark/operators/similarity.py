@@ -916,9 +916,6 @@ def sim_ivf_incremental_add(spark: SparkSession, sf: str) -> DataFrame:
 _KM_K = 8
 _KM_ITERS = 4
 _KM_SCALE = 1_000_000  # micro-units (the q56/sim_embedding_drift discipline)
-# Round-12 lazy-vs-eager adjudication switch for the kmeans scaled-frame
-# checkpoint (flipped per arm by scripts/opt_ab.py via OPT_PY_B)
-_KM_EAGER_CKPT = False
 _KM_DIM = 64
 
 
@@ -1090,10 +1087,9 @@ def sim_kmeans_clusters(spark: SparkSession, sf: str) -> DataFrame:
     cids = [int(r.vec_id) for r in init]
     k_eff = len(cents)
     # fan_out: single-row-group testdata parquet can't split; localCheckpoint:
-    # ITERS+1 passes reuse the scaled frame without re-planning.
-    # _KM_EAGER_CKPT is the round-12 lazy-vs-eager adjudication switch
-    # (the driver measured 0.869x after the round-11 lazy conversion).
-    e = fan_out(e).localCheckpoint(eager=_KM_EAGER_CKPT)
+    # ITERS+1 passes reuse the scaled frame without re-planning. Lazy: the
+    # round-12 eager arm measured no better (OPTIMIZATION_r12.md).
+    e = fan_out(e).localCheckpoint(eager=False)
     sc = spark.sparkContext
     for _ in range(_KM_ITERS):
         bc = sc.broadcast((cids, cents))

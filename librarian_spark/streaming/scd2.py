@@ -202,9 +202,11 @@ def scd2_materialize(
     """Start SCD2 materialization over a PARSED envelope stream (the output
     of :func:`librarian_spark.streaming.envelope.parse_envelope`)."""
     os.makedirs(cfg.state_dir, exist_ok=True)
+    # each batch plans on its OWN session — the one the query cloned at
+    # start, so the batch keeps the width the query started with
     writer = (
         envelope_stream.writeStream.foreachBatch(
-            lambda bdf, bid: _apply_batch(spark, cfg, bdf, bid)
+            lambda bdf, bid: _apply_batch(bdf.sparkSession, cfg, bdf, bid)
         )
         .option("checkpointLocation", cfg.checkpoint_dir)
         .outputMode("update")

@@ -12,10 +12,14 @@ Arm B = A plus OPT_CONF_B overrides (runtime-settable confs only).
 OPT_SCRATCH_B=<dir> additionally points arm B's scratch root (streaming
 checkpoints/state/staged inputs) at <dir> — for the RAM-vs-disk scratch
 adjudication, which is a filesystem choice, not a Spark conf.
-OPT_PY_B="pkg.mod.ATTR=True;pkg.mod2.ATTR2=False" flips python module
-globals per arm (arm B gets the listed values, arm A the originals) — for
-code-level adjudications (lazy-vs-eager checkpoints, cache priming) that
-have no conf surface. Values are ast.literal_eval'd.
+OPT_PY_B="librarian_spark.operators.dedup._RECALL_SHJ_HINT=False" flips
+python module globals per arm (arm B gets the listed values, arm A the
+originals; ';'-separate several) — for code-level adjudications (plan
+hints, checkpoint modes) that have no conf surface. Values are
+ast.literal_eval'd. Every arm restores arm A's globals, scratch root and
+caller-session confs when it ends. A query that raises is recorded under
+its arm's ``<arm>_failed`` (round and error) and the A/B goes on with the
+other arm; the script prints its JSON and exits 1 when any run failed.
 
 Arm ORDER alternates per round (round 0: A,B; round 1: B,A; ...): the arm
 that runs SECOND for a query benefits ~20-25% from the first arm's
@@ -28,6 +32,7 @@ arms get equal first-position runs.
 
 from __future__ import annotations
 
+import ast
 import json
 import os
 import sys
@@ -40,6 +45,52 @@ sys.path.insert(0, str(REPO))
 from librarian_spark.operators import registry as _reg  # noqa: E402
 from librarian_spark.operators.registry import load_all  # noqa: E402
 from librarian_spark.session import get_spark  # noqa: E402
+
+
+def parse_py_b(spec: str) -> list[tuple[str, str, object]]:
+    """``"pkg.mod.ATTR=value;..."`` → ``[(module, attr, value), ...]``."""
+    out = []
+    for kv in spec.split(";"):
+        if "=" not in kv:
+            continue
+        dotted, val = kv.split("=", 1)
+        mod_name, _, attr = dotted.strip().rpartition(".")
+        if not mod_name or not attr:
+            raise ValueError(
+                f"OPT_PY_B entry {kv.strip()!r}: expected module.ATTR=value"
+            )
+        out.append((mod_name, attr, ast.literal_eval(val.strip())))
+    return out
+
+
+def summarize(
+    samples: dict[str, dict[str, list[float]]],
+    failures: dict[str, dict[str, list[str]]],
+) -> dict[str, dict]:
+    """Best-of-runs per query and arm; a query whose arm never finished
+    reports ``None`` there and stays out of ``B/A`` and ``_total``."""
+    out: dict[str, dict] = {}
+    for n, s in samples.items():
+        a, b = (min(s[arm]) if s[arm] else None for arm in ("A", "B"))
+        out[n] = {
+            "A": a if a is None else round(a, 3),
+            "B": b if b is None else round(b, 3),
+            "B/A": round(b / a, 3) if a and b else None,
+            "A_runs": [round(x, 2) for x in s["A"]],
+            "B_runs": [round(x, 2) for x in s["B"]],
+        }
+        for arm in ("A", "B"):
+            if failures[n][arm]:
+                out[n][f"{arm}_failed"] = failures[n][arm]
+    both = [v for v in out.values() if v["B/A"] is not None]
+    ta = sum(v["A"] for v in both)
+    tb = sum(v["B"] for v in both)
+    out["_total"] = {
+        "A": round(ta, 3),
+        "B": round(tb, 3),
+        "B/A": round(tb / ta, 3) if ta else None,
+    }
+    return out
 
 
 def main() -> None:
@@ -62,17 +113,12 @@ def main() -> None:
 
     scratch_a = _scratch.scratch_root()  # resolve arm A's root before any flip
 
-    import ast
     import importlib
 
     py_b: list[tuple[object, str, object, object]] = []  # (mod, attr, a_val, b_val)
-    for kv in os.environ.get("OPT_PY_B", "").split(";"):
-        if "=" not in kv:
-            continue
-        dotted, val = kv.split("=", 1)
-        mod_name, attr = dotted.strip().rsplit(".", 1)
+    for mod_name, attr, b_val in parse_py_b(os.environ.get("OPT_PY_B", "")):
         mod = importlib.import_module(mod_name)
-        py_b.append((mod, attr, getattr(mod, attr), ast.literal_eval(val.strip())))
+        py_b.append((mod, attr, getattr(mod, attr), b_val))
 
     def set_arm(arm: str) -> None:
         vals = conf_b if arm == "B" else base_vals
@@ -104,35 +150,29 @@ def main() -> None:
     samples: dict[str, dict[str, list[float]]] = {
         n: {"A": [], "B": []} for n in names
     }
+    failures: dict[str, dict[str, list[str]]] = {
+        n: {"A": [], "B": []} for n in names
+    }
     for rnd in range(n_runs):
         for name in names:
             for arm in (("A", "B") if rnd % 2 == 0 else ("B", "A")):
                 set_arm(arm)
-                spark.catalog.clearCache()
                 try:
-                    spark._jvm.org.apache.spark.sql.execution.streaming.state.StateStore.stop()  # noqa: E501
-                except Exception:  # noqa: BLE001
-                    pass
-                t0 = time.perf_counter()
-                df = specs[name].spark_fn(spark, sf_dir)
-                df.write.mode("overwrite").format("noop").save()
-                dt = time.perf_counter() - t0
-                samples[name][arm].append(dt)
-    set_arm("A")
-    best = {n: {a: min(v) for a, v in s.items()} for n, s in samples.items()}
-    out = {
-        n: {
-            "A": round(v["A"], 3),
-            "B": round(v["B"], 3),
-            "B/A": round(v["B"] / v["A"], 3),
-            "A_runs": [round(x, 2) for x in samples[n]["A"]],
-            "B_runs": [round(x, 2) for x in samples[n]["B"]],
-        }
-        for n, v in best.items()
-    }
-    ta = sum(v["A"] for v in best.values())
-    tb = sum(v["B"] for v in best.values())
-    out["_total"] = {"A": round(ta, 3), "B": round(tb, 3), "B/A": round(tb / ta, 3)}
+                    spark.catalog.clearCache()
+                    try:
+                        spark._jvm.org.apache.spark.sql.execution.streaming.state.StateStore.stop()  # noqa: E501
+                    except Exception:  # noqa: BLE001
+                        pass
+                    t0 = time.perf_counter()
+                    df = specs[name].spark_fn(spark, sf_dir)
+                    df.write.mode("overwrite").format("noop").save()
+                    dt = time.perf_counter() - t0
+                    samples[name][arm].append(dt)
+                except Exception as e:  # noqa: BLE001 — record; the other arm still runs
+                    failures[name][arm].append(f"round {rnd}: {type(e).__name__}: {e}"[:500])
+                finally:
+                    set_arm("A")
+    out = summarize(samples, failures)
     out["_meta"] = {
         "runs_per_arm": n_runs,
         "arm_order": "alternating per round (round 0: A,B; round 1: B,A; ...)",
@@ -142,6 +182,8 @@ def main() -> None:
         "n_queries": len(names),
     }
     print(json.dumps(out, indent=1))
+    if any(f["A"] or f["B"] for f in failures.values()):
+        sys.exit(1)
 
 
 if __name__ == "__main__":

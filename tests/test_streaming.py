@@ -1419,3 +1419,119 @@ def test_dedup_state_bounded_by_watermark(spark, tmp_path):
     # the cumulative key count
     assert state_rows[-1] <= horizon_bound
     assert max(state_rows) < n_batches * keys_per_batch // 2
+
+
+# --------------------------------------------------------------------------
+# The pipeline drain helper: width captured at start(), query always stopped
+# --------------------------------------------------------------------------
+
+
+@pytest.fixture()
+def ids_stream_dir(spark, tmp_path):
+    """Two one-file micro-batches of ids, each id delivered twice."""
+    src = tmp_path / "ids"
+    for b in range(2):
+        spark.range(b * 50, (b + 1) * 50).union(
+            spark.range(b * 50, (b + 1) * 50)
+        ).coalesce(1).write.parquet(str(src / f"b{b}"))
+    return str(src / "b*")
+
+
+@pytest.fixture()
+def caller_width(spark):
+    """Put the caller's session at a width no drain uses; restore after."""
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "3")
+    yield key
+    spark.conf.set(key, prev)
+
+
+def test_drain_width_applies_to_batch_session_only(
+    spark, ids_stream_dir, tmp_path, caller_width
+):
+    from librarian_spark.operators.pipeline import _DRAIN_WIDTH, _drain
+
+    seen = []
+
+    def fb(bdf, _bid):
+        seen.append(
+            (bdf.sparkSession.conf.get(caller_width), spark.conf.get(caller_width))
+        )
+
+    def drain(name: str, **kw) -> None:
+        _drain(
+            spark,
+            spark.readStream.schema("id long")
+            .option("maxFilesPerTrigger", 1)
+            .parquet(ids_stream_dir)
+            .writeStream.foreachBatch(fb)
+            .option("checkpointLocation", str(tmp_path / f"ckpt_{name}"))
+            .start,
+            **kw,
+        )
+
+    drain("default")
+    assert seen == [(str(_DRAIN_WIDTH), "3")] * 2
+    assert spark.conf.get(caller_width) == "3"
+    # width=None: the batches plan at the caller's own width
+    seen.clear()
+    drain("caller", width=None)
+    assert seen == [("3", "3")] * 2
+    assert spark.conf.get(caller_width) == "3"
+
+
+def test_drain_stops_query_when_batch_raises(
+    spark, ids_stream_dir, tmp_path, caller_width
+):
+    from pyspark.errors import StreamingQueryException
+
+    from librarian_spark.operators.pipeline import _drain
+
+    def fb(_bdf, _bid):
+        raise RuntimeError("batch failed")
+
+    with pytest.raises(StreamingQueryException, match="batch failed"):
+        _drain(
+            spark,
+            spark.readStream.schema("id long")
+            .parquet(ids_stream_dir)
+            .writeStream.foreachBatch(fb)
+            .option("checkpointLocation", str(tmp_path / "ckpt"))
+            .start,
+        )
+    assert spark.streams.active == []
+    assert spark.conf.get(caller_width) == "3"
+
+
+def test_drain_width_recorded_in_offset_log(
+    spark, ids_stream_dir, tmp_path, caller_width
+):
+    """A stateful file-sink drain records the drain width in offsets/0 and
+    partitions its state by it, whatever width the caller's session has."""
+    from librarian_spark.operators.pipeline import _DRAIN_WIDTH, _drain
+
+    def drain(name: str, **kw) -> tuple[str, int]:
+        ckpt = tmp_path / f"ckpt_{name}"
+        _drain(
+            spark,
+            spark.readStream.schema("id long")
+            .option("maxFilesPerTrigger", 1)
+            .parquet(ids_stream_dir)
+            .dropDuplicates(["id"])
+            .writeStream.format("parquet")
+            .option("path", str(tmp_path / f"out_{name}"))
+            .option("checkpointLocation", str(ckpt))
+            .start,
+            **kw,
+        )
+        meta = json.loads((ckpt / "offsets" / "0").read_text().splitlines()[1])
+        parts = [d for d in (ckpt / "state" / "0").iterdir() if d.name.isdigit()]
+        return meta["conf"][caller_width], len(parts)
+
+    assert drain("a") == (str(_DRAIN_WIDTH), _DRAIN_WIDTH)
+    spark.conf.set(caller_width, "5")
+    assert drain("b") == (str(_DRAIN_WIDTH), _DRAIN_WIDTH)
+    assert drain("outer", width=4) == ("4", 4)
+    assert spark.conf.get(caller_width) == "5"
+    assert spark.read.parquet(str(tmp_path / "out_b")).count() == 100

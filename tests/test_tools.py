@@ -782,3 +782,41 @@ def test_entry_first_50_samples_every_family():
     assert seen == fams, f"families missing from first 50: {fams - seen}"
     assert any(n.startswith("q0") for n in first)  # relational present too
     assert len(names) == len(set(names))
+
+
+def _load_opt_ab():
+    import importlib.util
+
+    spec = importlib.util.spec_from_file_location(
+        "_opt_ab", os.path.join(os.path.dirname(__file__), "..", "scripts", "opt_ab.py")
+    )
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod
+
+
+def test_opt_ab_rejects_py_b_entry_without_module():
+    """An OPT_PY_B entry with no dot fails with a message naming the entry,
+    not a bare unpack ValueError."""
+    mod = _load_opt_ab()
+    assert mod.parse_py_b("pkg.mod.ATTR=True; ;pkg.X=3") == [
+        ("pkg.mod", "ATTR", True),
+        ("pkg", "X", 3),
+    ]
+    with pytest.raises(ValueError, match=r"OPT_PY_B entry 'NODOT=1'"):
+        mod.parse_py_b("pkg.mod.ATTR=True;NODOT=1")
+
+
+def test_opt_ab_summary_keeps_failed_arm_out_of_ratios():
+    """A run that raised is reported under its arm's ``_failed`` key; the
+    query's other arm and the other queries are still summarized."""
+    out = _load_opt_ab().summarize(
+        {"q1": {"A": [2.0, 1.0], "B": [0.5]}, "q2": {"A": [3.0], "B": []}},
+        {"q1": {"A": [], "B": ["round 1: RuntimeError: x"]},
+         "q2": {"A": [], "B": ["round 0: RuntimeError: y"]}},
+    )
+    assert out["q1"]["A"] == 1.0 and out["q1"]["B/A"] == 0.5
+    assert out["q1"]["B_failed"] == ["round 1: RuntimeError: x"]
+    assert "A_failed" not in out["q1"]
+    assert out["q2"]["B"] is None and out["q2"]["B/A"] is None
+    assert out["_total"] == {"A": 1.0, "B": 0.5, "B/A": 0.5}
