@@ -4,8 +4,8 @@
 line: {"metric": ..., "value": total_sec, "unit": "sec", "queries": {...}, "sf": ...}.
 
 Execution is forced with a noop-format write (full plan evaluation, no driver
-transfer) so timings measure the engine, not result serialization. One tiny
-warm-up query first so JVM/codegen startup isn't billed to the first query.
+transfer) so timings measure the engine, not result serialization. Warm-up,
+per-run reset and interleaved best-of-N are librarian_spark/measure.py's.
 
 Env knobs:
   SPARK_GRAFT_SF_DIR   data dir            (default /root/testdata/sf0.1)
@@ -18,10 +18,10 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from librarian_spark import measure  # noqa: E402
 from librarian_spark.operators.registry import load_all  # noqa: E402
 from librarian_spark.scratch import scratch_root  # noqa: E402
 from librarian_spark.session import get_spark  # noqa: E402
@@ -51,62 +51,13 @@ def main() -> None:
         [n.strip() for n in subset.split(",") if n.strip()] if subset else sorted(specs)
     )
 
-    # warm-up: JVM + parquet footer caches + codegen paths, and one tiny
-    # mapInPandas so python-worker fork/import cost isn't billed to the first
-    # pandas-path query (mirrors not billing JVM startup to the first query)
-    spark.read.parquet(os.path.join(sf_dir, "region.parquet")).count()
-    spark.range(64).repartition(32).mapInPandas(
-        lambda it: it, "id long"
-    ).write.mode("overwrite").format("noop").save()
-
-    # Best-of-N with the cache cleared before every run: each query's number is
-    # self-contained (no cross-query cache coupling, no order dependence) and a
-    # transient host-load spike can't poison a recorded timing. Within a single
-    # run, caches an operator builds for itself (e.g. the LSH band table feeding
-    # a self-join) still apply — that's part of the operator's real plan.
-    # best-of-3 by default: the box shares its host, and transient load spikes
-    # otherwise get recorded as engine regressions (measured: identical code
-    # swinging 0.6s ↔ 2.1s between runs minutes apart). Rounds are
-    # INTERLEAVED (full pass over the list per round, min per query) so a
-    # multi-second spike degrades one round of a few queries instead of
-    # every attempt of whichever query it lands on.
+    # best-of-3 by default: the box shares its host, and transient load
+    # spikes otherwise get recorded as engine regressions (measured:
+    # identical code swinging 0.6s <-> 2.1s between runs minutes apart)
     n_runs = int(os.environ.get("BENCH_RUNS", "3"))
-    best: dict[str, float] = {n: float("inf") for n in names}
-    errors: dict[str, str] = {}
-    for _ in range(n_runs):
-        for name in names:
-            if name in errors:
-                continue  # already failed deterministically; don't retry n_runs times
-            spark.catalog.clearCache()
-            try:
-                # unload streaming state-store providers left by earlier
-                # pipeline queries: their maintenance threads otherwise tax
-                # every LATER query's timing (measured: pipeline_scd2 7.5s
-                # mid-run vs 3.6s isolated on the same box)
-                spark._jvm.org.apache.spark.sql.execution.streaming.state.StateStore.stop()  # noqa: E501
-            except Exception:  # noqa: BLE001 — JVM internals; timing aid only
-                pass
-            # time construction + execution: operators that collect a broadcast
-            # block or run an iterative convergence loop do real work while the
-            # DataFrame is being built, and that belongs in the measurement
-            t0 = time.perf_counter()
-            try:
-                df = specs[name].spark_fn(spark, sf_dir)
-                df.write.mode("overwrite").format("noop").save()
-            except Exception as exc:  # noqa: BLE001 — one bad query must never
-                # zero the whole round's metric (round-2's bench crashed on a
-                # single cast error and recorded rc=1 / no number at all)
-                errors[name] = f"{type(exc).__name__}: {exc}"[:300]
-                continue
-            best[name] = min(best[name], time.perf_counter() - t0)
-    # a query is either timed or errored, never both: a round-2 failure after
-    # a round-1 success (transient OOM/disk) reports as an error — a partial
-    # timing from fewer rounds is not comparable with the best-of-N numbers
-    timings = {
-        n: round(best[n], 4)
-        for n in names
-        if best[n] != float("inf") and n not in errors
-    }
+    measure.warm_up(spark, sf_dir)
+    best, errors = measure.best_of(spark, specs, names, sf_dir, n_runs)
+    timings = {n: round(best[n].seconds, 4) for n in names if n in best}
 
     total = round(sum(timings.values()), 4)
     sf = os.path.basename(sf_dir.rstrip("/")).replace("sf", "")

@@ -104,11 +104,6 @@ WHERE p.n_common * 1.0 / (LEN(s1.shingles) + LEN(s2.shingles) - p.n_common)
 """
 
 
-# round-12 A/B switch: SHUFFLE_HASH hint on dedup_minhash_recall's
-# truth-side left join (see the in-op comment)
-_RECALL_SHJ_HINT = True
-
-
 def shared_shingle_pairs(spark: SparkSession, sf: str) -> DataFrame:
     """Candidate pairs from the shingle inverted index with per-pair common
     counts and both set sizes: (doc_id_1, doc_id_2, n_common, n1, n2).
@@ -1944,15 +1939,11 @@ def dedup_minhash_recall(spark: SparkSession, sf: str) -> DataFrame:
         "doc_id_1", "doc_id_2", "jaccard"
     )
     cands = minhash_lsh_candidates(spark, sf).withColumn("hit", F.lit(1))
-    # SHUFFLE_HASH on the candidate (build-right — legal for LEFT OUTER)
-    # side: the planner's static estimate for the post-aggregation candidate
-    # frame is far above reality, so it plans SortMergeJoin and sorts BOTH
-    # sides (plans/r12/dedup_minhash_recall_before.txt:8). Both sides here
-    # are near-dup pair sets — the same bounded volume, near-unique
-    # (id1, id2) keys, no hot build key — so a per-partition hash build is
-    # safe at any corpus scale and both Sorts disappear from the plan.
-    cside = cands.hint("shuffle_hash") if _RECALL_SHJ_HINT else cands
-    joined = truth.join(cside, ["doc_id_1", "doc_id_2"], "left")
+    # no join hint: a SHUFFLE_HASH hint on the candidate side drops both
+    # Sorts from the static plan, yet the hinted arm ran slower (best 1.80 s
+    # vs 1.61 s, slower in 8 of 10 alternating rounds at sf0.1 on local[4];
+    # plans/r12/ab_recall_shj_hint_rerun.json)
+    joined = truth.join(cands, ["doc_id_1", "doc_id_2"], "left")
     decile = F.floor(F.col("jaccard") * 10).cast("long")
     return (
         joined.groupBy(decile.alias("jaccard_decile"))

@@ -81,9 +81,10 @@ class Snapshotter:
         raise ValueError(f"unknown source format: {src.format!r}")
 
     # -- sink -------------------------------------------------------------
-    def write(self, df: DataFrame, out_path: str, append: bool = False) -> int:
-        """Distributed parquet write; returns the number of rows committed
-        BY THIS RUN (delta-aware for incremental appends).
+    def _writer(self, df: DataFrame, mode: str):
+        """The declared write settings, shared by the full and the
+        incremental path: repository hadoop conf, the preserver's schema
+        cast, per-file row cap, codec and hive partitioning.
 
         ``maxRecordsPerFile`` ≡ reference ``batch_size_num_records``
         (`internal/parquet/preserver.go:79-83`); 0 means "no per-file cap"
@@ -93,28 +94,31 @@ class Snapshotter:
         repo = self.cfg.repository
         for k, v in repo.hadoop_conf().items():
             self.spark.conf.set(k, v)
-
         if pres.fields:
             # schema enforcement ≡ RecordToParquetRow arity/type check
             # (`internal/parquet/schema.go:52-73`) — cast to the declared types.
             declared = fields_to_struct_type(pres.fields)
             cols = [df[f.name].cast(f.dataType).alias(f.name) for f in declared.fields]
             df = df.select(cols)
-
-        before = 0
-        if append:
-            try:
-                before = self.spark.read.parquet(out_path).count()
-            except Exception:
-                before = 0
-
-        writer = df.write.mode("append" if append else "overwrite")
+        writer = df.write.mode(mode)
         if pres.batch_size_num_records > 0:
             writer = writer.option("maxRecordsPerFile", pres.batch_size_num_records)
         if pres.compression:
             writer = writer.option("compression", pres.compression)
         if repo.partition_by:
             writer = writer.partitionBy(*repo.partition_by)
+        return writer
+
+    def write(self, df: DataFrame, out_path: str, append: bool = False) -> int:
+        """Distributed parquet write; returns the number of rows committed
+        BY THIS RUN (delta-aware for incremental appends)."""
+        writer = self._writer(df, "append" if append else "overwrite")
+        before = 0
+        if append:
+            try:
+                before = self.spark.read.parquet(out_path).count()
+            except Exception:
+                before = 0
         writer.parquet(out_path)
 
         # processed count from committed parquet footers (metadata-only scan —
@@ -278,29 +282,32 @@ class Snapshotter:
             return self.write(df, out_path)
         tag = hashlib.md5(str((wm or {}).get("value")).encode()).hexdigest()[:12]
         staging = os.path.join(out_path, f".delta_staging_{tag}")
-        pres = self.cfg.preserver
-        writer = df.write.mode("overwrite")
-        if pres.batch_size_num_records > 0:
-            writer = writer.option("maxRecordsPerFile", pres.batch_size_num_records)
-        writer.parquet(staging)
+        self._writer(df, "overwrite").parquet(staging)
+        # each staged file moves to the same relative dir (hive partitions)
+        # under out_path, renamed after the watermark
         moved = 0
-        for f in sorted(os.listdir(staging)):
-            if f.endswith(".parquet"):
-                os.replace(
-                    os.path.join(staging, f),
-                    os.path.join(out_path, f"delta-{tag}-{moved:05d}.parquet"),
-                )
-                moved += 1
+        for root, _dirs, files in sorted(os.walk(staging)):
+            dest = os.path.join(out_path, os.path.relpath(root, staging))
+            for f in sorted(files):
+                if f.endswith(".parquet"):
+                    os.makedirs(dest, exist_ok=True)
+                    os.replace(
+                        os.path.join(root, f),
+                        os.path.join(dest, f"delta-{tag}-{moved:05d}.parquet"),
+                    )
+                    moved += 1
         # drop any leftover higher-numbered files from a previous, larger
         # partial attempt at this same watermark
-        for f in os.listdir(out_path):
-            if f.startswith(f"delta-{tag}-") and int(f.split("-")[2].split(".")[0]) >= moved:
-                os.remove(os.path.join(out_path, f))
+        delta_files = []
+        for root, _dirs, files in os.walk(out_path):
+            for f in files:
+                if f.startswith(f"delta-{tag}-"):
+                    if int(f.split("-")[2].split(".")[0]) >= moved:
+                        os.remove(os.path.join(root, f))
+                    else:
+                        delta_files.append(os.path.join(root, f))
         shutil.rmtree(staging, ignore_errors=True)
         # per-run delta count = rows in this watermark's files
-        import glob as _glob
-
-        delta_files = _glob.glob(os.path.join(out_path, f"delta-{tag}-*.parquet"))
         if delta_files:
             return self.spark.read.parquet(*delta_files).count()
         return 0

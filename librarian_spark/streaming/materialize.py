@@ -38,12 +38,14 @@ and the idempotency contract stay identical.
 
 from __future__ import annotations
 
+import functools
 import os
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
+from pyspark.sql.types import StructType
 
 __all__ = ["MaterializeConfig", "materialize", "read_state"]
 
@@ -71,6 +73,36 @@ def _latest_version(state_dir: str) -> int | None:
         return None
     with open(p) as f:
         return int(f.read().strip())
+
+
+@functools.lru_cache(maxsize=64)
+def _schema(ddl: str) -> StructType:
+    """``ddl`` parsed once per process: the per-batch paths read it several
+    times, and each ``createDataFrame([], ddl)`` built for its schema alone
+    cost 13-34 ms."""
+    return StructType.fromDDL(ddl)
+
+
+def _already_applied(state_dir: str, batch_id: int) -> bool:
+    """The replay guard of every versioned-state sink: the pointer only
+    advances after a COMPLETE v=<id> write, so pointer == batch_id means this
+    exact batch is fully applied — re-merging would read v=<id> while
+    overwriting it (a read-under-overwrite crash); skipping is the
+    foreachBatch idempotent-sink contract. A pointer AHEAD of the batch id is
+    not a replay — it means the stream's checkpoint and this state dir belong
+    to different runs (reset/relocated checkpoint), and silently skipping
+    would discard every batch until ids catch up: fail loudly instead."""
+    latest = _latest_version(state_dir)
+    if latest is None or latest < batch_id:
+        return False
+    if latest == batch_id:
+        return True
+    raise ValueError(
+        f"state dir {state_dir!r} is at version {latest} but the "
+        f"stream replayed batch {batch_id}: checkpoint and state dir "
+        "are from different runs — point the query at a fresh "
+        "state_dir or restore the matching checkpoint"
+    )
 
 
 def _advance_pointer(state_dir: str, version: int) -> None:
@@ -109,9 +141,10 @@ def _read_state_raw(spark: SparkSession, cfg: MaterializeConfig) -> DataFrame:
     """State WITH the per-row order watermark columns the merge needs.
     Rows written by a pre-watermark layout get LONG_MIN (any event beats
     them — the old last-batch-wins behavior, but only for those rows)."""
+    declared = _schema(cfg.row_ddl).fields
     v = _latest_version(cfg.state_dir)
     if v is None:
-        df = spark.createDataFrame([], cfg.row_ddl)
+        df = spark.createDataFrame([], _schema(cfg.row_ddl))
     else:
         df = spark.read.parquet(os.path.join(cfg.state_dir, f"v={v}"))
     # additive schema evolution: a restart with a WIDENED row_ddl (the change
@@ -120,7 +153,6 @@ def _read_state_raw(spark: SparkSession, cfg: MaterializeConfig) -> DataFrame:
     # backfill as typed NULLs — exactly what those rows' source events
     # carried — and the next commit rewrites state in the new layout. Column
     # REMOVAL needs no handling: the merge selects only declared columns.
-    declared = spark.createDataFrame([], cfg.row_ddl).schema.fields
     for f_ in declared:
         if f_.name not in df.columns:
             df = df.withColumn(f_.name, F.lit(None).cast(f_.dataType))
@@ -136,25 +168,8 @@ def _read_state_raw(spark: SparkSession, cfg: MaterializeConfig) -> DataFrame:
 def _apply_batch(
     spark: SparkSession, cfg: MaterializeConfig, batch_df: DataFrame, batch_id: int
 ) -> None:
-    # replay guard: the pointer only advances after a COMPLETE v=<id> write,
-    # so pointer == batch_id means this exact batch is fully applied —
-    # re-merging would read v=<id> while overwriting it (a
-    # read-under-overwrite crash); skipping is the foreachBatch
-    # idempotent-sink contract. A pointer AHEAD of the batch id is not a
-    # replay — it means the stream's checkpoint and this state dir belong to
-    # different runs (reset/relocated checkpoint), and silently skipping
-    # would discard every batch until ids catch up: fail loudly instead.
-    latest = _latest_version(cfg.state_dir)
-    if latest is not None:
-        if latest == batch_id:
-            return
-        if latest > batch_id:
-            raise ValueError(
-                f"state dir {cfg.state_dir!r} is at version {latest} but the "
-                f"stream replayed batch {batch_id}: checkpoint and state dir "
-                "are from different runs — point the query at a fresh "
-                "state_dir or restore the matching checkpoint"
-            )
+    if _already_applied(cfg.state_dir, batch_id):
+        return
     ts, ordc = cfg.order_cols
     after = F.from_json("after_json", cfg.row_ddl).alias("after_row")
     before = F.from_json("before_json", cfg.row_ddl).alias("before_row")
@@ -179,7 +194,7 @@ def _apply_batch(
     # the same ordering; a removed key keeps no tombstone, so an even older
     # re-delivery after the delete's batch would reinsert — production
     # retention of delete tombstones is the transactional-format upgrade.
-    payload_cols = spark.createDataFrame([], cfg.row_ddl).columns
+    payload_cols = _schema(cfg.row_ddl).names
     batch_cand = last.select(
         *cfg.key_cols,
         F.col("fin.op").alias("_op_"),

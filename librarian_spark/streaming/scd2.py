@@ -41,8 +41,10 @@ from pyspark.sql.window import Window as W
 
 from librarian_spark.streaming.materialize import (
     _advance_pointer,
+    _already_applied,
     _latest_version,
     _prune_versions,
+    _schema,
 )
 
 __all__ = ["SCD2Config", "scd2_materialize", "read_history"]
@@ -74,31 +76,22 @@ def read_history(spark: SparkSession, cfg: SCD2Config) -> DataFrame:
     versions' source events carried), and columns no longer declared are
     dropped — so a restart after the change stream grew (or shed) a column
     keeps merging, and the next commit rewrites state in the new layout."""
+    declared = _schema(cfg.history_ddl())
     v = _latest_version(cfg.state_dir)
     if v is None:
-        return spark.createDataFrame([], cfg.history_ddl())
+        return spark.createDataFrame([], declared)
     df = spark.read.parquet(os.path.join(cfg.state_dir, f"v={v}"))
-    declared = spark.createDataFrame([], cfg.history_ddl()).schema.fields
-    for f_ in declared:
+    for f_ in declared.fields:
         if f_.name not in df.columns:
             df = df.withColumn(f_.name, F.lit(None).cast(f_.dataType))
-    return df.select(*[f_.name for f_ in declared])
+    return df.select(*declared.names)
 
 
 def _apply_batch(
     spark: SparkSession, cfg: SCD2Config, batch_df: DataFrame, batch_id: int
 ) -> None:
-    latest = _latest_version(cfg.state_dir)
-    if latest is not None:
-        if latest == batch_id:  # full replay of an applied batch: skip
-            return
-        if latest > batch_id:
-            raise ValueError(
-                f"state dir {cfg.state_dir!r} is at version {latest} but the "
-                f"stream replayed batch {batch_id}: checkpoint and state dir "
-                "are from different runs — point the query at a fresh "
-                "state_dir or restore the matching checkpoint"
-            )
+    if _already_applied(cfg.state_dir, batch_id):
+        return
     ts, ordc = cfg.order_cols
     after = F.from_json("after_json", cfg.row_ddl).alias("after_row")
     before = F.from_json("before_json", cfg.row_ddl).alias("before_row")

@@ -7,12 +7,14 @@ Usage:
   OPT_QUERIES=a,b,c OPT_RUNS=3 \
   OPT_CONF_B="spark.sql.x=y;spark.sql.z=w" python scripts/opt_ab.py
 
+Every run is librarian_spark/measure.py's timed_run (reset, then spark_fn
+plus a noop write, timed), after its warm-up.
 Arm A = current session defaults (get_spark + tune_session).
 Arm B = A plus OPT_CONF_B overrides (runtime-settable confs only).
 OPT_SCRATCH_B=<dir> additionally points arm B's scratch root (streaming
 checkpoints/state/staged inputs) at <dir> — for the RAM-vs-disk scratch
 adjudication, which is a filesystem choice, not a Spark conf.
-OPT_PY_B="librarian_spark.operators.dedup._RECALL_SHJ_HINT=False" flips
+OPT_PY_B="librarian_spark.operators.relational._SALT=16" flips
 python module globals per arm (arm B gets the listed values, arm A the
 originals; ';'-separate several) — for code-level adjudications (plan
 hints, checkpoint modes) that have no conf surface. Values are
@@ -36,12 +38,12 @@ import ast
 import json
 import os
 import sys
-import time
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
 
+from librarian_spark import measure  # noqa: E402
 from librarian_spark.operators import registry as _reg  # noqa: E402
 from librarian_spark.operators.registry import load_all  # noqa: E402
 from librarian_spark.session import get_spark  # noqa: E402
@@ -141,12 +143,7 @@ def main() -> None:
             for k in conf_b:
                 _reg._CALLER_SESSION_CONF.pop(k, None)
 
-    # warm-up (same as bench.py)
-    spark.read.parquet(os.path.join(sf_dir, "region.parquet")).count()
-    spark.range(64).repartition(32).mapInPandas(
-        lambda it: it, "id long"
-    ).write.mode("overwrite").format("noop").save()
-
+    measure.warm_up(spark, sf_dir)
     samples: dict[str, dict[str, list[float]]] = {
         n: {"A": [], "B": []} for n in names
     }
@@ -158,16 +155,9 @@ def main() -> None:
             for arm in (("A", "B") if rnd % 2 == 0 else ("B", "A")):
                 set_arm(arm)
                 try:
-                    spark.catalog.clearCache()
-                    try:
-                        spark._jvm.org.apache.spark.sql.execution.streaming.state.StateStore.stop()  # noqa: E501
-                    except Exception:  # noqa: BLE001
-                        pass
-                    t0 = time.perf_counter()
-                    df = specs[name].spark_fn(spark, sf_dir)
-                    df.write.mode("overwrite").format("noop").save()
-                    dt = time.perf_counter() - t0
-                    samples[name][arm].append(dt)
+                    samples[name][arm].append(
+                        measure.timed_run(spark, specs[name], sf_dir).seconds
+                    )
                 except Exception as e:  # noqa: BLE001 — record; the other arm still runs
                     failures[name][arm].append(f"round {rnd}: {type(e).__name__}: {e}"[:500])
                 finally:

@@ -11,14 +11,14 @@ any existing rows (a subset re-run updates only its own queries — the
 round-6 clobber trap is closed):
 
     {"replication": 10, "queries": {name: {"sf01_s", "sf1_s", "ratio"}},
-     "outliers": [names with ratio > RATIO_BAR]}
+     "outliers": [names with ratio > RATIO_BAR, or errored]}
 
 Replication modes:
   default  — key-shifted replicas; document TEXT is identical across
              replicas, so dedup-family pair outputs grow ~quadratically in
              the replica count (pair growth, not plan cost).
-  organic  — SCALE_ORGANIC=1: each replica additionally rewrites text with
-             a replica-specific consonant rotation, so replicas are NOT
+  organic  — SCALE_ORGANIC=1: each replica additionally goes through
+             scale_smoke.organic_mutation, so replicas are NOT
              near-duplicates of each other and pair output stays ~linear —
              this isolates plan cost from pair growth for dedup/mm ops.
              Organic results record under the "organic" key.
@@ -30,19 +30,18 @@ Run from repo root:
 import json
 import os
 import sys
-import time
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
 sys.path.insert(0, str(REPO / "scripts"))
 
-# scale_smoke parses sys.argv at import time (its own replication factor) —
-# hide this script's query-list argument from it
-_argv, sys.argv = sys.argv, sys.argv[:1]
-from scale_smoke import BASE_SF, build_scaled  # noqa: E402
-
-sys.argv = _argv
+from scale_smoke import (  # noqa: E402
+    compare_scales,
+    ensure_scaled,
+    merge_results,
+    organic_mutation,
+)
 
 from librarian_spark.operators.registry import load_all  # noqa: E402
 from librarian_spark.session import get_spark  # noqa: E402
@@ -53,118 +52,23 @@ ROUND = os.environ.get("SCALE_ROUND", "r7")
 ORGANIC = os.environ.get("SCALE_ORGANIC") == "1"
 
 
-def build_organic(spark, out_dir: str) -> None:
-    """Key-shifted replicas whose document text is ALSO rewritten per
-    replica (consonant rotation) — replicas are not near-duplicates, so
-    dedup pair output grows ~linearly instead of quadratically. Delegates
-    the replication itself to scale_smoke.build_scaled (one implementation)
-    and only supplies the per-replica text mutation."""
-    import scale_smoke
-    from pyspark.sql import functions as F
-
-    alphabet = "etaonisrhl"
-
-    def rotate_text(d, r, table):
-        if table == "documents" and r > 0:
-            rot = alphabet[r:] + alphabet[:r]
-            d = d.withColumn("text", F.translate("text", alphabet, rot))
-        if table == "embeddings" and r > 0:
-            # replicas with IDENTICAL vectors make similarity pair output
-            # quadratic in the replica count (sim_pairs_threshold measured
-            # 16x at 10x data). The perturbation must push replicas to
-            # ~ORTHOGONAL, not merely nearby: a single-coordinate sign flip
-            # leaves cos ~= 1 - 2/dim ~= 0.87 (measured: dedup_embedding
-            # 21.9x — replicas still cleared its near-dup threshold), and
-            # scaling is invisible to cosine entirely. A coordinate ROLL by
-            # r positions makes cos(v, roll(v, r)) ~= 0 for random vectors,
-            # so organic pair counts stay ~linear.
-            # length-agnostic roll: k = r mod dim so any REPL works even
-            # past the embedding dimension (dim is 64 in testdata; don't
-            # bake it — a k=0 replica degenerates to the identity roll)
-            k = f"pmod({r}, size(embedding))"
-            d = d.withColumn(
-                "embedding",
-                F.expr(
-                    f"concat(slice(embedding, {k} + 1, "
-                    f"size(embedding) - {k}), slice(embedding, 1, {k}))"
-                ),
-            )
-        return d
-
-    scale_smoke.REPL = REPL
-    build_scaled(spark, out_dir, mutate=rotate_text)
-
-
-def time_query(spark, spec, sf_dir: str) -> float:
-    spark.catalog.clearCache()
-    try:
-        spark._jvm.org.apache.spark.sql.execution.streaming.state.StateStore.stop()  # noqa: E501
-    except Exception:  # noqa: BLE001 — JVM internals; timing aid only
-        pass
-    t0 = time.perf_counter()
-    spec.spark_fn(spark, sf_dir).write.mode("overwrite").format("noop").save()
-    return time.perf_counter() - t0
-
-
 def main() -> None:
     spark = get_spark("scale-cliff")
-    specs = load_all()
-    queries = sys.argv[1].split(",") if len(sys.argv) > 1 else sorted(specs)
+    queries = sys.argv[1].split(",") if len(sys.argv) > 1 else sorted(load_all())
     if ORGANIC:
-        scaled = f"/tmp/librarian_scale_organic_x{REPL}"
-        if not os.path.exists(f"{scaled}/region.parquet/_SUCCESS"):
-            print(f"building organic {scaled} ...", file=sys.stderr)
-            build_organic(spark, scaled)
+        scaled = ensure_scaled(
+            spark, f"/tmp/librarian_scale_organic_x{REPL}", REPL, organic_mutation
+        )
     else:
-        scaled = f"/tmp/librarian_scale_x{REPL}"
-        if not os.path.exists(f"{scaled}/region.parquet/_SUCCESS"):
-            print(f"building {scaled} ...", file=sys.stderr)
-            import scale_smoke
-
-            scale_smoke.REPL = REPL
-            build_scaled(spark, scaled)
-    spark.read.parquet(f"{BASE_SF}/region.parquet").count()  # warm JVM
-    out = {}
-    for name in queries:
-        try:
-            b = time_query(spark, specs[name], BASE_SF)
-            s = time_query(spark, specs[name], scaled)
-            out[name] = {
-                "sf01_s": round(b, 2),
-                "sf1_s": round(s, 2),
-                "ratio": round(s / b, 2),
-            }
-            print(f"{name}: {b:.2f}s -> {s:.2f}s ({s / b:.2f}x)", file=sys.stderr)
-        except Exception as e:  # record, keep hunting
-            out[name] = {"error": f"{type(e).__name__}: {e}"[:300]}
-            print(f"{name}: ERROR {e}", file=sys.stderr)
-
-    # merge-by-default: a subset run must never clobber the full-run rows
-    path = REPO / f"BENCH_SF1_{ROUND}.json"
-    doc = {"replication": REPL, "ratio_bar": RATIO_BAR, "queries": {}}
-    if path.exists():
-        try:
-            doc = json.loads(path.read_text())
-        except ValueError:
-            pass
+        scaled = ensure_scaled(spark, f"/tmp/librarian_scale_x{REPL}", REPL)
+    out = compare_scales(spark, queries, scaled, ("sf01_s", "sf1_s", "ratio"))
     key = "organic" if ORGANIC else "queries"
-    merged = dict(doc.get(key, {}))
-    merged.update(out)
-    doc[key] = merged
-    # organic ratios get their own outlier list — a super-linear cliff found
-    # under organic data must surface in the documented signal, not hide
-    # under a key the reader never scans
-    doc["outliers"] = [
-        n for n, r in doc.get("queries", {}).items()
-        if r.get("ratio", 0) > RATIO_BAR
-    ]
-    if doc.get("organic"):
-        doc["organic_outliers"] = [
-            n for n, r in doc["organic"].items()
-            if r.get("ratio", 0) > RATIO_BAR
-        ]
-    with open(path, "w") as fh:
-        json.dump(doc, fh, indent=1)
+    merge_results(
+        REPO / f"BENCH_SF1_{ROUND}.json",
+        key,
+        out,
+        {"replication": REPL, "ratio_bar": RATIO_BAR, "queries": {}},
+    )
     print(json.dumps({key: out}, separators=(",", ":")))
 
 

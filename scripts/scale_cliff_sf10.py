@@ -5,33 +5,29 @@ record the runtime ratio per query — the brief's bar is "plans you'd want at
 100x scale"; the 10x evidence (scale_cliff_sf1.py) extrapolates, this
 measures. Writes BENCH_SF10.json at the repo root (merge-by-query).
 
-Organic at 100x needs 100 DISTINCT text mutations — scale_cliff_sf1's single
-10-letter consonant rotation wraps at replica 10 (replicas 0/10/20/... would
-be IDENTICAL, reintroducing the quadratic pair growth organic mode exists to
-remove). Mutation here composes two rotations over DISJOINT letter sets
-(10 x 10 = 100 distinct combos): set A "etaonisrhl" rotated r%10, set B
-"dcumwfgypb" rotated r//10. Embeddings roll coordinates by r (r mod dim
-collides at r and r+dim — harmless: none of the 5 ops read embeddings).
+Organic at 100x needs 100 DISTINCT text mutations; scale_smoke's
+organic_mutation composes two rotations over disjoint letter sets
+(10 x 10 = 100 combinations). Its embedding roll collides at r and r + dim —
+harmless: none of the 5 ops read embeddings.
 
 Run from repo root (quiet box — ratios are the product):
     python scripts/scale_cliff_sf10.py [query,query,...]
 """
 import json
-import os
 import sys
-import time
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
 sys.path.insert(0, str(REPO / "scripts"))
 
-_argv, sys.argv = sys.argv, sys.argv[:1]
-from scale_smoke import BASE_SF, build_scaled  # noqa: E402
+from scale_smoke import (  # noqa: E402
+    compare_scales,
+    ensure_scaled,
+    merge_results,
+    organic_mutation,
+)
 
-sys.argv = _argv
-
-from librarian_spark.operators.registry import load_all  # noqa: E402
 from librarian_spark.session import get_spark  # noqa: E402
 
 REPL = 100
@@ -48,92 +44,20 @@ QUERIES = [
 ]
 
 
-def build_organic_100(spark, out_dir: str) -> None:
-    import scale_smoke
-    from pyspark.sql import functions as F
-
-    a = "etaonisrhl"
-    b = "dcumwfgypb"
-
-    def mutate(d, r, table):
-        if table == "documents" and r > 0:
-            ra, rb = r % 10, r // 10
-            rot_a = a[ra:] + a[:ra]
-            rot_b = b[rb:] + b[:rb]
-            d = d.withColumn("text", F.translate("text", a + b, rot_a + rot_b))
-        if table == "embeddings" and r > 0:
-            k = f"pmod({r}, size(embedding))"
-            d = d.withColumn(
-                "embedding",
-                F.expr(
-                    f"concat(slice(embedding, {k} + 1, "
-                    f"size(embedding) - {k}), slice(embedding, 1, {k}))"
-                ),
-            )
-        return d
-
-    scale_smoke.REPL = REPL
-    build_scaled(spark, out_dir, mutate=mutate)
-
-
-def time_query(spark, spec, sf_dir: str) -> float:
-    spark.catalog.clearCache()
-    try:
-        spark._jvm.org.apache.spark.sql.execution.streaming.state.StateStore.stop()  # noqa: E501
-    except Exception:  # noqa: BLE001 — JVM internals; timing aid only
-        pass
-    t0 = time.perf_counter()
-    spec.spark_fn(spark, sf_dir).write.mode("overwrite").format("noop").save()
-    return time.perf_counter() - t0
-
-
 def main() -> None:
     spark = get_spark("scale-cliff-100x")
-    specs = load_all()
     queries = sys.argv[1].split(",") if len(sys.argv) > 1 else QUERIES
-    scaled = f"/tmp/librarian_scale_organic_x{REPL}"
-    # completeness check on the LAST table build_scaled writes (SHIFT dict
-    # order ends at region) — testing an earlier table would reuse a
-    # build interrupted midway as if complete
-    if not os.path.exists(f"{scaled}/region.parquet/_SUCCESS"):
-        print(f"building organic {scaled} ...", file=sys.stderr)
-        build_organic_100(spark, scaled)
-    spark.read.parquet(f"{BASE_SF}/region.parquet").count()  # warm JVM
-    out = {}
-    for name in queries:
-        try:
-            b = time_query(spark, specs[name], BASE_SF)
-            s = time_query(spark, specs[name], scaled)
-            out[name] = {
-                "sf01_s": round(b, 2),
-                "sf10_s": round(s, 2),
-                "ratio": round(s / b, 2),
-            }
-            print(f"{name}: {b:.2f}s -> {s:.2f}s ({s / b:.2f}x)", file=sys.stderr)
-        except Exception as e:  # record, keep hunting
-            out[name] = {"error": f"{type(e).__name__}: {e}"[:300]}
-            print(f"{name}: ERROR {e}", file=sys.stderr)
-
-    path = REPO / "BENCH_SF10.json"
-    doc = {"replication": REPL, "ratio_bar": RATIO_BAR, "mode": "organic",
-           "queries": {}}
-    if path.exists():
-        try:
-            doc = json.loads(path.read_text())
-        except ValueError:
-            pass
-    merged = dict(doc.get("queries", {}))
-    merged.update(out)
-    doc["queries"] = merged
-    # an ERRORED query is the worst outlier there is (the disk-full /
-    # OOM class this script exists to catch) — it must never read as a
-    # clean gate just because it has no ratio
-    doc["outliers"] = [
-        n for n, r in merged.items()
-        if r.get("ratio", 0) > RATIO_BAR or "error" in r
-    ]
-    with open(path, "w") as fh:
-        json.dump(doc, fh, indent=1)
+    scaled = ensure_scaled(
+        spark, f"/tmp/librarian_scale_organic_x{REPL}", REPL, organic_mutation
+    )
+    out = compare_scales(spark, queries, scaled, ("sf01_s", "sf10_s", "ratio"))
+    merge_results(
+        REPO / "BENCH_SF10.json",
+        "queries",
+        out,
+        {"replication": REPL, "ratio_bar": RATIO_BAR, "mode": "organic",
+         "queries": {}},
+    )
     print(json.dumps({"queries": out}, separators=(",", ":")))
 
 

@@ -9,12 +9,18 @@ super-linear hide at small scale? Run from repo root:
 
     python scripts/scale_smoke.py [factor]
 
+SMOKE_QUERIES=a,b limits the run to those queries of the smoke list.
 Prints one JSON line {query: {base_s, scaled_s, factor}} and a summary.
+
+This module also holds what scale_cliff_sf1.py and scale_cliff_sf10.py
+share: the replica build (``ensure_scaled``, ``build_scaled``,
+``organic_mutation``), the base-vs-scaled timing on the shared measurement
+loop (``compare_scales``) and the merge-by-query JSON writer
+(``merge_results``).
 """
 import json
 import os
 import sys
-import time
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
@@ -22,12 +28,12 @@ sys.path.insert(0, str(REPO))
 
 from pyspark.sql import functions as F  # noqa: E402
 
+from librarian_spark import measure  # noqa: E402
 from librarian_spark.operators.registry import load_all  # noqa: E402
 from librarian_spark.session import get_spark  # noqa: E402
 from librarian_spark.sources.batch import load_table  # noqa: E402
 
 BASE_SF = "/root/testdata/sf0.1"
-REPL = int(sys.argv[1]) if len(sys.argv) > 1 else 5
 
 # (table, key columns to shift so replicas don't collide)
 SHIFT = {
@@ -137,22 +143,14 @@ QUERIES = [
     "text_prep_pipeline",     # 4-stage gate+dedup+decon+pack composition
 ]
 
-if os.environ.get("SMOKE_QUERIES"):
-    _want = set(os.environ["SMOKE_QUERIES"].split(","))
-    _unknown = _want - set(QUERIES)
-    if _unknown:
-        # a typo'd name must fail loudly, not run zero queries and exit green
-        raise SystemExit(f"SMOKE_QUERIES not in the smoke list: {sorted(_unknown)}")
-    QUERIES = [q for q in QUERIES if q in _want]
 
-
-def build_scaled(spark, out_dir: str, mutate=None) -> None:
-    """Write a REPL× key-shifted replica union of every SHIFT table.
+def build_scaled(spark, out_dir: str, repl: int, mutate=None) -> None:
+    """Write a ``repl``× key-shifted replica union of every SHIFT table.
 
     ``mutate(df, replica, table) -> df`` optionally transforms each replica
-    beyond the key shift (e.g. scale_cliff's organic mode rewrites document
-    text per replica) — the ONE replication implementation both scripts use,
-    so the shift/span/union logic can never diverge between them."""
+    beyond the key shift (``organic_mutation``) — the ONE replication
+    implementation every scale script uses, so the shift/span/union logic
+    can never diverge between them."""
     for t, keys in SHIFT.items():
         src = load_table(spark, BASE_SF, t)
         if not keys:
@@ -161,7 +159,7 @@ def build_scaled(spark, out_dir: str, mutate=None) -> None:
         parts = []
         # shift well past the table's own id range so replicas never collide
         span = 10 ** 12
-        for r in range(REPL):
+        for r in range(repl):
             d = src
             for k in keys:
                 d = d.withColumn(k, F.col(k) + F.lit(r * span))
@@ -174,35 +172,111 @@ def build_scaled(spark, out_dir: str, mutate=None) -> None:
         out.write.mode("overwrite").parquet(f"{out_dir}/{t}.parquet")
 
 
-def time_query(spark, spec, sf_dir: str, runs: int = 2) -> float:
-    best = float("inf")
-    for _ in range(runs):
-        spark.catalog.clearCache()
-        t0 = time.perf_counter()
-        spec.spark_fn(spark, sf_dir).write.mode("overwrite").format("noop").save()
-        best = min(best, time.perf_counter() - t0)
-    return best
+def ensure_scaled(spark, out_dir: str, repl: int, mutate=None) -> str:
+    # completeness check on the LAST table build_scaled writes (SHIFT dict
+    # order ends at region) — testing an earlier table would reuse a build
+    # interrupted midway as if complete
+    if not os.path.exists(f"{out_dir}/region.parquet/_SUCCESS"):
+        print(f"building {out_dir} ...", file=sys.stderr)
+        build_scaled(spark, out_dir, repl, mutate)
+    return out_dir
+
+
+_LETTERS_A, _LETTERS_B = "etaonisrhl", "dcumwfgypb"
+
+
+def organic_mutation(d, r: int, table: str):
+    """Make replica ``r`` organic: not a near-duplicate of the others, so
+    dedup and similarity pair output grows ~linearly with the replica count
+    instead of quadratically — plan cost is split from pair growth.
+
+    Document text: two rotations over disjoint letter sets, set A by r % 10
+    and set B by r // 10 — 100 distinct replicas (one 10-letter rotation
+    would wrap at replica 10, making replicas 0/10/20/... identical).
+    Embeddings: a coordinate ROLL by r, so cos(v, roll(v, r)) ~= 0 for random
+    vectors. A sign flip leaves cos ~= 1 - 2/dim ~= 0.87 (measured:
+    dedup_embedding 21.9x at 10x data, replicas still cleared its near-dup
+    threshold) and scaling is invisible to cosine. The roll is r mod dim, so
+    replicas r and r + dim collide."""
+    if table == "documents" and r > 0:
+        ra, rb = r % 10, r // 10
+        rot = _LETTERS_A[ra:] + _LETTERS_A[:ra] + _LETTERS_B[rb:] + _LETTERS_B[:rb]
+        d = d.withColumn("text", F.translate("text", _LETTERS_A + _LETTERS_B, rot))
+    if table == "embeddings" and r > 0:
+        k = f"pmod({r}, size(embedding))"
+        d = d.withColumn(
+            "embedding",
+            F.expr(
+                f"concat(slice(embedding, {k} + 1, "
+                f"size(embedding) - {k}), slice(embedding, 1, {k}))"
+            ),
+        )
+    return d
+
+
+def compare_scales(spark, names, scaled_dir: str, keys, runs: int = 1) -> dict:
+    """Best-of-``runs`` per query at BASE_SF, then at ``scaled_dir``, on the
+    shared measurement loop: ``{name: dict(zip(keys, (base_s, scaled_s,
+    ratio)))}``, or ``{name: {"error": ...}}`` when either run raised."""
+    specs = load_all()
+    measure.warm_up(spark, BASE_SF)
+    out = {}
+    for name in names:
+        secs = []
+        for sf_dir in (BASE_SF, scaled_dir):
+            best, errors = measure.best_of(spark, specs, [name], sf_dir, runs)
+            if errors:
+                out[name] = {"error": errors[name]}
+                print(f"{name}: ERROR {errors[name]}", file=sys.stderr)
+                break
+            secs.append(best[name].seconds)
+        else:
+            b, s = secs
+            out[name] = dict(zip(keys, (round(b, 2), round(s, 2), round(s / b, 2))))
+            print(f"{name}: {b:.2f}s -> {s:.2f}s ({s / b:.2f}x)", file=sys.stderr)
+    return out
+
+
+def merge_results(path: Path, key: str, out: dict, defaults: dict) -> None:
+    """Merge ``out`` into the ``key`` rows of the JSON at ``path`` (a subset
+    re-run must never clobber the full-run rows) and recompute its outlier
+    lists: ``outliers`` over ``queries``, and ``organic_outliers`` over
+    ``organic`` when present. A query is an outlier above
+    ``defaults["ratio_bar"]`` or when it errored — an errored query is the
+    worst outlier there is (the disk-full / OOM class these runs exist to
+    catch) and must never read as a clean gate for lack of a ratio."""
+    doc = defaults
+    if path.exists():
+        try:
+            doc = json.loads(path.read_text())
+        except ValueError:
+            pass
+    doc[key] = {**doc.get(key, {}), **out}
+    bar = defaults["ratio_bar"]
+
+    def outliers(rows: dict) -> list[str]:
+        return [n for n, r in rows.items() if r.get("ratio", 0) > bar or "error" in r]
+
+    doc["outliers"] = outliers(doc.get("queries", {}))
+    if doc.get("organic"):
+        doc["organic_outliers"] = outliers(doc["organic"])
+    path.write_text(json.dumps(doc, indent=1))
 
 
 def main() -> None:
+    repl = int(sys.argv[1]) if len(sys.argv) > 1 else 5
+    queries = QUERIES
+    if os.environ.get("SMOKE_QUERIES"):
+        want = set(os.environ["SMOKE_QUERIES"].split(","))
+        unknown = want - set(QUERIES)
+        if unknown:
+            # a typo'd name must fail loudly, not run zero queries and exit green
+            raise SystemExit(f"SMOKE_QUERIES not in the smoke list: {sorted(unknown)}")
+        queries = [q for q in QUERIES if q in want]
     spark = get_spark("scale-smoke")
-    scaled = f"/tmp/librarian_scale_x{REPL}"
-    if not os.path.exists(f"{scaled}/region.parquet/_SUCCESS"):
-        print(f"building {scaled} ...", file=sys.stderr)
-        build_scaled(spark, scaled)
-    specs = load_all()
-    spark.read.parquet(f"{BASE_SF}/region.parquet").count()  # warm JVM
-    out = {}
-    for name in QUERIES:
-        b = time_query(spark, specs[name], BASE_SF)
-        s = time_query(spark, specs[name], scaled)
-        out[name] = {
-            "base_s": round(b, 3),
-            "scaled_s": round(s, 3),
-            "factor": round(s / b, 2),
-        }
-        print(f"{name}: {b:.2f}s -> {s:.2f}s ({s / b:.2f}x)", file=sys.stderr)
-    line = {"replication": REPL, "queries": out}
+    scaled = ensure_scaled(spark, f"/tmp/librarian_scale_x{repl}", repl)
+    out = compare_scales(spark, queries, scaled, ("base_s", "scaled_s", "factor"), runs=2)
+    line = {"replication": repl, "queries": out}
     print(json.dumps(line, separators=(",", ":")))
 
 

@@ -356,6 +356,58 @@ archiver:
     assert spark.read.parquet(out_dir).count() == n
 
 
+def test_incremental_snapshot_append_keeps_declared_write_settings(
+    spark, tmp_path, sf_dir
+):
+    """The incremental append writes with the same declared settings as the
+    first full run: every committed file, run 1's and run 2's delta alike,
+    has the preserver's declared types and the configured codec."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    from librarian_spark.config import load_config_str
+    from librarian_spark.snapshot import run_snapshot_config
+
+    src_dir = str(tmp_path / "ev_src")
+    out_dir = str(tmp_path / "inc_out")
+    ev = load_table(spark, sf_dir, "events").select("event_id", "ts", "value")
+    n = ev.count()
+    cut_ts = ev.orderBy("ts").limit(int(n * 0.5)).agg(F.max("ts")).collect()[0][0]
+    cfg = load_config_str(f"""
+name: inc-typed
+archiver:
+  source:
+    format: parquet
+    path: {src_dir}
+    incremental_column: ts
+    query: "SELECT event_id, ts, value FROM source"
+  preserver:
+    compression: zstd
+    parquet:
+      schema:
+        - {{name: event_id, type: INT64}}
+        - {{name: ts, type: INT64, converted_type: TIMESTAMP_MICROS}}
+        - {{name: value, type: FLOAT}}
+  repository:
+    local:
+      path: {out_dir}
+""")
+    ev.filter(F.col("ts") <= cut_ts).write.mode("overwrite").parquet(src_dir)
+    run_snapshot_config(spark, cfg)
+    ev.write.mode("overwrite").parquet(src_dir)  # source grows
+    r2 = run_snapshot_config(spark, cfg)
+    assert r2.success and r2.num_records_processed == n - int(n * 0.5)
+
+    files = glob.glob(f"{out_dir}/**/*.parquet", recursive=True)
+    assert any(os.path.basename(f).startswith("delta-") for f in files), files
+    for f in files:
+        pf = pq.ParquetFile(f)
+        assert str(pf.schema_arrow.field("value").type) == "float", f
+        assert pf.metadata.row_group(0).column(0).compression == "ZSTD", f
+    assert spark.read.parquet(out_dir).count() == n
+
+
 def test_compact_small_files(spark, tmp_path, sf_dir):
     """Small-file compaction: many tiny files → few, identical content,
     sidecars preserved, and a verified row-count parity gate."""
@@ -820,3 +872,99 @@ def test_opt_ab_summary_keeps_failed_arm_out_of_ratios():
     assert "A_failed" not in out["q1"]
     assert out["q2"]["B"] is None and out["q2"]["B/A"] is None
     assert out["_total"] == {"A": 1.0, "B": 0.5, "B/A": 0.5}
+
+
+# --------------------------------------------------------------------------
+# Shared measurement loop (librarian_spark/measure.py)
+# --------------------------------------------------------------------------
+
+
+def _spec(fn):
+    from types import SimpleNamespace
+
+    return SimpleNamespace(spark_fn=fn)
+
+
+def test_measure_counts_micro_batch_jobs_outside_caller_group(spark, tmp_path, sf_dir):
+    """A timed run counts every job submitted while it ran: the micro-batch
+    jobs of a streaming drain run under the query's runId group, so they
+    exceed what the caller's own job group saw."""
+    import uuid
+
+    from librarian_spark import measure
+
+    src = str(tmp_path / "src")
+    for i in range(3):
+        spark.range(i * 10, i * 10 + 10).coalesce(1).write.mode("append").parquet(src)
+    name = f"measure_drain_{uuid.uuid4().hex[:8]}"
+
+    def drain(sp, _sf):
+        q = (
+            sp.readStream.schema("id long")
+            .option("maxFilesPerTrigger", 1)
+            .parquet(src)
+            .writeStream.format("memory")
+            .queryName(name)
+            .option("checkpointLocation", str(tmp_path / "ckpt"))
+            .start()
+        )
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+        return sp.table(name)
+
+    sc = spark.sparkContext
+    sc.setJobGroup("measure-caller", "caller")
+    try:
+        run = measure.timed_run(spark, _spec(drain), sf_dir)
+    finally:
+        sc.setJobGroup(None, None)
+    caller_jobs = sc.statusTracker().getJobIdsForGroup("measure-caller")
+    assert len(run.jobs) > len(caller_jobs), (run.jobs, caller_jobs)
+    assert len(run.jobs) >= 3  # at least one job per micro-batch
+    assert all(j.start_s >= 0 and j.duration_s >= 0 for j in run.jobs)
+    assert sum(j.tasks for j in run.jobs) >= len(run.jobs)
+    assert 0 < run.seconds
+
+
+def test_measure_best_of_records_error_and_runs_later_queries(spark, sf_dir):
+    """A query that raises is an error, is not retried, and the queries
+    after it still run every round."""
+    from librarian_spark import measure
+
+    calls = {"boom": 0, "ok": 0}
+
+    def boom(sp, _sf):
+        calls["boom"] += 1
+        raise RuntimeError("boom")
+
+    def ok(sp, _sf):
+        calls["ok"] += 1
+        return sp.range(5)
+
+    best, errors = measure.best_of(
+        spark, {"boom": _spec(boom), "ok": _spec(ok)}, ["boom", "ok"], sf_dir, 2
+    )
+    assert errors == {"boom": "RuntimeError: boom"}
+    assert set(best) == {"ok"} and best["ok"].seconds > 0
+    assert calls == {"boom": 1, "ok": 2}
+
+
+def test_measure_best_of_reports_late_failure_only_as_error(spark, sf_dir):
+    """A query that succeeds in round 1 and raises in round 2 is reported
+    as an error and carries no timing."""
+    from librarian_spark import measure
+
+    calls = []
+
+    def flaky(sp, _sf):
+        calls.append(1)
+        if len(calls) > 1:
+            raise RuntimeError("round 2")
+        return sp.range(5)
+
+    best, errors = measure.best_of(spark, {"flaky": _spec(flaky)}, ["flaky"], sf_dir, 3)
+    assert best == {}
+    assert errors == {"flaky": "RuntimeError: round 2"}
+    assert len(calls) == 2
