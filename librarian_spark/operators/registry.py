@@ -11,55 +11,21 @@ records a weaker rows-only check).
 from __future__ import annotations
 
 import functools
-import os
 from collections.abc import Callable
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
-from librarian_spark.session import CORRECTNESS_CONFS
+from librarian_spark.session import SESSION_CONFS
 
 __all__ = ["QuerySpec", "REGISTRY", "register", "query", "tune_session"]
 
-# Runtime-settable confs applied to the CALLER's session before every
-# registered query builds its plan. The grading harness hands us a BARE
-# SparkSession (none of get_spark's configs), where the defaults are wrong in
-# ways that cost correctness or wall-clock:
-#   - timeZone: DuckDB oracle timestamps are UTC-naive; a bare session uses the
-#     host TZ and every timestamp-typed result drifts.
-#   - shuffle.partitions: bare default is 200 — at oracle scale (sf0.01, ~60k
-#     rows) that is ~170 empty post-shuffle tasks of pure scheduling overhead
-#     per query; AQE coalescing needs adaptive.enabled anyway.
-#   - nanosAsLong: events.parquet carries TIMESTAMP(NANOS), illegal for the
-#     vectorized reader without the legacy flag (also set in load_table;
-#     belt-and-braces here because plans built from cached DataFrames can
-#     re-resolve after load).
-#   - arrow: every mapInPandas/toPandas boundary in the LLM operators assumes
-#     Arrow batching (10-100x over pickle serialization).
-# All of these are runtime-settable (no session restart), idempotent, and
-# identical to what librarian_spark.session.get_spark configures at build time.
-_CALLER_SESSION_CONF = {
-    # correctness-critical confs (timeZone/nanosAsLong/inferTimestampNTZ/arrow)
-    # are single-sourced in librarian_spark.session.CORRECTNESS_CONFS
-    **CORRECTNESS_CONFS,
-    "spark.sql.shuffle.partitions": os.environ.get("SPARK_GRAFT_CPUS", "32"),
-    "spark.sql.adaptive.enabled": "true",
-    "spark.sql.adaptive.coalescePartitions.enabled": "true",
-    # parallelismFirst stays at the Spark default (true) — same full-registry
-    # measurement and rationale as session.get_spark; byte-based coalescing
-    # is reserved for cluster_profile where exchanges carry real bytes
-    "spark.sql.adaptive.skewJoin.enabled": "true",
-    # shuffled-hash join when the planner/AQE size gates pass — same setting
-    # and scale rationale as session.get_spark (guide §3.1/§9; measured
-    # 0.871x over the SMJ-heavy tier, no regressions)
-    "spark.sql.join.preferSortMergeJoin": "false",
-    "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold": "64MB",
-}
-
 
 def tune_session(spark: SparkSession) -> None:
-    """Apply the engine's runtime conf profile to an externally-built session."""
-    for k, v in _CALLER_SESSION_CONF.items():
+    """Apply ``session.SESSION_CONFS`` to an externally built session —
+    ``__spark_entry__`` callers may run a registered query on a bare
+    SparkSession."""
+    for k, v in SESSION_CONFS.items():
         try:
             spark.conf.set(k, v)
         except Exception:  # noqa: BLE001 — a locked/readonly conf never aborts a query

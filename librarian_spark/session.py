@@ -6,9 +6,11 @@ session is where scale policy lives: AQE for runtime re-planning (join strategy
 switches, skew-join splitting, partition coalescing), UTC session timezone so results
 are comparable against a DuckDB oracle, and Arrow for any Python-side exchange.
 
-At cluster scale the same builder is used — only ``master`` and the memory/shuffle
-knobs change; every operator in this package is expressed declaratively so Catalyst
-picks physical strategy per-cluster.
+Every session conf is written once, here: ``SESSION_CONFS`` (the correctness and
+engine profile) and ``ROCKSDB_STATE_CONFS``. ``get_spark`` builds with the profile,
+``operators.registry.tune_session`` applies it to a caller's session and
+``cluster_profile`` adds its cluster sizing rules on top; every operator in this
+package is expressed declaratively so Catalyst picks physical strategy per-cluster.
 """
 
 from __future__ import annotations
@@ -17,18 +19,20 @@ import os
 
 from pyspark.sql import SparkSession
 
-__all__ = ["get_spark", "cluster_profile", "CORRECTNESS_CONFS", "DEFAULT_SHUFFLE_PARTITIONS"]
+__all__ = [
+    "get_spark",
+    "cluster_profile",
+    "CORRECTNESS_CONFS",
+    "SESSION_CONFS",
+    "ROCKSDB_STATE_CONFS",
+]
 
-# local[32] on the test box; on a 1000-executor cluster this should be
-# ~2-3x total cores — overridable via config/env.
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+# local parallelism: the master's core count and the shuffle width
+_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
-# Correctness-critical confs, single-sourced: every session-building path
-# (get_spark, the caller-session tuning profile in operators.registry, the
-# cluster profile, and load_table's defensive set) consumes THIS dict — a
-# conf added or changed here reaches all of them, instead of four hand-kept
-# copies drifting (the class of hidden-conf bug scripts/driver_sim.py
-# exists to catch).
+# Correctness-critical confs: a session without them returns wrong results,
+# not slow ones (the class of hidden-conf bug scripts/driver_sim.py exists
+# to catch). load_table also sets them defensively.
 #   - timeZone UTC: DuckDB-oracle timestamps are UTC-naive; any other TZ
 #     drifts every timestamp-typed result.
 #   - nanosAsLong: parquet INT64 TIMESTAMP(NANOS) is otherwise an illegal
@@ -43,65 +47,75 @@ CORRECTNESS_CONFS: dict[str, str] = {
     "spark.sql.execution.arrow.pyspark.enabled": "true",
 }
 
+# The engine's runtime session profile, written once: get_spark builds with
+# it, operators.registry.tune_session applies it to the caller's session
+# before every registered query (`__spark_entry__` callers may pass a BARE
+# SparkSession with none of get_spark's settings), and cluster_profile
+# starts from it. Every entry is runtime-settable.
+SESSION_CONFS: dict[str, str] = {
+    **CORRECTNESS_CONFS,
+    # one shuffle task per local core; a bare session's 200 is ~170 empty
+    # post-shuffle tasks of pure scheduling per query at oracle scale
+    # (sf0.01, ~60k rows)
+    "spark.sql.shuffle.partitions": _CPUS,
+    # AQE on (+ coalesce + skew join): the static plan is always wrong
+    # somewhere at scale — AQE re-plans joins from post-shuffle statistics
+    # and splits skewed partitions. Spark's defaults already read true;
+    # pinned because a caller's session may have turned them off.
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.adaptive.coalescePartitions.enabled": "true",
+    # parallelismFirst stays at the Spark DEFAULT (true) here: this
+    # engine's post-shuffle stages are dominated by per-ROW compute
+    # (hash/DP/HOF expression work over small payloads), and coalescing
+    # them to the advisory byte size serializes that work. Measured over
+    # the FULL 292-query registry (interleaved same-session A/B,
+    # best-of-3 per arm): byte-based coalescing is 1.19x slower in
+    # total — 208 queries >10% worse, 9 better. cluster_profile turns it
+    # off, where exchanges carry real bytes per row.
+    "spark.sql.adaptive.skewJoin.enabled": "true",
+    # allow shuffled-hash join when the planner's size gate passes
+    # (guide §3.1/§9): SHJ skips both sides' sorts; the planner only
+    # picks it when the build side is provably small per partition, and
+    # AQE additionally converts SMJ->SHJ at runtime when every
+    # post-shuffle partition is under the 64 MB local-map threshold —
+    # a per-partition bound, so it stays safe at any input scale, and SMJ
+    # remains the fallback whenever the gate fails. Measured (interleaved
+    # same-session A/B, 11 SMJ-heavy queries): 0.871x total, every query
+    # faster (0.74-0.92x).
+    "spark.sql.join.preferSortMergeJoin": "false",
+    "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold": "64MB",
+}
+
+# RocksDB-backed streaming state, for keyed state that outgrows executor
+# heap (the default HDFS-backed provider keeps every key in JVM memory;
+# RocksDB spills to local disk and snapshots to the checkpoint). Changelog
+# checkpointing uploads per-batch deltas instead of full snapshots: O(delta)
+# instead of O(state) checkpoint traffic on a multi-TB dedup/session store.
+# A per-query session conf — set it before starting the query.
+ROCKSDB_STATE_CONFS: dict[str, str] = {
+    "spark.sql.streaming.stateStore.providerClass": (
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+    ),
+    "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled": "true",
+}
+
 
 def get_spark(
     app_name: str = "librarian-spark",
     master: str | None = None,
-    shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    """Build (or fetch) the engine's SparkSession.
-
-    Defaults are tuned for correctness-vs-oracle and for scale-out behavior:
-
-    - ``spark.sql.session.timeZone=UTC``: DuckDB timestamps are UTC-naive; without
-      this, timestamp-typed results drift by the host TZ.
-    - AQE on (+ coalesce + skew join): at 100 TB the static plan is always wrong
-      somewhere — AQE re-plans joins post-shuffle-statistics and splits skewed
-      partitions.
-    - ``spark.sql.files.maxPartitionBytes=128m`` keeps scan partitions
-      executor-memory-sized regardless of input file layout.
-    - Arrow enabled: any pandas_udf / toPandas path is Arrow-batched.
-    """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    """Build (or fetch) the engine's SparkSession: ``SESSION_CONFS``, the
+    static settings a running session cannot change (UI off, driver heap)
+    and ``extra_conf`` on top. ``master`` defaults to
+    ``local[$SPARK_GRAFT_CPUS]``."""
     builder = (
         SparkSession.builder.appName(app_name)
-        .master(master or f"local[{cpus}]")
-        .config(
-            "spark.sql.shuffle.partitions",
-            str(shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS),
-        )
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        # parallelismFirst stays at the Spark DEFAULT (true) here: this
-        # engine's post-shuffle stages are dominated by per-ROW compute
-        # (hash/DP/HOF expression work over small payloads), and coalescing
-        # them to the advisory byte size serializes that work. Measured over
-        # the FULL 292-query registry (interleaved same-session A/B,
-        # best-of-3 per arm): byte-based coalescing is 1.19x slower in
-        # total — 208 queries >10% worse, 9 better. The byte-based setting
-        # remains right where partitions carry real bytes per row; it is
-        # applied in cluster_profile (100 TB deployment) where the advisory
-        # size governs genuinely data-heavy exchanges.
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # allow shuffled-hash join when the planner's size gate passes
-        # (guide §3.1/§9): SHJ skips both sides' sorts; the planner only
-        # picks it when the build side is provably small per partition, and
-        # AQE additionally converts SMJ->SHJ at runtime when every
-        # post-shuffle partition is under the 64 MB local-map threshold —
-        # a per-partition bound, so it stays safe at any input scale.
-        # Measured (interleaved same-session A/B, 11 SMJ-heavy queries):
-        # 0.871x total, every query faster (0.74-0.92x).
-        .config("spark.sql.join.preferSortMergeJoin", "false")
-        .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "64MB")
-        .config("spark.sql.files.maxPartitionBytes", "134217728")
-        .config("spark.sql.parquet.filterPushdown", "true")
+        .master(master or f"local[{_CPUS}]")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
     )
-    for k, v in CORRECTNESS_CONFS.items():
-        builder = builder.config(k, v)
-    for k, v in (extra_conf or {}).items():
+    for k, v in {**SESSION_CONFS, **(extra_conf or {})}.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
@@ -114,9 +128,10 @@ def cluster_profile(
     input_tb: float | None = None,
 ) -> dict[str, str]:
     """Conf profile for a real multi-executor cluster (the 100 TB deployment
-    of the same operator code — ``get_spark`` covers the local[32] test box).
-
-    The sizing rules, each one line of arithmetic so they can be audited:
+    of the same operator code — ``get_spark`` covers the local test box):
+    ``SESSION_CONFS`` and ``ROCKSDB_STATE_CONFS`` (harmless for stateless
+    jobs), overridden by these sizing rules, each one line of arithmetic so
+    they can be audited:
 
     - ``shuffle.partitions`` = 2× total cores, floored at 200: two waves of
       shuffle tasks per stage smooth skew/straggler loss without drowning the
@@ -124,7 +139,7 @@ def cluster_profile(
     - ``advisoryPartitionSizeInBytes`` = 128 MB: AQE's post-shuffle coalesce
       target — big enough to amortize task startup, small enough that a
       partition (× ~3-5 decode amplification) fits executor memory headroom.
-    - ``maxPartitionBytes`` = 128 MB: scan-side split size, same argument.
+    - ``parallelismFirst`` off: byte-based coalescing (see ``SESSION_CONFS``).
     - ``autoBroadcastJoinThreshold`` scales with executor memory (1/64 of an
       executor's heap, capped at 512 MB): a broadcast table is materialized
       ONCE per executor, so what's safe to broadcast is a function of the
@@ -134,59 +149,31 @@ def cluster_profile(
     - ``files.openCostInBytes`` down to 1 MB on object stores: S3 listings
       bias Spark toward packing many small files per task; the real cost of
       an extra S3 GET is far below the 4 MB default's implication.
-    - RocksDB state store + changelog checkpointing for any streaming job
-      whose keyed state exceeds executor heap (session windows / dedup at
-      100 TB); harmless for stateless jobs.
+    - Kryo serialization and speculative re-launch of straggler tasks.
 
     ``input_tb``, when given, only sanity-floors the partition count so one
     pass over the input stays under ~2 GB per task even before AQE sees it.
     """
     shuffle_parts = max(200, 2 * total_cores)
     if input_tb is not None:
-        # one scan wave: input / maxPartitionBytes tasks; keep shuffles in
-        # the same order of magnitude so joins against the scan don't funnel
+        # one scan wave: input / maxPartitionBytes (128 MB default) tasks;
+        # keep shuffles in the same order of magnitude so joins against the
+        # scan don't funnel
         shuffle_parts = max(shuffle_parts, int(input_tb * 1024 * 1024 // 2048))
     bcast_mb = min(512, max(10, executor_mem_gb * 1024 // 64))
     return {
-        **CORRECTNESS_CONFS,
+        **SESSION_CONFS,
+        **ROCKSDB_STATE_CONFS,
         "spark.sql.shuffle.partitions": str(shuffle_parts),
-        "spark.sql.adaptive.enabled": "true",
-        "spark.sql.adaptive.coalescePartitions.enabled": "true",
         "spark.sql.adaptive.advisoryPartitionSizeInBytes": "128m",
         # byte-based coalescing is a CLUSTER-profile setting only: with
         # shuffle.partitions at 2x total cores and a 128 MB advisory size it
         # folds only genuinely tiny exchanges, and compute-dense operators
         # that byte-sizing would mis-size pin their own width with explicit
-        # repartitions (q80/q89/edit-distance pattern). On the local test
-        # profile the same setting serialized per-row-compute stages and is
-        # left at the Spark default there (full-registry A/B, 1.19x).
+        # repartitions (q80/q89/edit-distance pattern)
         "spark.sql.adaptive.coalescePartitions.parallelismFirst": "false",
-        "spark.sql.adaptive.skewJoin.enabled": "true",
-        # shuffled-hash join allowed when its size gate passes (same setting
-        # and rationale as get_spark): the 64 MB AQE local-map threshold is a
-        # PER-PARTITION bound, so the build side scales with partition count,
-        # not input size — safe at 100 TB, and SMJ remains the fallback
-        # whenever the gate fails
-        "spark.sql.join.preferSortMergeJoin": "false",
-        "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold": "64MB",
-        "spark.sql.files.maxPartitionBytes": "134217728",
         "spark.sql.files.openCostInBytes": "1048576",
         "spark.sql.autoBroadcastJoinThreshold": f"{bcast_mb}m",
-        "spark.sql.parquet.filterPushdown": "true",
-        # Runtime bloom-filter join pruning (pinned explicitly; default-on in
-        # Spark 4 but historically off): a selective filter on a dim side
-        # materializes a bloom filter that prunes the FACT scan before the
-        # shuffle — at 100 TB this is the difference between shuffling the
-        # whole fact table and shuffling the ~1% that can actually join.
-        # Complements (does not replace) static partition pruning and DPP.
-        "spark.sql.optimizer.runtime.bloomFilter.enabled": "true",
-        "spark.sql.streaming.stateStore.providerClass": (
-            "org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider"
-        ),
-        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled": (
-            "true"
-        ),
         "spark.serializer": "org.apache.spark.serializer.KryoSerializer",
         "spark.speculation": "true",
     }

@@ -109,21 +109,13 @@ class Snapshotter:
             writer = writer.partitionBy(*repo.partition_by)
         return writer
 
-    def write(self, df: DataFrame, out_path: str, append: bool = False) -> int:
-        """Distributed parquet write; returns the number of rows committed
-        BY THIS RUN (delta-aware for incremental appends)."""
-        writer = self._writer(df, "append" if append else "overwrite")
-        before = 0
-        if append:
-            try:
-                before = self.spark.read.parquet(out_path).count()
-            except Exception:
-                before = 0
-        writer.parquet(out_path)
-
+    def write(self, df: DataFrame, out_path: str) -> int:
+        """Distributed parquet overwrite of ``out_path``; returns the number
+        of rows committed."""
+        self._writer(df, "overwrite").parquet(out_path)
         # processed count from committed parquet footers (metadata-only scan —
         # no data re-read), standing in for the reference's per-row counter.
-        return self.spark.read.parquet(out_path).count() - before
+        return self.spark.read.parquet(out_path).count()
 
     # -- incremental high-watermark state ---------------------------------
     def _load_watermark(self, out_path: str) -> dict | None:
@@ -183,7 +175,6 @@ class Snapshotter:
         else:
             out_path = repo_cfg.spark_path()
 
-        append = False
         wm = None
         if src.incremental_column:
             # delta pull: only rows past the persisted high watermark. The
@@ -197,7 +188,6 @@ class Snapshotter:
             wm = self._load_watermark(out_path)
             if wm is not None:
                 df = df.filter(F.col(col) > F.lit(wm["value"]).cast(dtype))
-                append = True
 
         if src.incremental_column:
             # one aggregate covers both the catalog count pre-scan
@@ -226,9 +216,7 @@ class Snapshotter:
                 # monotone column, so it pushes down alongside the lower one.
                 dtype = dict(df.dtypes).get(col, "string")
                 bounded = df.filter(F.col(col) <= F.lit(new_max).cast(dtype))
-                processed = self._write_delta_idempotent(
-                    bounded, out_path, wm, append=append
-                )
+                processed = self._write_delta_idempotent(bounded, out_path, wm)
                 record.finish(processed)
                 self._save_watermark(out_path, col, new_max, dtype)
         else:
@@ -266,7 +254,7 @@ class Snapshotter:
         return record
 
     def _write_delta_idempotent(
-        self, df: DataFrame, out_path: str, wm: dict | None, append: bool
+        self, df: DataFrame, out_path: str, wm: dict | None
     ) -> int:
         """Append the delta with file names DERIVED FROM THE WATERMARK so a
         crash between append and watermark-save cannot duplicate data: the
@@ -278,9 +266,9 @@ class Snapshotter:
         import hashlib
         import shutil
 
-        if not append:
+        if wm is None:
             return self.write(df, out_path)
-        tag = hashlib.md5(str((wm or {}).get("value")).encode()).hexdigest()[:12]
+        tag = hashlib.md5(str(wm["value"]).encode()).hexdigest()[:12]
         staging = os.path.join(out_path, f".delta_staging_{tag}")
         self._writer(df, "overwrite").parquet(staging)
         # each staged file moves to the same relative dir (hive partitions)

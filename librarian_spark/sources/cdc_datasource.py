@@ -68,14 +68,6 @@ def _rows_of(path: str, fname: str):
             doc = json.loads(line)
             p = doc.get("payload", {})
             src = p.get("source") or {}
-            before, after = p.get("before"), p.get("after")
-            # Go marshals map[string]interface{} with sorted keys
-            # (`internal/integrations/kafka/repository.go:143`); match it.
-            dump = lambda v: (
-                None
-                if v is None
-                else json.dumps(v, separators=(",", ":"), sort_keys=True)
-            )
             yield (
                 p.get("op"),
                 p.get("ts_ms"),
@@ -83,8 +75,8 @@ def _rows_of(path: str, fname: str):
                 src.get("schema"),
                 src.get("table"),
                 src.get("lsn"),
-                dump(before),
-                dump(after),
+                _seg.dump_image(p.get("before")),
+                _seg.dump_image(p.get("after")),
                 f"{fname}:{lineno}",
             )
 

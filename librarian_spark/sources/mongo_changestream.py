@@ -106,13 +106,6 @@ def decode_change_event(doc: dict, seq: int):
     ts_field = doc.get("clusterTime")
     ts_ms = unwrap_extended_json(ts_field) if ts_field is not None else None
     token = (doc.get("_id") or {}).get("_data")
-    dump = lambda v: (
-        None
-        if v is None
-        else json.dumps(
-            unwrap_extended_json(v), separators=(",", ":"), sort_keys=True
-        )
-    )
     return (
         op,
         ts_ms,
@@ -120,8 +113,8 @@ def decode_change_event(doc: dict, seq: int):
         coll,  # Mongo has no schemas: collection plays schema AND table,
         coll,  # matching the reference (`source.go:225-227`)
         None,  # no LSN concept — the resume token is the position
-        dump(before),
-        dump(after),
+        _seg.dump_image(unwrap_extended_json(before)),
+        _seg.dump_image(unwrap_extended_json(after)),
         token if token is not None else f"?:{seq}",
     )
 

@@ -38,7 +38,6 @@ drain, SCD2/materialize) runs unchanged on raw-WAL input.
 
 from __future__ import annotations
 
-import json
 import os
 import struct
 from dataclasses import dataclass
@@ -359,11 +358,6 @@ class PgOutputDecoder:
         return out
 
     def _row(self, rel: RelationInfo, op: str, before: dict | None, after: dict | None):
-        dump = lambda v: (
-            None
-            if v is None
-            else json.dumps(v, separators=(",", ":"), sort_keys=True)
-        )
         self.seq += 1
         return (
             op,
@@ -372,8 +366,8 @@ class PgOutputDecoder:
             rel.namespace,
             rel.name,
             self.txn_lsn,
-            dump(before),
-            dump(after),
+            _seg.dump_image(before),
+            _seg.dump_image(after),
             f"{self.txn_lsn}:{self.seq}",
         )
 

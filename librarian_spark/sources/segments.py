@@ -22,6 +22,7 @@ while draining backlog.
 
 from __future__ import annotations
 
+import json
 import os
 from dataclasses import dataclass
 
@@ -32,11 +33,20 @@ from pyspark.sql.datasource import (
 )
 
 __all__ = [
+    "dump_image",
     "segment_files",
     "SegmentPartition",
     "SegmentBatchReader",
     "SegmentStreamReader",
 ]
+
+
+def dump_image(v) -> str | None:
+    """A before/after row image as JSON text the way Go marshals a
+    ``map[string]interface{}`` (sorted keys, no whitespace —
+    `internal/integrations/kafka/repository.go:143`); no image stays
+    ``None``."""
+    return None if v is None else json.dumps(v, separators=(",", ":"), sort_keys=True)
 
 
 def segment_files(path: str, exts: tuple[str, ...]) -> list[str]:

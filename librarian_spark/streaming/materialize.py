@@ -129,6 +129,59 @@ def _prune_versions(state_dir: str, latest: int, keep: int) -> None:
             shutil.rmtree(os.path.join(state_dir, f"v={v}"), ignore_errors=True)
 
 
+def _commit_version(
+    state_dir: str, batch_id: int, merged: DataFrame, keep: int
+) -> None:
+    """Write ``merged`` as ``v=<batch_id>``, then advance the pointer and
+    prune old versions — the pointer moves only after a complete write."""
+    merged.write.mode("overwrite").parquet(os.path.join(state_dir, f"v={batch_id}"))
+    _advance_pointer(state_dir, batch_id)
+    _prune_versions(state_dir, batch_id, keep)
+
+
+def _read_latest(
+    spark: SparkSession, state_dir: str, declared: StructType
+) -> DataFrame:
+    """The latest committed version (empty with ``declared`` if none), with
+    every declared column present.
+
+    Additive schema evolution: a restart with a WIDENED DDL (the change
+    stream grew a column — the standard Debezium source-DDL scenario) must
+    still read state written under the old layout. Missing columns backfill
+    as typed NULLs — exactly what those rows' source events carried — and
+    the next commit rewrites state in the new layout. Columns no longer
+    declared are dropped by the caller's select."""
+    v = _latest_version(state_dir)
+    if v is None:
+        return spark.createDataFrame([], declared)
+    df = spark.read.parquet(os.path.join(state_dir, f"v={v}"))
+    for f_ in declared.fields:
+        if f_.name not in df.columns:
+            df = df.withColumn(f_.name, F.lit(None).cast(f_.dataType))
+    return df
+
+
+def _start_versioned_sink(
+    envelope_stream: DataFrame, cfg, apply_batch
+) -> StreamingQuery:
+    """Start the ``foreachBatch`` query of a versioned-state sink: ``cfg``
+    carries ``state_dir``, ``checkpoint_dir`` and ``trigger``, and
+    ``apply_batch(spark, cfg, batch_df, batch_id)`` merges one batch."""
+    os.makedirs(cfg.state_dir, exist_ok=True)
+    # each batch plans on its OWN session — the one the query cloned at
+    # start, so the batch keeps the width the query started with
+    writer = (
+        envelope_stream.writeStream.foreachBatch(
+            lambda bdf, bid: apply_batch(bdf.sparkSession, cfg, bdf, bid)
+        )
+        .option("checkpointLocation", cfg.checkpoint_dir)
+        .outputMode("update")
+    )
+    if cfg.trigger:
+        writer = writer.trigger(**cfg.trigger)
+    return writer.start()
+
+
 def read_state(spark: SparkSession, cfg: MaterializeConfig) -> DataFrame:
     """Current materialized table (empty with the declared schema if none).
     Internal order-tracking columns are stripped; use ``_read_state_raw`` in
@@ -141,28 +194,15 @@ def _read_state_raw(spark: SparkSession, cfg: MaterializeConfig) -> DataFrame:
     """State WITH the per-row order watermark columns the merge needs.
     Rows written by a pre-watermark layout get LONG_MIN (any event beats
     them — the old last-batch-wins behavior, but only for those rows)."""
-    declared = _schema(cfg.row_ddl).fields
-    v = _latest_version(cfg.state_dir)
-    if v is None:
-        df = spark.createDataFrame([], _schema(cfg.row_ddl))
-    else:
-        df = spark.read.parquet(os.path.join(cfg.state_dir, f"v={v}"))
-    # additive schema evolution: a restart with a WIDENED row_ddl (the change
-    # stream grew a column — the standard Debezium source-DDL scenario) must
-    # still read state written under the old layout. Missing payload columns
-    # backfill as typed NULLs — exactly what those rows' source events
-    # carried — and the next commit rewrites state in the new layout. Column
-    # REMOVAL needs no handling: the merge selects only declared columns.
-    for f_ in declared:
-        if f_.name not in df.columns:
-            df = df.withColumn(f_.name, F.lit(None).cast(f_.dataType))
+    declared = _schema(cfg.row_ddl)
+    df = _read_latest(spark, cfg.state_dir, declared)
     lo = -(1 << 63)
     for c in ("_ts_ms_", "_ordc_"):
         if c not in df.columns:
             df = df.withColumn(c, F.lit(lo).cast("long"))
     # dropped columns (a NARROWED row_ddl) disappear here too — state always
     # reads in exactly the declared layout
-    return df.select(*[f_.name for f_ in declared], "_ts_ms_", "_ordc_")
+    return df.select(*declared.names, "_ts_ms_", "_ordc_")
 
 
 def _apply_batch(
@@ -224,10 +264,7 @@ def _apply_batch(
         F.col("w._ts_ms_").alias("_ts_ms_"),
         F.col("w._ordc_").alias("_ordc_"),
     )
-    out = os.path.join(cfg.state_dir, f"v={batch_id}")
-    merged.write.mode("overwrite").parquet(out)
-    _advance_pointer(cfg.state_dir, batch_id)
-    _prune_versions(cfg.state_dir, batch_id, cfg.keep_versions)
+    _commit_version(cfg.state_dir, batch_id, merged, cfg.keep_versions)
 
 
 def materialize(
@@ -235,16 +272,4 @@ def materialize(
 ) -> StreamingQuery:
     """Start the materialization query over a PARSED envelope stream (the
     output of :func:`librarian_spark.streaming.envelope.parse_envelope`)."""
-    os.makedirs(cfg.state_dir, exist_ok=True)
-    # each batch plans on its OWN session — the one the query cloned at
-    # start, so the batch keeps the width the query started with
-    writer = (
-        envelope_stream.writeStream.foreachBatch(
-            lambda bdf, bid: _apply_batch(bdf.sparkSession, cfg, bdf, bid)
-        )
-        .option("checkpointLocation", cfg.checkpoint_dir)
-        .outputMode("update")
-    )
-    if cfg.trigger:
-        writer = writer.trigger(**cfg.trigger)
-    return writer.start()
+    return _start_versioned_sink(envelope_stream, cfg, _apply_batch)

@@ -31,7 +31,6 @@ dimension swap step 4 for a transactional-format MERGE keyed on
 
 from __future__ import annotations
 
-import os
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -40,11 +39,11 @@ from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.window import Window as W
 
 from librarian_spark.streaming.materialize import (
-    _advance_pointer,
     _already_applied,
-    _latest_version,
-    _prune_versions,
+    _commit_version,
+    _read_latest,
     _schema,
+    _start_versioned_sink,
 )
 
 __all__ = ["SCD2Config", "scd2_materialize", "read_history"]
@@ -77,14 +76,7 @@ def read_history(spark: SparkSession, cfg: SCD2Config) -> DataFrame:
     dropped — so a restart after the change stream grew (or shed) a column
     keeps merging, and the next commit rewrites state in the new layout."""
     declared = _schema(cfg.history_ddl())
-    v = _latest_version(cfg.state_dir)
-    if v is None:
-        return spark.createDataFrame([], declared)
-    df = spark.read.parquet(os.path.join(cfg.state_dir, f"v={v}"))
-    for f_ in declared.fields:
-        if f_.name not in df.columns:
-            df = df.withColumn(f_.name, F.lit(None).cast(f_.dataType))
-    return df.select(*declared.names)
+    return _read_latest(spark, cfg.state_dir, declared).select(*declared.names)
 
 
 def _apply_batch(
@@ -183,10 +175,7 @@ def _apply_batch(
         .unionByName(untouched_cur)
         .unionByName(new_rows)
     )
-    out = os.path.join(cfg.state_dir, f"v={batch_id}")
-    merged.write.mode("overwrite").parquet(out)
-    _advance_pointer(cfg.state_dir, batch_id)
-    _prune_versions(cfg.state_dir, batch_id, cfg.keep_versions)
+    _commit_version(cfg.state_dir, batch_id, merged, cfg.keep_versions)
 
 
 def scd2_materialize(
@@ -194,16 +183,4 @@ def scd2_materialize(
 ) -> StreamingQuery:
     """Start SCD2 materialization over a PARSED envelope stream (the output
     of :func:`librarian_spark.streaming.envelope.parse_envelope`)."""
-    os.makedirs(cfg.state_dir, exist_ok=True)
-    # each batch plans on its OWN session — the one the query cloned at
-    # start, so the batch keeps the width the query started with
-    writer = (
-        envelope_stream.writeStream.foreachBatch(
-            lambda bdf, bid: _apply_batch(bdf.sparkSession, cfg, bdf, bid)
-        )
-        .option("checkpointLocation", cfg.checkpoint_dir)
-        .outputMode("update")
-    )
-    if cfg.trigger:
-        writer = writer.trigger(**cfg.trigger)
-    return writer.start()
+    return _start_versioned_sink(envelope_stream, cfg, _apply_batch)

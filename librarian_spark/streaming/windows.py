@@ -12,8 +12,8 @@ Structured Streaming primitives:
 - S14 late-data policy: rows older than watermark are dropped by the engine;
   window results finalize (append mode) once the watermark passes window end.
 
-State-at-scale note: with multi-TB state, set
-``spark.sql.streaming.stateStore.providerClass`` to the RocksDB provider and
+State-at-scale note: with multi-TB state, apply
+``librarian_spark.session.ROCKSDB_STATE_CONFS`` before starting the query and
 size ``spark.sql.shuffle.partitions`` to spread state; all operators here key
 their state by (window/user) so state partitioning follows the shuffle key.
 """
@@ -201,26 +201,3 @@ def stream_stream_join(
         F.col("e.event_id").alias("error_id"),
         F.col("e.ts").alias("error_ts"),
     )
-
-
-ROCKSDB_PROVIDER = (
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-)
-
-
-def rocksdb_state_conf(changelog_checkpointing: bool = True) -> dict[str, str]:
-    """Session conf for RocksDB-backed streaming state — REQUIRED once state
-    outgrows executor heap (the default HDFS-backed provider keeps every key
-    in JVM memory; RocksDB spills to local SSD and snapshots to the
-    checkpoint). Changelog checkpointing uploads per-batch deltas instead of
-    full snapshots — the difference between O(delta) and O(state) checkpoint
-    traffic on a multi-TB dedup/session store. Apply with
-    ``for k, v in rocksdb_state_conf().items(): spark.conf.set(k, v)``
-    before starting the query (per-query, not cluster-wide).
-    """
-    conf = {"spark.sql.streaming.stateStore.providerClass": ROCKSDB_PROVIDER}
-    if changelog_checkpointing:
-        conf[
-            "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
-        ] = "true"
-    return conf

@@ -44,9 +44,8 @@ REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
 
 from librarian_spark import measure  # noqa: E402
-from librarian_spark.operators import registry as _reg  # noqa: E402
-from librarian_spark.operators.registry import load_all  # noqa: E402
-from librarian_spark.session import get_spark  # noqa: E402
+from librarian_spark.operators.registry import load_all, tune_session  # noqa: E402
+from librarian_spark.session import SESSION_CONFS, get_spark  # noqa: E402
 
 
 def parse_py_b(spec: str) -> list[tuple[str, str, object]]:
@@ -108,8 +107,9 @@ def main() -> None:
     spark = get_spark(app_name="librarian-spark-opt-ab")
     # defaults for arm A, captured from the session AFTER tune_session so the
     # reset between arms restores exactly what arm A ran with
-    _reg.tune_session(spark)
+    tune_session(spark)
     base_vals = {k: spark.conf.get(k, None) for k in conf_b}
+    profile_a = dict(SESSION_CONFS)
     scratch_b = os.environ.get("OPT_SCRATCH_B") or None
     from librarian_spark import scratch as _scratch
 
@@ -136,12 +136,12 @@ def main() -> None:
             _scratch._ROOT = scratch_b if arm == "B" else scratch_a
         for mod, attr, a_val, b_val in py_b:
             setattr(mod, attr, b_val if arm == "B" else a_val)
-        # tune_session must not undo the arm's confs mid-query
+        # tune_session must not undo the arm's confs mid-query; arm A gets
+        # the whole profile back, including keys that conf_b overrides
+        SESSION_CONFS.clear()
+        SESSION_CONFS.update(profile_a)
         if arm == "B":
-            _reg._CALLER_SESSION_CONF.update(conf_b)
-        else:
-            for k in conf_b:
-                _reg._CALLER_SESSION_CONF.pop(k, None)
+            SESSION_CONFS.update(conf_b)
 
     measure.warm_up(spark, sf_dir)
     samples: dict[str, dict[str, list[float]]] = {

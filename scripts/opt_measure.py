@@ -28,10 +28,9 @@ REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
 
 from librarian_spark import measure  # noqa: E402
-from librarian_spark.operators import registry as _reg  # noqa: E402
-from librarian_spark.operators.registry import load_all  # noqa: E402
+from librarian_spark.operators.registry import load_all, tune_session  # noqa: E402
 from librarian_spark.plans.introspect import formatted_plan  # noqa: E402
-from librarian_spark.session import get_spark  # noqa: E402
+from librarian_spark.session import SESSION_CONFS, get_spark  # noqa: E402
 
 
 def main() -> None:
@@ -57,12 +56,8 @@ def main() -> None:
     spark = get_spark(app_name="librarian-spark-opt-measure", extra_conf=extra)
     # runtime-settable confs must also be (re)applied when the JVM session
     # already exists, and survive tune_session re-application per query
-    _reg._CALLER_SESSION_CONF.update(extra)
-    for k, v in extra.items():
-        try:
-            spark.conf.set(k, v)
-        except Exception:  # noqa: BLE001
-            pass
+    SESSION_CONFS.update(extra)
+    tune_session(spark)
     plans_dir = REPO / "plans" / os.environ.get("OPT_PLANS_DIR", "r12")
     plans_dir.mkdir(parents=True, exist_ok=True)
 

@@ -595,15 +595,13 @@ def test_stateful_dedup_on_rocksdb_state_store(spark, events_stream_dir, tmp_pat
     """The RocksDB state-store provider (the multi-TB state path the windows
     module documents) must actually run in this build: same dedup results as
     the default provider."""
-    from librarian_spark.streaming.windows import (
-        dedup_within_watermark,
-        rocksdb_state_conf,
-    )
+    from librarian_spark.session import ROCKSDB_STATE_CONFS
+    from librarian_spark.streaming.windows import dedup_within_watermark
 
     prev = {
-        k: spark.conf.get(k, None) for k in rocksdb_state_conf()
+        k: spark.conf.get(k, None) for k in ROCKSDB_STATE_CONFS
     }
-    for k, v in rocksdb_state_conf().items():
+    for k, v in ROCKSDB_STATE_CONFS.items():
         spark.conf.set(k, v)
     try:
         stream = _stream_events(spark, events_stream_dir, ["batch1", "batch2"])

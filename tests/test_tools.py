@@ -558,8 +558,39 @@ def test_compact_crash_recovery(spark, tmp_path, sf_dir):
     assert not report["compacted"]
 
 
+def test_get_spark_session_reads_every_session_conf():
+    from librarian_spark.session import SESSION_CONFS, get_spark
+
+    spark = get_spark(app_name="librarian-spark-tests")
+    assert {k: spark.conf.get(k) for k in SESSION_CONFS} == SESSION_CONFS
+
+
+def test_tune_session_restores_every_session_conf(spark):
+    """A caller's session that starts with every profile key at another
+    value reads the whole profile back after tune_session."""
+    from librarian_spark.operators.registry import tune_session
+    from librarian_spark.session import SESSION_CONFS
+
+    width = int(SESSION_CONFS["spark.sql.shuffle.partitions"])
+    other = {
+        "spark.sql.session.timeZone": "America/Los_Angeles",
+        "spark.sql.shuffle.partitions": str(width + 1),
+        "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold": "32MB",
+    }
+    caller = spark.newSession()
+    for k, v in SESSION_CONFS.items():
+        caller.conf.set(k, {"true": "false", "false": "true"}.get(v) or other[k])
+        assert caller.conf.get(k) != v
+    tune_session(caller)
+    assert {k: caller.conf.get(k) for k in SESSION_CONFS} == SESSION_CONFS
+
+
 def test_cluster_profile_sizing_rules():
-    from librarian_spark.session import cluster_profile
+    from librarian_spark.session import (
+        ROCKSDB_STATE_CONFS,
+        SESSION_CONFS,
+        cluster_profile,
+    )
 
     # small cluster: the 200 floor holds and broadcast scales with heap
     small = cluster_profile(64, executor_mem_gb=8)
@@ -575,6 +606,15 @@ def test_cluster_profile_sizing_rules():
     # the profile carries the same correctness-critical confs as get_spark
     assert big["spark.sql.session.timeZone"] == "UTC"
     assert big["spark.sql.parquet.inferTimestampNTZ.enabled"] == "false"
+    # ... and the whole session profile (with its own shuffle width) plus
+    # the RocksDB state store
+    for prof in (small, big):
+        width = prof["spark.sql.shuffle.partitions"]
+        assert {k: prof[k] for k in SESSION_CONFS} == {
+            **SESSION_CONFS,
+            "spark.sql.shuffle.partitions": width,
+        }
+        assert {k: prof[k] for k in ROCKSDB_STATE_CONFS} == ROCKSDB_STATE_CONFS
 
 
 def test_cli_explain_reports_plan(capsys):
