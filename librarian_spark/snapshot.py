@@ -10,8 +10,8 @@ distributed job — ``source DataFrame → spark.sql(query) → df.write.parquet
 ``maxRecordsPerFile`` standing in for the reference's row-batched file splitting
 (`internal/parquet/preserver.go:79-83`). The count pre-scan and processed-count
 parity check are preserved because they're the catalog contract, but the processed
-count is read from the committed files' parquet footers (metadata-only) rather than
-re-scanning data.
+count is an ``Observation`` on the written frame — counted by the write itself,
+not by reading the output back.
 
 Scale notes:
 - The query runs through Catalyst: projection pruning + predicate pushdown reach
@@ -29,7 +29,7 @@ import json
 import os
 import uuid as _uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from librarian_spark.catalog import CatalogRecord, write_catalog
@@ -112,10 +112,14 @@ class Snapshotter:
     def write(self, df: DataFrame, out_path: str) -> int:
         """Distributed parquet overwrite of ``out_path``; returns the number
         of rows committed."""
-        self._writer(df, "overwrite").parquet(out_path)
-        # processed count from committed parquet footers (metadata-only scan —
-        # no data re-read), standing in for the reference's per-row counter.
-        return self.spark.read.parquet(out_path).count()
+        # processed count from an Observation on the written frame, standing
+        # in for the reference's per-row counter: the write itself counts, no
+        # re-read of the output. The observe sits above any ORDER BY sort,
+        # whose range-bounds sampler re-runs the sort's child.
+        obs = Observation("snapshot_write")
+        observed = df.observe(obs, F.count(F.lit(1)).alias("n"))
+        self._writer(observed, "overwrite").parquet(out_path)
+        return obs.get["n"]
 
     # -- incremental high-watermark state ---------------------------------
     def _load_watermark(self, out_path: str) -> dict | None:

@@ -72,26 +72,30 @@ _TRANSACTION_SCHEMA = T.StructType(
     ]
 )
 
+
+def _envelope_schema(row: T.DataType) -> T.StructType:
+    """The envelope with ``before``/``after`` typed as ``row``."""
+    payload = T.StructType(
+        [
+            T.StructField("before", row),
+            T.StructField("after", row),
+            T.StructField("source", SOURCE_SCHEMA),
+            T.StructField("op", T.StringType()),
+            T.StructField("ts_ms", T.LongType()),
+            T.StructField("transaction", _TRANSACTION_SCHEMA),
+        ]
+    )
+    return T.StructType([T.StructField("payload", payload)])
+
+
 # before/after stay schemaless (MapType) at the envelope level, matching the
 # reference's map[string]interface{} (`event.go:31-32`); values arrive as their
 # JSON text. Typed views are a downstream `from_json` with the table's schema.
-ENVELOPE_SCHEMA = T.StructType(
-    [
-        T.StructField(
-            "payload",
-            T.StructType(
-                [
-                    T.StructField("before", T.MapType(T.StringType(), T.StringType())),
-                    T.StructField("after", T.MapType(T.StringType(), T.StringType())),
-                    T.StructField("source", SOURCE_SCHEMA),
-                    T.StructField("op", T.StringType()),
-                    T.StructField("ts_ms", T.LongType()),
-                    T.StructField("transaction", _TRANSACTION_SCHEMA),
-                ]
-            ),
-        )
-    ]
-)
+_ROW_MAP = T.MapType(T.StringType(), T.StringType())
+ENVELOPE_SCHEMA = _envelope_schema(_ROW_MAP)
+# the parse schema: for a StringType field Spark's JSON reader keeps the
+# object's JSON text — the same text get_json_object returns
+_PARSE_SCHEMA = _envelope_schema(T.StringType())
 
 
 def _json_str(col: Column) -> Column:
@@ -203,9 +207,13 @@ def parse_envelope(df: DataFrame, value_col: str = "value") -> DataFrame:
     Emits flattened columns (op, ts_ms, db, schema_name, table, lsn, before,
     after) plus the verbatim ``before_json``/``after_json`` text so egress can
     re-emit byte-identically.
+
+    ``value`` is parsed once: ``before_json``/``after_json`` come from that
+    parse, and the ``before``/``after`` maps are ``from_json`` over them, so
+    the optimizer drops the map parses when no caller selects the maps.
     """
     c = F.col(value_col).cast("string")
-    parsed = df.withColumn("_env", F.from_json(c, ENVELOPE_SCHEMA))
+    parsed = df.withColumn("_env", F.from_json(c, _PARSE_SCHEMA))
     return parsed.select(
         df["*"],
         F.col("_env.payload.op").alias("op"),
@@ -214,10 +222,10 @@ def parse_envelope(df: DataFrame, value_col: str = "value") -> DataFrame:
         F.col("_env.payload.source.schema").alias("schema_name"),
         F.col("_env.payload.source.table").alias("table"),
         F.col("_env.payload.source.lsn").alias("lsn"),
-        F.col("_env.payload.before").alias("before"),
-        F.col("_env.payload.after").alias("after"),
-        F.get_json_object(c, "$.payload.before").alias("before_json"),
-        F.get_json_object(c, "$.payload.after").alias("after_json"),
+        F.from_json("_env.payload.before", _ROW_MAP).alias("before"),
+        F.from_json("_env.payload.after", _ROW_MAP).alias("after"),
+        F.col("_env.payload.before").alias("before_json"),
+        F.col("_env.payload.after").alias("after_json"),
     ).drop("_env")
 
 

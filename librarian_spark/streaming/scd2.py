@@ -75,8 +75,7 @@ def read_history(spark: SparkSession, cfg: SCD2Config) -> DataFrame:
     versions' source events carried), and columns no longer declared are
     dropped — so a restart after the change stream grew (or shed) a column
     keeps merging, and the next commit rewrites state in the new layout."""
-    declared = _schema(cfg.history_ddl())
-    return _read_latest(spark, cfg.state_dir, declared).select(*declared.names)
+    return _read_latest(spark, cfg.state_dir, _schema(cfg.history_ddl()))
 
 
 def _apply_batch(

@@ -177,6 +177,59 @@ def test_envelope_parse_roundtrip(spark):
     assert r.before is None and r.before_json is None
 
 
+def test_envelope_parse_json_text_matches_get_json_object(spark):
+    """``before_json``/``after_json`` come from the one envelope parse; they
+    must be byte-identical to ``get_json_object`` over the raw value, and the
+    ``before``/``after`` maps must equal a map-typed parse of the value."""
+    from pyspark.sql import types as T
+
+    from librarian_spark.streaming.envelope import ENVELOPE_SCHEMA
+
+    lines = [
+        # numbers Jackson re-renders: trailing zero, exponent, negative zero
+        '{"payload":{"before":null,"after":{"a":1.50,"b":1e3,"c":-0.0},'
+        '"op":"c","ts_ms":1}}',
+        # \u escapes, escaped quotes and slashes, whitespace between tokens
+        '{"payload":{"before":{"s": "\\u00e9t\\u00e9", "q":"a\\"b\\/c"} ,'
+        '"after":{"s":"caf\\u00e9"},"op":"u","ts_ms":2}}',
+        # nested arrays and objects
+        '{"payload":{"before":{"n":[1,[2,{"x":null}],{"y":[true,false]}]},'
+        '"after":{"o":{"p":{"q":[]}},"e":{}},"op":"u","ts_ms":3}}',
+        # a null before, a missing after
+        '{"payload":{"before":null,"op":"d","ts_ms":4}}',
+        '{"payload":{"before":{"k":1},"op":"d","ts_ms":5}}',
+        # non-object images and an empty payload
+        '{"payload":{"before":"text","after":[1,2]}}',
+        '{"payload":{}}',
+        # malformed lines
+        "not json",
+        '{"payload":{"before":{"k":1},"after":{"k":',
+        "",
+    ]
+    raw = spark.createDataFrame([(i, v) for i, v in enumerate(lines)], "i int, value string")
+    got = parse_envelope(raw, "value").select(
+        "i", "before_json", "after_json", "before", "after"
+    )
+    ref_schema = T.StructType(
+        [T.StructField("payload", ENVELOPE_SCHEMA["payload"].dataType)]
+    )
+    env = F.from_json("value", ref_schema)
+    want = raw.select(
+        "i",
+        F.get_json_object("value", "$.payload.before").alias("before_json"),
+        F.get_json_object("value", "$.payload.after").alias("after_json"),
+        env["payload"]["before"].alias("before"),
+        env["payload"]["after"].alias("after"),
+    )
+    got_rows = sorted(got.collect())
+    assert got_rows == sorted(want.collect())
+    by_i = {r.i: r for r in got_rows}
+    assert by_i[0].after_json == '{"a":1.5,"b":1000.0,"c":-0.0}'
+    assert by_i[1].after == {"s": "café"}
+    assert by_i[3].before_json is None and by_i[3].after_json is None
+    assert all(by_i[i].before_json is None for i in (7, 8, 9))
+
+
 def test_kafka_key_shape(spark):
     df = spark.range(1).select(
         kafka_key(F.lit("db"), F.lit("public"), F.lit("users")).alias("key")
@@ -933,6 +986,142 @@ def test_materialize_stale_redelivery_does_not_regress_state(spark, tmp_path, sf
     assert vals == {200.0}
     # internal order columns never leak to readers
     assert set(read_state(spark, cfg).columns) == {"o_orderkey", "o_totalprice"}
+
+
+_LONG_MIN = -(1 << 63)
+
+
+def _mat_batch(spark, events):
+    """Parsed envelope batch of ``events``: (op, key, value, ts_ms, lsn);
+    deletes carry only the key in ``before``."""
+    def line(op, k, v, ts, lsn):
+        row = {"k": k, "v": v}
+        payload = {
+            "before": {"k": k} if op == "d" else None,
+            "after": None if op == "d" else row,
+            "source": {"lsn": lsn},
+            "op": op,
+            "ts_ms": ts,
+        }
+        return (json.dumps({"payload": payload}),)
+
+    raw = spark.createDataFrame([line(*e) for e in events], "value string")
+    return parse_envelope(raw, "value")
+
+
+def _mat_replay(state, events):
+    """The merge in Python: per key, the max by (ts_ms, lsn) — NULL below
+    every value, as in Spark's struct order — over the stored row (an
+    upsert at its watermark) and the batch's events; a delete winner drops
+    the key."""
+    def order(ts, lsn):
+        return (ts is not None, ts or 0, lsn is not None, lsn or 0)
+
+    cands = {k: [("u", v, ts, lsn)] for k, (v, ts, lsn) in state.items()}
+    for op, k, v, ts, lsn in events:
+        cands.setdefault(k, []).append((op, v, ts, lsn))
+    out = {}
+    for k, cs in cands.items():
+        op, v, ts, lsn = max(cs, key=lambda c: order(c[2], c[3]))
+        if op != "d":
+            out[k] = (v, ts, lsn)
+    return out
+
+
+def _mat_stored(spark, cfg):
+    from librarian_spark.streaming.materialize import _latest_version
+
+    path = os.path.join(cfg.state_dir, f"v={_latest_version(cfg.state_dir)}")
+    return {
+        r.k: (r.v, r._ts_ms_, r._ordc_) for r in spark.read.parquet(path).collect()
+    }
+
+
+#: batches 1 and 2 of the replay test, over a legacy state of keys 1-8
+_MAT_BATCHES = [
+    [
+        ("u", 1, "a1", 10, 1),  # beats a legacy row
+        ("d", 2, None, 10, 2),  # delete and re-create in one batch
+        ("c", 2, "re2", 11, 3),
+        ("u", 3, "n3", None, 4),  # NULL ts_ms loses to a legacy row
+        ("d", 4, None, 5, 5),  # delete of a legacy key
+        ("d", 9, None, 12, 6),  # delete of an absent key
+        ("c", 10, "n10", None, 7),  # new key stored with a NULL ts_ms
+        ("u", 5, "b5", 20, 8),
+    ],
+    [
+        ("u", 5, "stale5", 15, 9),  # stale re-delivery
+        ("u", 1, "a1", 10, 1),  # duplicate re-delivery of the stored event
+        ("u", 10, "n10b", None, 11),  # beats the stored NULL ts_ms by lsn
+        ("c", 4, "re4", 1, 12),  # no tombstone: an older event reinserts
+        ("d", 2, None, 30, 13),
+        ("c", 2, "re2b", 30, 14),
+        ("d", 6, None, 40, 15),  # delete beats an older update
+        ("u", 6, "x6", 35, 16),
+        ("d", 11, None, 50, 17),
+    ],
+]
+
+
+def _mat_legacy_state(spark, tmp_path):
+    """A state dir at version 0 in the pre-watermark layout (no
+    ``_ts_ms_``/``_ordc_`` columns), with its Python image."""
+    from librarian_spark.streaming.materialize import MaterializeConfig
+
+    cfg = MaterializeConfig(
+        state_dir=str(tmp_path / "one_merge_state"),
+        checkpoint_dir=str(tmp_path / "one_merge_ckpt"),
+        key_cols=["k"],
+        row_ddl="k long, v string",
+    )
+    legacy = {k: (f"old{k}", _LONG_MIN, _LONG_MIN) for k in range(1, 9)}
+    spark.createDataFrame(
+        [(k, v) for k, (v, _, _) in legacy.items()], "k long, v string"
+    ).coalesce(1).write.parquet(os.path.join(cfg.state_dir, "v=0"))
+    with open(os.path.join(cfg.state_dir, "_LATEST"), "w") as fh:
+        fh.write("0")
+    return cfg, legacy
+
+
+def test_materialize_one_merge_matches_python_replay(spark, tmp_path):
+    """Delete + re-create in one batch, stale and duplicate re-deliveries,
+    deletes of absent keys, NULL ts_ms and a legacy (pre-watermark) state:
+    after each batch, state and watermarks equal the Python replay."""
+    from librarian_spark.streaming.materialize import _apply_batch, read_state
+
+    cfg, want = _mat_legacy_state(spark, tmp_path)
+    for bid, events in enumerate(_MAT_BATCHES, start=1):
+        _apply_batch(spark, cfg, _mat_batch(spark, events), bid)
+        want = _mat_replay(want, events)
+        assert _mat_stored(spark, cfg) == want, f"batch {bid}"
+    assert {(r.k, r.v) for r in read_state(spark, cfg).collect()} == {
+        (k, v) for k, (v, _, _) in want.items()
+    }
+
+
+def test_materialize_batch_runs_two_jobs(spark, tmp_path):
+    """A batch merged into a non-empty state runs at most 2 Spark jobs: the
+    map stage (events parsed, state scanned, no schema inference) and the
+    merge write. Jobs are read from the status store as ``measure`` reads
+    them."""
+    import time as _time
+
+    from librarian_spark import measure
+    from librarian_spark.streaming.materialize import _apply_batch
+
+    cfg, _ = _mat_legacy_state(spark, tmp_path)
+    _apply_batch(spark, cfg, _mat_batch(spark, _MAT_BATCHES[0]), 1)
+    batch = _mat_batch(spark, _MAT_BATCHES[1])
+    sc = spark.sparkContext._jsc.sc()
+    bus, store = sc.listenerBus(), sc.statusStore()
+    measure._wait_for_listeners(bus)
+    first_id = measure._last_job_id(store) + 1
+    start_ms = int(_time.time() * 1000)
+    _apply_batch(spark, cfg, batch, 2)
+    end_ms = _time.time() * 1000
+    measure._wait_for_listeners(bus)
+    jobs = measure._jobs(store, first_id, start_ms, end_ms)
+    assert 1 <= len(jobs) <= 2, jobs
 
 
 def test_scd2_rejects_late_event_for_deleted_key(spark, tmp_path, sf_dir):
