@@ -988,9 +988,6 @@ def test_materialize_stale_redelivery_does_not_regress_state(spark, tmp_path, sf
     assert set(read_state(spark, cfg).columns) == {"o_orderkey", "o_totalprice"}
 
 
-_LONG_MIN = -(1 << 63)
-
-
 def _mat_batch(spark, events):
     """Parsed envelope batch of ``events``: (op, key, value, ts_ms, lsn);
     deletes carry only the key in ``before``."""
@@ -1066,7 +1063,7 @@ _MAT_BATCHES = [
 def _mat_legacy_state(spark, tmp_path):
     """A state dir at version 0 in the pre-watermark layout (no
     ``_ts_ms_``/``_ordc_`` columns), with its Python image."""
-    from librarian_spark.streaming.materialize import MaterializeConfig
+    from librarian_spark.streaming.materialize import _LONG_MIN, MaterializeConfig
 
     cfg = MaterializeConfig(
         state_dir=str(tmp_path / "one_merge_state"),
