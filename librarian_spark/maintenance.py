@@ -33,6 +33,8 @@ import time
 
 from pyspark.sql import SparkSession
 
+from librarian_spark.snapshot import delta_prefix, load_watermark
+
 __all__ = ["compact", "dir_stats"]
 
 
@@ -59,22 +61,6 @@ def _partition_subdirs(path: str) -> list[str]:
         and not d.startswith((".", "_"))
         and os.path.isdir(os.path.join(path, d))
     )
-
-
-def _pending_delta_prefix(path: str) -> str | None:
-    """Incremental-snapshot protection: delta files tagged with the CURRENT
-    watermark value belong to a possibly-uncommitted append (the crash window
-    between append and watermark-save); a retry relies on overwriting those
-    exact names, so compaction must leave them untouched."""
-    import hashlib
-    import json as _json
-
-    wm_path = os.path.join(path, "_watermark.json")
-    if not os.path.exists(wm_path):
-        return None
-    with open(wm_path, encoding="utf-8") as fh:
-        wm = _json.load(fh)
-    return "delta-" + hashlib.md5(str(wm["value"]).encode()).hexdigest()[:12]
 
 
 def compact(
@@ -117,11 +103,27 @@ def compact(
     for truly concurrent writers use a transactional table format's rewrite.
     Returns a report dict; no-op when fewer than ``min_files`` files.
     """
+    # delta files of the CURRENT watermark may be an uncommitted append (the
+    # crash window between append and watermark-save) that a retry
+    # overwrites by name: they stay byte-identical. The watermark sidecar
+    # sits at the dataset root and covers the deltas of every leaf.
+    wm = load_watermark(path)
+    protect = delta_prefix(wm) if wm else None
+    return _compact_tree(spark, path, protect, target_file_mb, min_files)
+
+
+def _compact_tree(
+    spark: SparkSession,
+    path: str,
+    protect: str | None,
+    target_file_mb: int,
+    min_files: int,
+) -> dict:
     parts = _partition_subdirs(path)
     if parts:
         reports = [
-            compact(
-                spark, os.path.join(path, p), target_file_mb, min_files
+            _compact_tree(
+                spark, os.path.join(path, p), protect, target_file_mb, min_files
             )
             for p in parts
         ]
@@ -143,7 +145,6 @@ def compact(
             if f.endswith(".parquet") and not f.startswith((".", "_"))
         }
 
-    protect = _pending_delta_prefix(path)
     all_files = _data_files()
     protected = {f for f in all_files if protect and f.startswith(protect)}
     candidates = sorted(all_files - protected)

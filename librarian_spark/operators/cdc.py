@@ -23,7 +23,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from librarian_spark.operators.registry import query
-from librarian_spark.scratch import scratch_root
+from librarian_spark.scratch import cache_dir
 from librarian_spark.sources.batch import load_table as _t
 
 __all__ = ["snapshot_diff", "cdc_snapshot_diff"]
@@ -383,11 +383,9 @@ _PGWAL_TXN = 1000  # rows per recorded transaction/segment
 def cdc_pgoutput_decode(spark: SparkSession, sf: str) -> DataFrame:
     import os
 
-    from librarian_spark.operators.pipeline import _cache_base, _sweep_run_dirs
     from librarian_spark.sources import pgoutput as pg
 
-    base = _cache_base("pgwal", sf, "orders", salt=f"txn{_PGWAL_TXN}-m20-u3-d7-v2")
-    _sweep_run_dirs(scratch_root(), ("librarian_pgwal_",))
+    base = cache_dir("pgwal", sf, "orders", salt=f"txn{_PGWAL_TXN}-m20-u3-d7-v2")
     wal = os.path.join(base, "wal")
     marker = os.path.join(wal, "_READY")
     if not os.path.exists(marker):
@@ -512,11 +510,9 @@ def cdc_mongo_changestream(spark: SparkSession, sf: str) -> DataFrame:
     import json
     import os
 
-    from librarian_spark.operators.pipeline import _cache_base, _sweep_run_dirs
     from librarian_spark.sources import mongo_changestream as mcs
 
-    base = _cache_base("mcs", sf, "customer", salt=f"m{_MCS_MOD}-u3-d7-v1")
-    _sweep_run_dirs(scratch_root(), ("librarian_mcs_",))
+    base = cache_dir("mcs", sf, "customer", salt=f"m{_MCS_MOD}-u3-d7-v1")
     seg_dir = os.path.join(base, "stream")
     marker = os.path.join(seg_dir, "_READY")
     if not os.path.exists(marker):
@@ -642,14 +638,12 @@ _WIRE_SALT = f"txn{_WIRE_TXN}-u3-d5-v1"
 def cdc_wire_replication(spark: SparkSession, sf: str) -> DataFrame:
     import os
 
-    from librarian_spark.operators.pipeline import _cache_base, _sweep_run_dirs
     from librarian_spark.sources import pgoutput as pg
     from librarian_spark.sources.pgrepl_client import ReplicationSlotClient
     from librarian_spark.sources.pgrepl_mock import MockWalSender
     from librarian_spark.sources.recorders import PgWalRecorder
 
-    base = _cache_base("pgwire", sf, "supplier", salt=_WIRE_SALT)
-    _sweep_run_dirs(scratch_root(), ("librarian_pgwire_",))
+    base = cache_dir("pgwire", sf, "supplier", salt=_WIRE_SALT)
     wal = os.path.join(base, "wal")
     if not os.path.exists(wal):
         # build wal + checkpoint in a RUN-PRIVATE staging dir and publish
@@ -906,13 +900,11 @@ def _klog_df(spark: SparkSession, klog: str) -> DataFrame:
 def cdc_kafka_egress(spark: SparkSession, sf: str) -> DataFrame:
     import os
 
-    from librarian_spark.operators.pipeline import _cache_base, _sweep_run_dirs
     from librarian_spark.streaming.envelope import snapshot_as_events
 
     # salt carries the compression knob: a cached klog written before the
     # snappy producer landed would silently bypass the compressed path
-    base = _cache_base("kegress", sf, "supplier", salt="sup-nat-reg-p4-snappy-v2")
-    _sweep_run_dirs(scratch_root(), ("librarian_kegress_",))
+    base = cache_dir("kegress", sf, "supplier", salt="sup-nat-reg-p4-snappy-v2")
     klog = os.path.join(base, "klog")
     if not os.path.exists(klog):
         evs = None
@@ -986,14 +978,11 @@ def cdc_kafka_egress(spark: SparkSession, sf: str) -> DataFrame:
 def cdc_replicate_e2e(spark: SparkSession, sf: str) -> DataFrame:
     import os
 
-    from librarian_spark.operators.pipeline import _cache_base, _sweep_run_dirs
-
     # the salt derives from the wire op's so a replication-semantics bump
     # invalidates this downstream klog together with the wal it reflects
-    base = _cache_base(
+    base = cache_dir(
         "repl_e2e", sf, "supplier", salt=f"{_WIRE_SALT}-kafka-snappy-v2"
     )
-    _sweep_run_dirs(scratch_root(), ("librarian_repl_e2e_",))
     klog = os.path.join(base, "klog")
     if not os.path.exists(klog):
         from librarian_spark.streaming.envelope import snapshot_as_events

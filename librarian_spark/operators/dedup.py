@@ -29,7 +29,7 @@ from pyspark.sql.window import Window as W
 
 from librarian_spark.functions.textfns import o_shingles, shingles_of_tokens, tokens
 from librarian_spark.operators.registry import query
-from librarian_spark.scratch import scratch_root
+from librarian_spark.scratch import cache_dir
 from librarian_spark.operators.similarity import _o_dot, _o_normalize
 from librarian_spark.sources.batch import fan_out
 from librarian_spark.sources.batch import load_table as _t
@@ -1251,28 +1251,10 @@ def ensure_minhash_index(spark: SparkSession, sf: str) -> str:
     built under different constants would silently drop candidate pairs.
     Completion = the writer's _SUCCESS commit marker, not bare existence.
     """
-    import hashlib
-    import os
-
-    src = os.path.join(sf, "documents.parquet")
-    mtime = int(os.path.getmtime(src)) if os.path.exists(src) else 0
     # v3: symlink current-pointer layout (atomic compaction publish);
     # v2 was one-file-per-bucket bands (repartition before partitionBy)
     layout = f"{_IDX_BUCKETS}:{_MINHASH_K}:{_LSH_BANDS}:{_JACCARD_THRESHOLD}:v3"
-    tag = hashlib.md5(f"{sf}:{mtime}:{layout}".encode()).hexdigest()[:10]
-    index_dir = f"{scratch_root()}/librarian_mhidx_{tag}"
-    # keepalive the live index (reads never refresh mtimes), then sweep
-    # orphans — every mtime/layout change (e.g. the v2 bump) strands the
-    # old tag's full band table + sidecar in /tmp otherwise
-    if os.path.isdir(index_dir):
-        try:
-            with open(os.path.join(index_dir, "_keepalive"), "w") as fh:
-                fh.write("")
-        except OSError:
-            pass
-    from librarian_spark.operators.pipeline import _sweep_run_dirs
-
-    _sweep_run_dirs(scratch_root(), ("librarian_mhidx_",))
+    index_dir = cache_dir("mhidx", sf, "documents", salt=layout)
     if not os.path.exists(index_dir + "/features/_SUCCESS"):
         build_minhash_index(spark, sf, index_dir)
     return index_dir
@@ -1372,28 +1354,14 @@ _IDX_ADD_MOD = 3  # doc_id % 3 == 1 plays the newly ingested batch
     "amortized over every probe it speeds up.",
 )
 def dedup_index_add(spark: SparkSession, sf: str) -> DataFrame:
-    import hashlib
-    import os
     import shutil
     import uuid
 
-    src = os.path.join(sf, "documents.parquet")
-    mtime = int(os.path.getmtime(src)) if os.path.exists(src) else 0
     layout = (
         f"{_IDX_BUCKETS}:{_MINHASH_K}:{_LSH_BANDS}:{_JACCARD_THRESHOLD}"
         f":add{_IDX_ADD_MOD}:v2"
     )
-    tag = hashlib.md5(f"{sf}:{mtime}:{layout}".encode()).hexdigest()[:10]
-    index_dir = f"{scratch_root()}/librarian_mhadd_{tag}"
-    if os.path.isdir(index_dir):
-        try:
-            with open(os.path.join(index_dir, "_keepalive"), "w") as fh:
-                fh.write("")
-        except OSError:
-            pass
-    from librarian_spark.operators.pipeline import _sweep_run_dirs
-
-    _sweep_run_dirs(scratch_root(), ("librarian_mhadd_",))
+    index_dir = cache_dir("mhadd", sf, "documents", salt=layout)
     if not os.path.isdir(index_dir):
         staging = f"{index_dir}.staging-{uuid.uuid4().hex[:8]}"
         d = _t(spark, sf, "documents")

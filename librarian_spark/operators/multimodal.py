@@ -26,7 +26,7 @@ from pyspark.sql import types as T
 from pyspark.sql.window import Window as W
 
 from librarian_spark.operators.registry import query
-from librarian_spark.scratch import scratch_root
+from librarian_spark.scratch import cache_dir
 from librarian_spark.sources.batch import fan_out
 from librarian_spark.sources.batch import load_table as _t
 
@@ -1574,17 +1574,13 @@ def ensure_chunk_index(spark: SparkSession, sf: str) -> str:
     distinct (doc_id, chash) rows partitioned on disk by a 64-way hash
     prefix bucket — the content-addressable-store layout, where a probe
     opens only its own buckets' files. Cache identity (mtime+layout tag,
-    keepalive, TTL-sweep safety) delegates to the one _cache_base
-    implementation so the protocol can never fork."""
+    keepalive, TTL sweep) is scratch.cache_dir's."""
     import os
 
-    from librarian_spark.operators.pipeline import _cache_base, _sweep_run_dirs
-
-    index_dir = _cache_base(
+    index_dir = cache_dir(
         "ckidx", sf, "documents",
         salt=f"{_CIDX_BUCKETS}:{_CDC_W}:{_CDC_D}:v1",
     )
-    _sweep_run_dirs(scratch_root(), ("librarian_ckidx_",))
     if not os.path.exists(index_dir + "/chunks/_SUCCESS"):
         ch = cdc_chunk_hashes(
             ingest_binary(spark, sf).select("doc_id", "payload")

@@ -8,7 +8,6 @@ path round-trips values exactly, and the bench tracks snapshot THROUGHPUT
 
 from __future__ import annotations
 
-import hashlib
 import os
 import threading
 import uuid
@@ -18,11 +17,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
 from librarian_spark.operators.registry import query
-from librarian_spark.scratch import scratch_root
+from librarian_spark.scratch import cache_dir, sweep_stale
 
 _SNAP_QUERY = "SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice FROM source"
-
-_RUN_DIR_TTL_S = 1800  # sweep only run dirs older than this
 
 # Shuffle/state width of every drain: streaming state partitioning is FIXED
 # at a query's first run and its file IO is partitions x batches x stores,
@@ -31,54 +28,12 @@ _RUN_DIR_TTL_S = 1800  # sweep only run dirs older than this
 _DRAIN_WIDTH = 8
 
 
-def _sweep_run_dirs(base: str, prefixes: tuple[str, ...]) -> None:
-    """Bounded /tmp: drop PREVIOUS runs' per-run dirs under ``base``.
-
-    Age-scoped: a dir younger than the TTL may belong to a CONCURRENTLY
-    running invocation (pytest and bench on the same sf) — an unconditional
-    sweep would delete that run's live checkpoint or sink mid-drain. Every
-    invocation writes uuid-tagged dirs, so anything whose NEWEST file is
-    older than the TTL is a finished run's leftover and safe to drop.
-    Trade-off: runs within one TTL window accumulate (best-of-N bench = N
-    run footprints for 30 min) — bounded and preferable to deleting a
-    concurrent run's live state.
-    """
-    import shutil
-    import time
-
-    if not os.path.isdir(base):
-        return
-    cutoff = time.time() - _RUN_DIR_TTL_S
-
-    def newest_mtime(path: str) -> float:
-        # a LIVE streaming checkpoint's top-level mtime freezes at creation
-        # (progress lands in offsets/commits/ subdirs), so liveness must be
-        # judged by the newest mtime anywhere under the dir — a drain longer
-        # than the TTL keeps touching files and stays protected
-        newest = os.path.getmtime(path)
-        for root, _dirs, files in os.walk(path):
-            for f in files:
-                try:
-                    newest = max(newest, os.path.getmtime(os.path.join(root, f)))
-                except OSError:
-                    pass
-        return newest
-
-    for d in os.listdir(base):
-        path = os.path.join(base, d)
-        try:
-            if d.startswith(prefixes) and newest_mtime(path) < cutoff:
-                shutil.rmtree(path, ignore_errors=True)
-        except OSError:  # raced with another sweep — someone cleaned it
-            pass
-
-
 def _run_dirs(base: str, *prefixes: str) -> list[str]:
     """Sweep previous runs' ``<prefix>*`` dirs under ``base`` and return one
     fresh ``base/<prefix><run id>`` path per prefix, all under ONE run id —
     the swept prefixes and the allocated names come from the same list, so
     they cannot disagree. Nothing is created on disk."""
-    _sweep_run_dirs(base, prefixes)
+    sweep_stale(base, lambda d: d.startswith(prefixes))
     run_id = uuid.uuid4().hex[:8]
     return [f"{base}/{p}{run_id}" for p in prefixes]
 
@@ -162,28 +117,6 @@ def _user_window_join(
     )
 
 
-def _cache_base(prefix: str, sf: str, table: str, salt: str = "") -> str:
-    """Shared tag-keyed cache dir under /tmp for a (source table, layout
-    constants) identity — the create-once-behind-_SUCCESS input caches.
-
-    Touches a ``_keepalive`` marker whenever the dir already exists: reads
-    never refresh file mtimes, so a cache older than the sweep TTL could be
-    rmtree'd by a CONCURRENT invocation's sweep mid-scan — the keepalive
-    keeps any cache that is still being ENTERED younger than the TTL, which
-    is what the age-scoped sweep actually needs to be safe on shared dirs.
-    """
-    src = os.path.join(sf, f"{table}.parquet")
-    mtime = int(os.path.getmtime(src)) if os.path.exists(src) else 0
-    tag = hashlib.md5(f"{sf}:{mtime}:{salt}".encode()).hexdigest()[:10]
-    base = f"{scratch_root()}/librarian_{prefix}_{tag}"
-    if os.path.isdir(base):
-        try:
-            with open(os.path.join(base, "_keepalive"), "w") as fh:
-                fh.write("")
-        except OSError:
-            pass
-    return base
-
 @query(
     "pipeline_snapshot",
     oracle="SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice FROM orders",
@@ -202,9 +135,7 @@ def pipeline_snapshot(spark: SparkSession, sf: str) -> DataFrame:
     from librarian_spark.snapshot import run_snapshot_config
 
     src = os.path.join(sf, "orders.parquet")
-    mtime = int(os.path.getmtime(src)) if os.path.exists(src) else 0
-    tag = hashlib.md5(f"{sf}:{mtime}".encode()).hexdigest()[:10]
-    out = f"{scratch_root()}/librarian_bench_snapshot_{tag}"
+    out = cache_dir("bench_snapshot", sf, "orders")
     cfg = load_config_str(
         f"""
 name: bench-snapshot
@@ -247,10 +178,7 @@ def pipeline_replicate(spark: SparkSession, sf: str) -> DataFrame:
     from librarian_spark.streaming.envelope import snapshot_as_events
     from librarian_spark.streaming.replicate import ReplicateConfig, Replicator
 
-    src = os.path.join(sf, "orders.parquet")
-    mtime = int(os.path.getmtime(src)) if os.path.exists(src) else 0
-    tag = hashlib.md5(f"{sf}:{mtime}".encode()).hexdigest()[:10]
-    base = f"{scratch_root()}/librarian_bench_cdc_{tag}"
+    base = cache_dir("bench_cdc", sf, "orders")
     in_dir = f"{base}/in"
     # completion marker, not bare existence: an interrupted first write
     # would otherwise poison every later run with partial input
@@ -331,10 +259,7 @@ def pipeline_scd2(spark: SparkSession, sf: str) -> DataFrame:
         scd2_materialize,
     )
 
-    src = os.path.join(sf, "events.parquet")
-    mtime = int(os.path.getmtime(src)) if os.path.exists(src) else 0
-    tag = hashlib.md5(f"{sf}:{mtime}".encode()).hexdigest()[:10]
-    base = f"{scratch_root()}/librarian_bench_scd2_{tag}"
+    base = cache_dir("bench_scd2", sf, "events")
     in_dir = f"{base}/in"
     if not os.path.exists(os.path.join(in_dir, "_SUCCESS")):
         ev = load_table(spark, sf, "events").select(
@@ -411,12 +336,9 @@ def pipeline_dedup_gate(spark: SparkSession, sf: str) -> DataFrame:
 
     index_dir = ensure_minhash_index(spark, sf)
 
-    src = os.path.join(sf, "documents.parquet")
-    mtime = int(os.path.getmtime(src)) if os.path.exists(src) else 0
     # the cached input IS the mod-filtered query split, so the mod is part of
     # the cache identity (same rule as the index layout tags)
-    tag = hashlib.md5(f"{sf}:{mtime}:{_IDX_QUERY_MOD}".encode()).hexdigest()[:10]
-    base = f"{scratch_root()}/librarian_bench_ddgate_{tag}"
+    base = cache_dir("bench_ddgate", sf, "documents", salt=str(_IDX_QUERY_MOD))
     in_dir = f"{base}/in"
     if not os.path.exists(os.path.join(in_dir, "_SUCCESS")):
         (
@@ -481,9 +403,7 @@ def pipeline_compact(spark: SparkSession, sf: str) -> DataFrame:
     from librarian_spark.sources.batch import load_table
 
     src = os.path.join(sf, "orders.parquet")
-    mtime = int(os.path.getmtime(src)) if os.path.exists(src) else 0
-    tag = hashlib.md5(f"{sf}:{mtime}".encode()).hexdigest()[:10]
-    base = f"{scratch_root()}/librarian_bench_compact_{tag}"
+    base = cache_dir("bench_compact", sf, "orders")
     [data] = _run_dirs(base, "run_")
     # fragment count scales with source size (~2 MB fragments, floor 64) so
     # each fragment stays far below the 128 MB compaction target at ANY scale
@@ -523,10 +443,7 @@ def pipeline_csv_snapshot(spark: SparkSession, sf: str) -> DataFrame:
     from librarian_spark.snapshot import run_snapshot_config
     from librarian_spark.sources.batch import load_table
 
-    src = os.path.join(sf, "orders.parquet")
-    mtime = int(os.path.getmtime(src)) if os.path.exists(src) else 0
-    tag = hashlib.md5(f"{sf}:{mtime}".encode()).hexdigest()[:10]
-    base = f"{scratch_root()}/librarian_bench_csvsnap_{tag}"
+    base = cache_dir("bench_csvsnap", sf, "orders")
     csv_dir = f"{base}/csv"
     if not os.path.exists(os.path.join(csv_dir, "_SUCCESS")):
         (
@@ -580,10 +497,7 @@ def pipeline_jsonl_snapshot(spark: SparkSession, sf: str) -> DataFrame:
     from librarian_spark.snapshot import run_snapshot_config
     from librarian_spark.sources.batch import load_table
 
-    src = os.path.join(sf, "events.parquet")
-    mtime = int(os.path.getmtime(src)) if os.path.exists(src) else 0
-    tag = hashlib.md5(f"{sf}:{mtime}".encode()).hexdigest()[:10]
-    base = f"{scratch_root()}/librarian_bench_jsonlsnap_{tag}"
+    base = cache_dir("bench_jsonlsnap", sf, "events")
     jsonl_dir = f"{base}/jsonl"
     if not os.path.exists(os.path.join(jsonl_dir, "_SUCCESS")):
         (
@@ -654,7 +568,7 @@ archiver:
     "incremental, stateful, cross-batch merge reproduces batch semantics "
     "exactly. The watermark delay is sized to the replayed corpus's "
     "disorder (files may interleave time arbitrarily); a live feed would "
-    "use minutes and RocksDB state (cluster_profile) for beyond-heap "
+    "use minutes and RocksDB state (ROCKSDB_STATE_CONFS) for beyond-heap "
     "session state.",
 )
 def pipeline_session_agg(spark: SparkSession, sf: str) -> DataFrame:
@@ -662,10 +576,7 @@ def pipeline_session_agg(spark: SparkSession, sf: str) -> DataFrame:
 
     from librarian_spark.sources.batch import load_table
 
-    src = os.path.join(sf, "events.parquet")
-    mtime = int(os.path.getmtime(src)) if os.path.exists(src) else 0
-    tag = hashlib.md5(f"{sf}:{mtime}:v3".encode()).hexdigest()[:10]
-    base = f"{scratch_root()}/librarian_bench_sessagg_{tag}"
+    base = cache_dir("bench_sessagg", sf, "events", salt="v3")
     in_dir = f"{base}/in"
     # completion marker OWNED BY THIS BUILD, written after the sentinel
     # append: the data write's own _SUCCESS appears before the sentinel
@@ -761,10 +672,7 @@ def pipeline_incremental_snapshot(spark: SparkSession, sf: str) -> DataFrame:
     from librarian_spark.snapshot import run_snapshot_config
     from librarian_spark.sources.batch import load_table
 
-    src = os.path.join(sf, "orders.parquet")
-    mtime = int(os.path.getmtime(src)) if os.path.exists(src) else 0
-    tag = hashlib.md5(f"{sf}:{mtime}:v1".encode()).hexdigest()[:10]
-    base = f"{scratch_root()}/librarian_bench_incsnap_{tag}"
+    base = cache_dir("bench_incsnap", sf, "orders", salt="v1")
     halves = [f"{base}/half1", f"{base}/half2"]
     if not all(os.path.exists(os.path.join(h, "_SUCCESS")) for h in halves):
         o = load_table(spark, sf, "orders").select(
@@ -855,10 +763,7 @@ def pipeline_zorder_cluster(spark: SparkSession, sf: str) -> DataFrame:
     from librarian_spark.maintenance import zorder_write
     from librarian_spark.sources.batch import load_table
 
-    src = os.path.join(sf, "lineitem.parquet")
-    mtime = int(os.path.getmtime(src)) if os.path.exists(src) else 0
-    tag = hashlib.md5(f"{sf}:{mtime}:zv1".encode()).hexdigest()[:10]
-    zdir = f"{scratch_root()}/librarian_bench_zorder_{tag}/z"
+    zdir = cache_dir("bench_zorder", sf, "lineitem", salt="zv1") + "/z"
     if not os.path.exists(os.path.join(zdir, "_SUCCESS")):
         li = load_table(spark, sf, "lineitem").select(
             "l_orderkey", "l_partkey", "l_linenumber", "l_quantity",
@@ -944,10 +849,7 @@ def pipeline_stream_join(spark: SparkSession, sf: str) -> DataFrame:
 
     from librarian_spark.sources.batch import load_table
 
-    src = os.path.join(sf, "events.parquet")
-    mtime = int(os.path.getmtime(src)) if os.path.exists(src) else 0
-    tag = hashlib.md5(f"{sf}:{mtime}:v3".encode()).hexdigest()[:10]
-    base = f"{scratch_root()}/librarian_bench_sjoin_{tag}"
+    base = cache_dir("bench_sjoin", sf, "events", salt="v3")
     in_dir = f"{base}/in"
     if not os.path.exists(os.path.join(in_dir, "_SUCCESS")):
         (
@@ -1020,10 +922,7 @@ def pipeline_partition_backfill(spark: SparkSession, sf: str) -> DataFrame:
 
     from librarian_spark.sources.batch import load_table
 
-    src = os.path.join(sf, "events.parquet")
-    mtime = int(os.path.getmtime(src)) if os.path.exists(src) else 0
-    tag = hashlib.md5(f"{sf}:{mtime}:v1".encode()).hexdigest()[:10]
-    base = f"{scratch_root()}/librarian_bench_backfill_{tag}"
+    base = cache_dir("bench_backfill", sf, "events", salt="v1")
     [out] = _run_dirs(base, "run_")
 
     ev = load_table(spark, sf, "events").select(
@@ -1109,12 +1008,8 @@ def ensure_bucketed_tables(spark: SparkSession, sf: str) -> tuple[str, str, str]
 
     # tag hashes BOTH sources' mtimes — the cached layout contains copies of
     # both tables, so either one regenerating must invalidate it
-    mtimes = ":".join(
-        str(int(os.path.getmtime(p)) if os.path.exists(p) else 0)
-        for p in (os.path.join(sf, "orders.parquet"), os.path.join(sf, "lineitem.parquet"))
-    )
-    tag = hashlib.md5(f"{sf}:{mtimes}:{_BKT_N}".encode()).hexdigest()[:10]
-    base = f"{scratch_root()}/librarian_bucketed_{tag}"
+    base = cache_dir("bucketed", sf, "orders", "lineitem", salt=str(_BKT_N))
+    tag = base.rsplit("_", 1)[1]
     names = {}
     for tbl, key in (("orders", "o_orderkey"), ("lineitem", "l_orderkey")):
         tname = f"lb_bkt_{tbl}_{tag}"
@@ -1227,10 +1122,7 @@ def pipeline_snapshot_stream(spark: SparkSession, sf: str) -> DataFrame:
         read_state,
     )
 
-    src = os.path.join(sf, "events.parquet")
-    mtime = int(os.path.getmtime(src)) if os.path.exists(src) else 0
-    tag = hashlib.md5(f"{sf}:{mtime}:{_SNAPSTREAM_T0}".encode()).hexdigest()[:10]
-    base = f"{scratch_root()}/librarian_bench_snapstream_{tag}"
+    base = cache_dir("bench_snapstream", sf, "events", salt=_SNAPSTREAM_T0)
     in_dir = f"{base}/in"
     # own marker written AFTER both writes: the first write's _SUCCESS must
     # not cache a stream-half-missing input dir (crash between the writes)
@@ -1339,12 +1231,7 @@ def pipeline_cdc_fanout(spark: SparkSession, sf: str) -> DataFrame:
     from librarian_spark.streaming.envelope import snapshot_as_events
     from librarian_spark.streaming.replicate import ReplicateConfig, Replicator
 
-    paths = [os.path.join(sf, f"{t}.parquet") for t in ("orders", "customer")]
-    mtimes = ":".join(
-        str(int(os.path.getmtime(p)) if os.path.exists(p) else 0) for p in paths
-    )
-    tag = hashlib.md5(f"{sf}:{mtimes}".encode()).hexdigest()[:10]
-    base = f"{scratch_root()}/librarian_bench_fanout_{tag}"
+    base = cache_dir("bench_fanout", sf, "orders", "customer")
     in_dir = f"{base}/in"
     marker = os.path.join(base, "_INPUT_READY")
     if not os.path.exists(marker):
@@ -1440,8 +1327,7 @@ def pipeline_quarantine(spark: SparkSession, sf: str) -> DataFrame:
 
     from librarian_spark.sources.batch import load_table
 
-    base = _cache_base("quarantine", sf, "events")
-    _sweep_run_dirs(scratch_root(), ("librarian_quarantine_",))
+    base = cache_dir("quarantine", sf, "events")
     ev = load_table(spark, sf, "events")
     k = F.get_json_object("props", "$.k").cast("long")
     reason = F.when(F.col("value") > 400, F.lit("value_out_of_range")).when(
@@ -1495,8 +1381,7 @@ def pipeline_schema_evolution(spark: SparkSession, sf: str) -> DataFrame:
 
     from librarian_spark.sources.batch import load_table
 
-    base = _cache_base("schevo", sf, "orders")
-    _sweep_run_dirs(scratch_root(), ("librarian_schevo_",))
+    base = cache_dir("schevo", sf, "orders")
     o = load_table(spark, sf, "orders")
     # create-once behind _SUCCESS (the sibling cached-dir pattern): an
     # unconditional rewrite would race a concurrent invocation's mergeSchema
@@ -1552,8 +1437,7 @@ def pipeline_manifest_prune(spark: SparkSession, sf: str) -> DataFrame:
     from librarian_spark.maintenance import footer_file_stats
     from librarian_spark.sources.batch import load_table
 
-    base = _cache_base("mprune", sf, "lineitem", salt="16")
-    _sweep_run_dirs(scratch_root(), ("librarian_mprune_",))
+    base = cache_dir("mprune", sf, "lineitem", salt="16")
     if not os.path.exists(f"{base}/_SUCCESS"):
         load_table(spark, sf, "lineitem").select(
             "l_orderkey", "l_partkey", "l_quantity", "l_extendedprice"
@@ -1609,8 +1493,7 @@ def pipeline_stream_exact_dedup(spark: SparkSession, sf: str) -> DataFrame:
 
     from librarian_spark.sources.batch import load_table
 
-    base = _cache_base("sdedup", sf, "events", salt="replay2")
-    _sweep_run_dirs(scratch_root(), ("librarian_sdedup_",))
+    base = cache_dir("sdedup", sf, "events", salt="replay2")
     # the keepalive above keeps base's TTL warm forever, so per-run dirs
     # inside it must be swept here too (a full parquet copy + checkpoint
     # each) — same discipline as pipeline_checkpoint_restart
@@ -1686,7 +1569,7 @@ def pipeline_vacuum_snapshots(spark: SparkSession, sf: str) -> DataFrame:
 
     from librarian_spark.sources.batch import load_table
 
-    base = _cache_base(
+    base = cache_dir(
         "vacuum", sf, "orders", salt=f"{_VACUUM_GENS}:{_VACUUM_KEEP}"
     )
     [run] = _run_dirs(base, "run_")  # destroyed below: never shared
@@ -1731,7 +1614,7 @@ def pipeline_observed_write(spark: SparkSession, sf: str) -> DataFrame:
 
     from librarian_spark.sources.batch import load_table
 
-    base = _cache_base("obswrite", sf, "orders", salt="observe")
+    base = cache_dir("obswrite", sf, "orders", salt="observe")
     [out] = _run_dirs(base, "run_")  # observation fires per action:
     # the write must actually run, so the sink is run-private, not cached
     o = load_table(spark, sf, "orders").select("o_orderkey", "o_totalprice")
@@ -1783,7 +1666,7 @@ def pipeline_checkpoint_restart(spark: SparkSession, sf: str) -> DataFrame:
 
     from librarian_spark.sources.batch import load_table
 
-    base = _cache_base("ckptrs", sf, "events", salt="ckpt3")
+    base = cache_dir("ckptrs", sf, "events", salt="ckpt3")
     in_dir = f"{base}/in"
     if not os.path.exists(os.path.join(in_dir, "_SUCCESS")):
         load_table(spark, sf, "events").select(
@@ -1878,8 +1761,7 @@ def pipeline_partition_evolution(spark: SparkSession, sf: str) -> DataFrame:
 
     from librarian_spark.sources.batch import load_table
 
-    base = _cache_base("pevo", sf, "events")
-    _sweep_run_dirs(scratch_root(), ("librarian_pevo_",))
+    base = cache_dir("pevo", sf, "events")
     ev = load_table(spark, sf, "events").select(
         "event_id", "ts", "user_id", "event_type", "value"
     )
@@ -1944,8 +1826,7 @@ def pipeline_incremental_mv(spark: SparkSession, sf: str) -> DataFrame:
 
     from librarian_spark.sources.batch import load_table
 
-    base = _cache_base("incmv", sf, "events", salt="mod4")
-    _sweep_run_dirs(scratch_root(), ("librarian_incmv_",))
+    base = cache_dir("incmv", sf, "events", salt="mod4")
     ev = load_table(spark, sf, "events").select(
         "event_id",
         "event_type",
@@ -2017,7 +1898,7 @@ def pipeline_atomic_multi_sink(spark: SparkSession, sf: str) -> DataFrame:
 
     from librarian_spark.sources.batch import load_table
 
-    base = _cache_base("multisink", sf, "orders")
+    base = cache_dir("multisink", sf, "orders")
     run, staging = _run_dirs(base, "run_", ".staging_")  # dot: hidden from Spark
     o = load_table(spark, sf, "orders").select(
         "o_orderstatus",
@@ -2099,8 +1980,7 @@ def pipeline_row_level_delete(spark: SparkSession, sf: str) -> DataFrame:
     from librarian_spark.maintenance import footer_file_stats
     from librarian_spark.sources.batch import load_table
 
-    base = _cache_base("rld", sf, "orders", salt="cust16")
-    _sweep_run_dirs(scratch_root(), ("librarian_rld_",))
+    base = cache_dir("rld", sf, "orders", salt="cust16")
     [run] = _run_dirs(base, "run_")
     # clean clustered SOURCE layout (read-only, shared, create-once) —
     # built in a run-private staging dir and published by ONE atomic
@@ -2245,8 +2125,7 @@ def pipeline_wap(spark: SparkSession, sf: str) -> DataFrame:
 
     from librarian_spark.sources.batch import load_table
 
-    base = _cache_base("wap", sf, "orders", salt="rollup1")
-    _sweep_run_dirs(scratch_root(), ("librarian_wap_",))
+    base = cache_dir("wap", sf, "orders", salt="rollup1")
     [run] = _run_dirs(base, "run_")
     os.makedirs(run)
     src = load_table(spark, sf, "orders")
@@ -2315,8 +2194,7 @@ def pipeline_stateful_totals(spark: SparkSession, sf: str) -> DataFrame:
 
     from librarian_spark.sources.batch import load_table
 
-    base = _cache_base("statetot", sf, "events", salt="cents-v1")
-    _sweep_run_dirs(scratch_root(), ("librarian_statetot_",))
+    base = cache_dir("statetot", sf, "events", salt="cents-v1")
     in_dir = f"{base}/in"
     if not os.path.exists(os.path.join(in_dir, "_SUCCESS")):
         load_table(spark, sf, "events").select(
@@ -2422,8 +2300,7 @@ def pipeline_bloom_index(spark: SparkSession, sf: str) -> DataFrame:
 
     from librarian_spark.sources.batch import load_table
 
-    base = _cache_base("bloomidx", sf, "orders", salt=f"rr16-k{_BLOOM_K}-v2")
-    _sweep_run_dirs(scratch_root(), ("librarian_bloomidx_",))
+    base = cache_dir("bloomidx", sf, "orders", salt=f"rr16-k{_BLOOM_K}-v2")
     # layout + sidecar build in a PRIVATE staging dir, published by ONE
     # atomic rename: a concurrent first-run builds its own copy and
     # discards it on losing the race — a shared-dir overwrite would delete
@@ -2550,7 +2427,7 @@ def pipeline_idempotent_sink(spark: SparkSession, sf: str) -> DataFrame:
 
     from librarian_spark.sources.batch import load_table
 
-    base = _cache_base("idemsink", sf, "events", salt="idem1")
+    base = cache_dir("idemsink", sf, "events", salt="idem1")
     in_dir = f"{base}/in"
     if not os.path.exists(os.path.join(in_dir, "_SUCCESS")):
         (
@@ -2673,8 +2550,7 @@ def pipeline_late_data_metrics(spark: SparkSession, sf: str) -> DataFrame:
 
     from librarian_spark.sources.batch import load_table
 
-    base = _cache_base("latemetrics", sf, "events", salt="v2")
-    _sweep_run_dirs(scratch_root(), ("librarian_latemetrics_",))
+    base = cache_dir("latemetrics", sf, "events", salt="v2")
     out, ckpt, stage = _run_dirs(base, "out_", "ckpt_", "in_stage_")
     in_dir = f"{base}/in"
     ev = (
@@ -2784,8 +2660,7 @@ def pipeline_orc_snapshot(spark: SparkSession, sf: str) -> DataFrame:
     from librarian_spark.snapshot import run_snapshot_config
     from librarian_spark.sources.batch import load_table
 
-    base = _cache_base("orcsnap", sf, "orders")
-    _sweep_run_dirs(scratch_root(), ("librarian_orcsnap_",))
+    base = cache_dir("orcsnap", sf, "orders")
     stage, out = _run_dirs(base, "orc_stage_", "out_")
     orc_dir = f"{base}/orc"
     if not os.path.isdir(orc_dir):
@@ -2864,8 +2739,7 @@ def pipeline_stream_outer_join(spark: SparkSession, sf: str) -> DataFrame:
 
     import json
 
-    base = _cache_base("soutjoin", sf, "events", salt="v2")
-    _sweep_run_dirs(scratch_root(), ("librarian_soutjoin_",))
+    base = cache_dir("soutjoin", sf, "events", salt="v2")
     # the input dir is RUN-PRIVATE (hardlinks into the shared slice cache):
     # the nudge loop appends sentinel files mid-run, which must never race
     # another run; links preserve slice mtimes, so sentinel files written
@@ -3183,8 +3057,7 @@ def pipeline_stream_topk(spark: SparkSession, sf: str) -> DataFrame:
 
     from librarian_spark.sources.batch import load_table
 
-    base = _cache_base("streamtopk", sf, "events", salt=f"k{_STK_K}-v1")
-    _sweep_run_dirs(scratch_root(), ("librarian_streamtopk_",))
+    base = cache_dir("streamtopk", sf, "events", salt=f"k{_STK_K}-v1")
     in_dir = f"{base}/in"
     if not os.path.exists(os.path.join(in_dir, "_SUCCESS")):
         load_table(spark, sf, "events").select(
@@ -3295,8 +3168,7 @@ def pipeline_stream_enrich(spark: SparkSession, sf: str) -> DataFrame:
 
     from librarian_spark.sources.batch import load_table
 
-    base = _cache_base("senrich", sf, "events", salt="v1")
-    _sweep_run_dirs(scratch_root(), ("librarian_senrich_",))
+    base = cache_dir("senrich", sf, "events", salt="v1")
     in_dir = f"{base}/in"
     if not os.path.exists(os.path.join(in_dir, "_SUCCESS")):
         load_table(spark, sf, "events").select(
@@ -3388,8 +3260,7 @@ def pipeline_checksummed_copy(spark: SparkSession, sf: str) -> DataFrame:
 
     from librarian_spark.sources.batch import load_table
 
-    base = _cache_base("cksum", sf, "orders", salt="v1")
-    _sweep_run_dirs(scratch_root(), ("librarian_cksum_",))
+    base = cache_dir("cksum", sf, "orders", salt="v1")
     out = f"{base}/copy"
     src = load_table(spark, sf, "orders").select(
         "o_orderkey", "o_totalprice"
@@ -3465,7 +3336,7 @@ def pipeline_stream_cdc_apply(spark: SparkSession, sf: str) -> DataFrame:
         read_state,
     )
 
-    base = _cache_base("scdcapply", sf, "events", salt=f"v2:{_SCDC_SLICES}")
+    base = cache_dir("scdcapply", sf, "events", salt=f"v2:{_SCDC_SLICES}")
     in_dir = f"{base}/in"
     marker = os.path.join(base, "_INPUT_READY")
     if not os.path.exists(marker):
@@ -3555,7 +3426,6 @@ def pipeline_stream_cdc_apply(spark: SparkSession, sf: str) -> DataFrame:
         with open(marker, "w") as fh:
             fh.write("")
 
-    _sweep_run_dirs(scratch_root(), ("librarian_scdcapply_",))
     state, ckpt = _run_dirs(base, "state_", "ckpt_")
     cfg = MaterializeConfig(
         state_dir=state,
@@ -3613,8 +3483,7 @@ def pipeline_dlq(spark: SparkSession, sf: str) -> DataFrame:
 
     from librarian_spark.sources.batch import load_table
 
-    base = _cache_base("dlq", sf, "events", salt=f"v1:{_DLQ_MOD}")
-    _sweep_run_dirs(scratch_root(), ("librarian_dlq_",))
+    base = cache_dir("dlq", sf, "events", salt=f"v1:{_DLQ_MOD}")
     out, dlq, ckpt = _run_dirs(base, "out_", "dlq_", "ckpt_")
     in_dir = f"{base}/in"
     if not os.path.exists(os.path.join(in_dir, "_READY")):
@@ -4093,8 +3962,7 @@ def neardup_gate_stream(
 def pipeline_stream_neardup_gate(spark: SparkSession, sf: str) -> DataFrame:
     from librarian_spark.sources.batch import load_table
 
-    base = _cache_base("ndgate", sf, "documents", salt=f"{_NDG_K}:{_NDG_FILES}")
-    _sweep_run_dirs(scratch_root(), ("librarian_ndgate_",))
+    base = cache_dir("ndgate", sf, "documents", salt=f"{_NDG_K}:{_NDG_FILES}")
     out, ckpt = _run_dirs(base, "out_", "ckpt_")
     in_dir = f"{base}/in"
     _stage_id_ranges(
@@ -4322,8 +4190,7 @@ def pipeline_stream_quantile_sketch(spark: SparkSession, sf: str) -> DataFrame:
 
     from librarian_spark.sources.batch import load_table
 
-    base = _cache_base("sqsk", sf, "events", salt=f"{_SQS_K}:{_SQS_FILES}")
-    _sweep_run_dirs(scratch_root(), ("librarian_sqsk_",))
+    base = cache_dir("sqsk", sf, "events", salt=f"{_SQS_K}:{_SQS_FILES}")
     out, ckpt = _run_dirs(base, "out_", "ckpt_")
     in_dir = f"{base}/in"
     _stage_id_ranges(
@@ -4447,8 +4314,7 @@ def pipeline_stream_domain_cap(spark: SparkSession, sf: str) -> DataFrame:
     from librarian_spark.operators.text import _CAP_N, _CAP_SALTS
     from librarian_spark.sources.batch import load_table
 
-    base = _cache_base("sdcap", sf, "documents", salt=f"{_CAP_N}:{_SDC_FILES}")
-    _sweep_run_dirs(scratch_root(), ("librarian_sdcap_",))
+    base = cache_dir("sdcap", sf, "documents", salt=f"{_CAP_N}:{_SDC_FILES}")
     reg, ckpt = _run_dirs(base, "reg_", "ckpt_")
     in_dir = f"{base}/in"
     _stage_id_ranges(

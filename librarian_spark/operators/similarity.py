@@ -26,7 +26,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from librarian_spark.operators.registry import query
-from librarian_spark.scratch import scratch_root
+from librarian_spark.scratch import cache_dir
 from librarian_spark.sources.batch import fan_out
 from librarian_spark.sources.batch import load_table as _t
 
@@ -226,7 +226,7 @@ WHERE score >= {_PAIR_THRESHOLD}
 """
 
 
-_PAIRS_CHUNK_ROWS = int(os.environ.get("SPARK_GRAFT_PAIRS_CHUNK_ROWS", "2000000"))
+_PAIRS_CHUNK_ROWS = 2_000_000
 
 
 def cosine_pairs(
@@ -836,20 +836,15 @@ def ivf_index_topk(
     "best-of-N records the amortized probe cost.",
 )
 def sim_ivf_index_topk(spark: SparkSession, sf: str) -> DataFrame:
-    import hashlib
-    import os
-
     # tag includes the source file's mtime (a regenerated corpus under the
     # same path can never serve a stale index) and nlists (the one layout
     # constant that changes what is ON DISK — list assignments + centroid
     # sidecar). nprobe/query-set only affect the probe, not the index;
     # _N_QUERIES stays in the tag conservatively (a rebuild is cheap, a
     # subtly stale probe-vs-index mismatch is not).
-    src = os.path.join(sf, "embeddings.parquet")
-    mtime = int(os.path.getmtime(src)) if os.path.exists(src) else 0
-    layout = f"{_IVF_NLISTS}:{_N_QUERIES}"
-    tag = hashlib.md5(f"{sf}:{mtime}:{layout}".encode()).hexdigest()[:10]
-    index_dir = f"{scratch_root()}/librarian_ivf_{tag}"
+    index_dir = cache_dir(
+        "ivf", sf, "embeddings", salt=f"{_IVF_NLISTS}:{_N_QUERIES}"
+    )
     # completion = the writer's _SUCCESS commit marker, not bare existence —
     # a crash mid-build leaves a partial dir that must trigger a rebuild
     if not os.path.exists(index_dir + "/centroids/_SUCCESS"):
@@ -878,15 +873,12 @@ _IVF_INCR_MOD = 10  # vec_id % 10 == 0 plays the newly ingested batch
     "new batch only.",
 )
 def sim_ivf_incremental_add(spark: SparkSession, sf: str) -> DataFrame:
-    import hashlib
-    import os
     import shutil
 
-    src = os.path.join(sf, "embeddings.parquet")
-    mtime = int(os.path.getmtime(src)) if os.path.exists(src) else 0
-    layout = f"{_IVF_NLISTS}:{_N_QUERIES}:incr{_IVF_INCR_MOD}"
-    tag = hashlib.md5(f"{sf}:{mtime}:{layout}".encode()).hexdigest()[:10]
-    index_dir = f"{scratch_root()}/librarian_ivf_incr_{tag}"
+    index_dir = cache_dir(
+        "ivf_incr", sf, "embeddings",
+        salt=f"{_IVF_NLISTS}:{_N_QUERIES}:incr{_IVF_INCR_MOD}",
+    )
     # crash- AND race-safety: append is not idempotent, so the whole
     # build+add happens in a private staging dir, published by ONE atomic
     # rename — a concurrent first-run builds its own staging copy, loses the

@@ -7,10 +7,10 @@ switches, skew-join splitting, partition coalescing), UTC session timezone so re
 are comparable against a DuckDB oracle, and Arrow for any Python-side exchange.
 
 Every session conf is written once, here: ``SESSION_CONFS`` (the correctness and
-engine profile) and ``ROCKSDB_STATE_CONFS``. ``get_spark`` builds with the profile,
-``operators.registry.tune_session`` applies it to a caller's session and
-``cluster_profile`` adds its cluster sizing rules on top; every operator in this
-package is expressed declaratively so Catalyst picks physical strategy per-cluster.
+engine profile) and ``ROCKSDB_STATE_CONFS``. ``get_spark`` builds with the profile and
+``operators.registry.tune_session`` applies it to a caller's session; every
+operator in this package is expressed declaratively so Catalyst picks physical
+strategy per-cluster.
 """
 
 from __future__ import annotations
@@ -21,7 +21,6 @@ from pyspark.sql import SparkSession
 
 __all__ = [
     "get_spark",
-    "cluster_profile",
     "CORRECTNESS_CONFS",
     "SESSION_CONFS",
     "ROCKSDB_STATE_CONFS",
@@ -50,8 +49,8 @@ CORRECTNESS_CONFS: dict[str, str] = {
 # The engine's runtime session profile, written once: get_spark builds with
 # it, operators.registry.tune_session applies it to the caller's session
 # before every registered query (`__spark_entry__` callers may pass a BARE
-# SparkSession with none of get_spark's settings), and cluster_profile
-# starts from it. Every entry is runtime-settable.
+# SparkSession with none of get_spark's settings). Every entry is
+# runtime-settable.
 SESSION_CONFS: dict[str, str] = {
     **CORRECTNESS_CONFS,
     # one shuffle task per local core; a bare session's 200 is ~170 empty
@@ -70,8 +69,7 @@ SESSION_CONFS: dict[str, str] = {
     # them to the advisory byte size serializes that work. Measured over
     # the FULL 292-query registry (interleaved same-session A/B,
     # best-of-3 per arm): byte-based coalescing is 1.19x slower in
-    # total — 208 queries >10% worse, 9 better. cluster_profile turns it
-    # off, where exchanges carry real bytes per row.
+    # total — 208 queries >10% worse, 9 better.
     "spark.sql.adaptive.skewJoin.enabled": "true",
     # allow shuffled-hash join when the planner's size gate passes
     # (guide §3.1/§9): SHJ skips both sides' sorts; the planner only
@@ -121,59 +119,3 @@ def get_spark(
     spark.sparkContext.setLogLevel("WARN")
     return spark
 
-
-def cluster_profile(
-    total_cores: int,
-    executor_mem_gb: int = 16,
-    input_tb: float | None = None,
-) -> dict[str, str]:
-    """Conf profile for a real multi-executor cluster (the 100 TB deployment
-    of the same operator code — ``get_spark`` covers the local test box):
-    ``SESSION_CONFS`` and ``ROCKSDB_STATE_CONFS`` (harmless for stateless
-    jobs), overridden by these sizing rules, each one line of arithmetic so
-    they can be audited:
-
-    - ``shuffle.partitions`` = 2× total cores, floored at 200: two waves of
-      shuffle tasks per stage smooth skew/straggler loss without drowning the
-      scheduler; AQE coalesces the empty ones anyway.
-    - ``advisoryPartitionSizeInBytes`` = 128 MB: AQE's post-shuffle coalesce
-      target — big enough to amortize task startup, small enough that a
-      partition (× ~3-5 decode amplification) fits executor memory headroom.
-    - ``parallelismFirst`` off: byte-based coalescing (see ``SESSION_CONFS``).
-    - ``autoBroadcastJoinThreshold`` scales with executor memory (1/64 of an
-      executor's heap, capped at 512 MB): a broadcast table is materialized
-      ONCE per executor, so what's safe to broadcast is a function of the
-      executor heap, not of the data scale.
-    - skew-join split thresholds stay at AQE defaults (64 MB / 5× median) —
-      measured skew belongs to AQE at runtime, not to static conf.
-    - ``files.openCostInBytes`` down to 1 MB on object stores: S3 listings
-      bias Spark toward packing many small files per task; the real cost of
-      an extra S3 GET is far below the 4 MB default's implication.
-    - Kryo serialization and speculative re-launch of straggler tasks.
-
-    ``input_tb``, when given, only sanity-floors the partition count so one
-    pass over the input stays under ~2 GB per task even before AQE sees it.
-    """
-    shuffle_parts = max(200, 2 * total_cores)
-    if input_tb is not None:
-        # one scan wave: input / maxPartitionBytes (128 MB default) tasks;
-        # keep shuffles in the same order of magnitude so joins against the
-        # scan don't funnel
-        shuffle_parts = max(shuffle_parts, int(input_tb * 1024 * 1024 // 2048))
-    bcast_mb = min(512, max(10, executor_mem_gb * 1024 // 64))
-    return {
-        **SESSION_CONFS,
-        **ROCKSDB_STATE_CONFS,
-        "spark.sql.shuffle.partitions": str(shuffle_parts),
-        "spark.sql.adaptive.advisoryPartitionSizeInBytes": "128m",
-        # byte-based coalescing is a CLUSTER-profile setting only: with
-        # shuffle.partitions at 2x total cores and a 128 MB advisory size it
-        # folds only genuinely tiny exchanges, and compute-dense operators
-        # that byte-sizing would mis-size pin their own width with explicit
-        # repartitions (q80/q89/edit-distance pattern)
-        "spark.sql.adaptive.coalescePartitions.parallelismFirst": "false",
-        "spark.sql.files.openCostInBytes": "1048576",
-        "spark.sql.autoBroadcastJoinThreshold": f"{bcast_mb}m",
-        "spark.serializer": "org.apache.spark.serializer.KryoSerializer",
-        "spark.speculation": "true",
-    }

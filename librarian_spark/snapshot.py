@@ -25,6 +25,7 @@ Scale notes:
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
 import uuid as _uuid
@@ -37,9 +38,32 @@ from librarian_spark.config import ArchiverConfig, LibrarianConfig
 from librarian_spark.schema import fields_to_struct_type
 from librarian_spark.sources.batch import read_jdbc_query
 
-__all__ = ["Snapshotter", "snapshot", "run_snapshot_config"]
+__all__ = [
+    "Snapshotter",
+    "snapshot",
+    "run_snapshot_config",
+    "load_watermark",
+    "delta_prefix",
+]
 
 _WATERMARK_FILE = "_watermark.json"
+
+
+def load_watermark(out_path: str) -> dict | None:
+    """The incremental snapshot's saved high watermark, None before run 1."""
+    p = os.path.join(out_path, _WATERMARK_FILE)
+    if not os.path.exists(p):
+        return None
+    with open(p, encoding="utf-8") as fh:
+        return json.load(fh)
+
+
+def delta_prefix(wm: dict) -> str:
+    """Name prefix of the delta files appended PAST watermark ``wm``:
+    ``delta-<md5(value)[:12]>``. Until the next watermark is saved, files
+    under the current watermark's prefix may be an uncommitted append that
+    a retry overwrites by name, so compaction leaves them alone."""
+    return "delta-" + hashlib.md5(str(wm["value"]).encode()).hexdigest()[:12]
 
 
 class Snapshotter:
@@ -122,13 +146,6 @@ class Snapshotter:
         return obs.get["n"]
 
     # -- incremental high-watermark state ---------------------------------
-    def _load_watermark(self, out_path: str) -> dict | None:
-        p = os.path.join(out_path, _WATERMARK_FILE)
-        if not os.path.exists(p):
-            return None
-        with open(p, encoding="utf-8") as fh:
-            return json.load(fh)
-
     def _save_watermark(self, out_path: str, column: str, value, dtype: str) -> None:
         # atomic temp+rename, same contract as the reference's checkpoint
         # writer (`pkg/replicator/checkpoint.go:103-117`)
@@ -189,7 +206,7 @@ class Snapshotter:
             dtype = dict(df.dtypes).get(col)
             if dtype is None:
                 raise ValueError(f"incremental column {col!r} not in source output")
-            wm = self._load_watermark(out_path)
+            wm = load_watermark(out_path)
             if wm is not None:
                 df = df.filter(F.col(col) > F.lit(wm["value"]).cast(dtype))
 
@@ -267,13 +284,12 @@ class Snapshotter:
         unattainable multi-file atomic commit — the same trick foreachBatch
         sinks use with the batch id). First run (no watermark) is a plain
         overwrite, already atomic per Spark's commit protocol."""
-        import hashlib
         import shutil
 
         if wm is None:
             return self.write(df, out_path)
-        tag = hashlib.md5(str(wm["value"]).encode()).hexdigest()[:12]
-        staging = os.path.join(out_path, f".delta_staging_{tag}")
+        prefix = delta_prefix(wm)
+        staging = os.path.join(out_path, f".{prefix}_staging")
         self._writer(df, "overwrite").parquet(staging)
         # each staged file moves to the same relative dir (hive partitions)
         # under out_path, renamed after the watermark
@@ -285,7 +301,7 @@ class Snapshotter:
                     os.makedirs(dest, exist_ok=True)
                     os.replace(
                         os.path.join(root, f),
-                        os.path.join(dest, f"delta-{tag}-{moved:05d}.parquet"),
+                        os.path.join(dest, f"{prefix}-{moved:05d}.parquet"),
                     )
                     moved += 1
         # drop any leftover higher-numbered files from a previous, larger
@@ -293,7 +309,7 @@ class Snapshotter:
         delta_files = []
         for root, _dirs, files in os.walk(out_path):
             for f in files:
-                if f.startswith(f"delta-{tag}-"):
+                if f.startswith(f"{prefix}-"):
                     if int(f.split("-")[2].split(".")[0]) >= moved:
                         os.remove(os.path.join(root, f))
                     else:

@@ -21,7 +21,9 @@ Parity mapping:
   checkpoint warm, resume is one trigger away. Spark-owned sources
   (kafka/files) expose no offset-freeze hook, so pause degrades to
   stop-with-checkpoint + restart there;
-- stats structs + HTTP API (`server.go:57-165`) → :mod:`.stats` listener.
+- stats structs + HTTP API (`server.go:57-165`) → :mod:`.server`, which
+  serves each replicator query's ``lastProgress`` (the :mod:`.stats`
+  listener is a second, separate stats surface).
 
 At scale: one replicate query per topic-set; Kafka source parallelism follows
 topic partitions; a ``repartition`` before heavyweight transforms decouples

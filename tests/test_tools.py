@@ -4,15 +4,22 @@ and the stats/control HTTP server (reference parity: `internal/cmd/fixtures/gen.
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
+import re
+import subprocess
+import sys
+import time
 import urllib.request
+import warnings
 
 import pytest
 import yaml
 
 from pyspark.sql import functions as F
 
+from librarian_spark import scratch
 from librarian_spark.cli import main as cli_main
 from librarian_spark.plans.introspect import (
     has_broadcast_join,
@@ -431,6 +438,67 @@ def test_compact_small_files(spark, tmp_path, sf_dir):
     assert os.path.exists(os.path.join(out, "_watermark.json"))
 
 
+def test_compact_keeps_current_watermark_delta_byte_identical(spark, tmp_path, sf_dir):
+    """Crash window of an incremental snapshot: the delta file named for the
+    CURRENT watermark may be an uncommitted append that a retry overwrites
+    by name, so compact() must leave it byte-identical while it compacts
+    every other file."""
+    from librarian_spark.maintenance import compact
+    from librarian_spark.snapshot import delta_prefix
+
+    out = str(tmp_path / "inc")
+    ev = load_table(spark, sf_dir, "events").select("event_id", "value")
+    ev.repartition(20).write.mode("overwrite").parquet(out)
+    wm = {"column": "event_id", "value": "42", "type": "bigint"}
+    with open(os.path.join(out, "_watermark.json"), "w") as fh:
+        json.dump(wm, fh)
+    staged = str(tmp_path / "staged")
+    ev.limit(7).coalesce(1).write.mode("overwrite").parquet(staged)
+    [part] = [f for f in os.listdir(staged) if f.endswith(".parquet")]
+    pending = os.path.join(out, f"{delta_prefix(wm)}-00000.parquet")
+    os.replace(os.path.join(staged, part), pending)
+    with open(pending, "rb") as fh:
+        pending_bytes = fh.read()
+    want = sorted(tuple(r) for r in spark.read.parquet(out).collect())
+
+    report = compact(spark, out, target_file_mb=128)
+    assert report["compacted"]
+    data = [f for f in os.listdir(out) if f.endswith(".parquet")]
+    assert os.path.basename(pending) in data
+    assert len(data) <= 3, data  # the pending delta + the compacted rest
+    with open(pending, "rb") as fh:
+        assert fh.read() == pending_bytes
+    assert sorted(tuple(r) for r in spark.read.parquet(out).collect()) == want
+
+
+def test_compact_keeps_current_watermark_delta_in_partition_leaf(spark, tmp_path):
+    """The watermark sidecar sits at the dataset root while a partitioned
+    snapshot's deltas land in the leaves: the protection must reach them."""
+    from librarian_spark.maintenance import compact
+    from librarian_spark.snapshot import delta_prefix
+
+    out = str(tmp_path / "inc")
+    spark.range(1000).selectExpr("id", "id % 2 AS p").repartition(10).write.partitionBy(
+        "p"
+    ).parquet(out)
+    wm = {"column": "id", "value": "42", "type": "bigint"}
+    with open(os.path.join(out, "_watermark.json"), "w") as fh:
+        json.dump(wm, fh)
+    leaf = os.path.join(out, "p=0")
+    [first, *_] = sorted(f for f in os.listdir(leaf) if f.endswith(".parquet"))
+    pending = os.path.join(leaf, f"{delta_prefix(wm)}-00000.parquet")
+    os.replace(os.path.join(leaf, first), pending)
+    with open(pending, "rb") as fh:
+        pending_bytes = fh.read()
+
+    report = compact(spark, out, target_file_mb=128)
+    assert report["compacted"]
+    assert len([f for f in os.listdir(leaf) if f.endswith(".parquet")]) == 2
+    with open(pending, "rb") as fh:
+        assert fh.read() == pending_bytes
+    assert spark.read.parquet(out).count() == 1000
+
+
 def test_cluster_write_enables_file_skipping(spark, tmp_path, sf_dir):
     """Range-clustered layout: each parquet file's footer [min, max] on the
     cluster key must be near-disjoint (non-overlapping slices), so a range
@@ -583,38 +651,6 @@ def test_tune_session_restores_every_session_conf(spark):
         assert caller.conf.get(k) != v
     tune_session(caller)
     assert {k: caller.conf.get(k) for k in SESSION_CONFS} == SESSION_CONFS
-
-
-def test_cluster_profile_sizing_rules():
-    from librarian_spark.session import (
-        ROCKSDB_STATE_CONFS,
-        SESSION_CONFS,
-        cluster_profile,
-    )
-
-    # small cluster: the 200 floor holds and broadcast scales with heap
-    small = cluster_profile(64, executor_mem_gb=8)
-    assert small["spark.sql.shuffle.partitions"] == "200"
-    assert small["spark.sql.autoBroadcastJoinThreshold"] == "128m"
-
-    # 1000-executor / 100 TB shape: partitions follow 2×cores, then the
-    # input floor when the input is so large that 2×cores would leave
-    # multi-GB shuffle partitions
-    big = cluster_profile(4000, executor_mem_gb=32, input_tb=100)
-    assert int(big["spark.sql.shuffle.partitions"]) >= 8000
-    assert big["spark.sql.autoBroadcastJoinThreshold"] == "512m"
-    # the profile carries the same correctness-critical confs as get_spark
-    assert big["spark.sql.session.timeZone"] == "UTC"
-    assert big["spark.sql.parquet.inferTimestampNTZ.enabled"] == "false"
-    # ... and the whole session profile (with its own shuffle width) plus
-    # the RocksDB state store
-    for prof in (small, big):
-        width = prof["spark.sql.shuffle.partitions"]
-        assert {k: prof[k] for k in SESSION_CONFS} == {
-            **SESSION_CONFS,
-            "spark.sql.shuffle.partitions": width,
-        }
-        assert {k: prof[k] for k in ROCKSDB_STATE_CONFS} == ROCKSDB_STATE_CONFS
 
 
 def test_cli_explain_reports_plan(capsys):
@@ -1008,3 +1044,160 @@ def test_measure_best_of_reports_late_failure_only_as_error(spark, sf_dir):
     assert best == {}
     assert errors == {"flaky": "RuntimeError: round 2"}
     assert len(calls) == 2
+
+
+# --------------------------------------------------------------------------
+# Scratch tier: root resolution and the shared cache-dir lifecycle
+# --------------------------------------------------------------------------
+
+
+@pytest.fixture()
+def _reset_scratch_root():
+    """scratch_root() memoizes; each case below needs a fresh resolution,
+    and the suite must get the original value back afterwards."""
+    orig = scratch._ROOT
+    scratch._ROOT = None
+    yield
+    scratch._ROOT = orig
+
+
+def test_scratch_env_wins_without_warning(monkeypatch, _reset_scratch_root, tmp_path):
+    monkeypatch.setenv("SPARK_GRAFT_SCRATCH_DIR", str(tmp_path))
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")  # any warning fails the test
+        assert scratch.scratch_root() == str(tmp_path)
+
+
+def test_scratch_ram_default_warns(monkeypatch, _reset_scratch_root):
+    monkeypatch.delenv("SPARK_GRAFT_SCRATCH_DIR", raising=False)
+    if not (os.path.isdir("/dev/shm") and os.access("/dev/shm", os.W_OK)):
+        pytest.skip("no writable /dev/shm on this box")
+    with pytest.warns(RuntimeWarning, match="streaming"):
+        assert scratch.scratch_root() == "/dev/shm"
+
+
+def test_bench_runtime_echo_matches_env(spark):
+    """The bench's printed JSON must carry the EFFECTIVE master/parallelism so
+    the driver can verify the local[$SPARK_GRAFT_CPUS] contract from the wire
+    (round-11 `suspect_cpus_ignored`). The test session is built by the same
+    get_spark the bench uses, so its master string is the env-honoring path."""
+    import bench
+
+    info = bench.runtime_info(spark)
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    assert info["master"] == f"local[{cpus}]"
+    assert info["cpus_effective"] == int(cpus)
+    assert info["scratch_root"] == scratch.scratch_root()
+
+
+@pytest.fixture()
+def scratch_sf(monkeypatch, _reset_scratch_root, tmp_path):
+    """A private scratch root and a fake sf dir holding two source tables."""
+    root = tmp_path / "scratch"
+    root.mkdir()
+    monkeypatch.setenv("SPARK_GRAFT_SCRATCH_DIR", str(root))
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    for t in ("orders", "lineitem"):
+        (sf / f"{t}.parquet").write_bytes(b"x")
+    return str(root), str(sf)
+
+
+def _age(path: str, seconds: float) -> None:
+    """Backdate ``path`` and everything under it by ``seconds``."""
+    t = time.time() - seconds
+    for r, dirs, files in os.walk(path):
+        for x in dirs + files:
+            os.utime(os.path.join(r, x), (t, t))
+    os.utime(path, (t, t))
+
+
+def _filled(path: str) -> str:
+    os.makedirs(path)
+    with open(os.path.join(path, "part-0.parquet"), "w") as fh:
+        fh.write("x")
+    return path
+
+
+def test_cache_dir_identity(scratch_sf):
+    """Same inputs, same dir; a changed mtime of ANY named table or a changed
+    salt, a new dir. The tag is md5(sf : each table's mtime : salt), a
+    missing table counting as mtime 0, and nothing is created on disk."""
+    root, sf = scratch_sf
+    a = scratch.cache_dir("p", sf, "orders", salt="s")
+    assert a == scratch.cache_dir("p", sf, "orders", salt="s")
+    assert os.path.dirname(a) == root
+    assert re.fullmatch(r"librarian_p_[0-9a-f]{10}", os.path.basename(a))
+    assert not os.path.exists(a)
+    assert scratch.cache_dir("p", sf, "orders", salt="t") != a
+
+    two = scratch.cache_dir("p", sf, "orders", "lineitem")
+    os.utime(os.path.join(sf, "lineitem.parquet"), (1_000_000, 1_000_000))
+    assert scratch.cache_dir("p", sf, "orders", "lineitem") != two
+    os.utime(os.path.join(sf, "orders.parquet"), (2_000_000, 2_000_000))
+    assert scratch.cache_dir("p", sf, "orders", salt="s") != a
+
+    tag = hashlib.md5(f"{sf}:0:v1".encode()).hexdigest()[:10]
+    assert scratch.cache_dir("p", sf, "missing", salt="v1") == os.path.join(
+        root, f"librarian_p_{tag}"
+    )
+
+
+def test_cache_dir_sweeps_stale_tags_of_its_own_prefix_only(scratch_sf):
+    """A stale tag of the same prefix and its .staging-* leftover are swept;
+    a re-entered tag (fresh keepalive), the returned dir (however old, it
+    gets its keepalive instead) and a longer prefix's dir survive."""
+    root, sf = scratch_sf
+    ttl = scratch._RUN_DIR_TTL_S
+    live = _filled(scratch.cache_dir("ivf", sf, "orders"))
+    stale = _filled(os.path.join(root, "librarian_ivf_0123456789"))
+    staging = _filled(stale + ".staging-abcd1234")
+    reentered = _filled(os.path.join(root, "librarian_ivf_abcdefabcd"))
+    longer = _filled(os.path.join(root, "librarian_ivf_incr_0123456789"))
+    for d in (live, stale, staging, reentered, longer):
+        _age(d, 2 * ttl)
+    with open(os.path.join(reentered, "_keepalive"), "w") as fh:
+        fh.write("")
+
+    assert scratch.cache_dir("ivf", sf, "orders") == live
+    assert not os.path.exists(stale)
+    assert not os.path.exists(staging)
+    assert os.path.exists(reentered)
+    assert os.path.exists(longer)
+    assert os.path.exists(os.path.join(live, "part-0.parquet"))
+    assert time.time() - os.path.getmtime(os.path.join(live, "_keepalive")) < ttl
+
+
+def test_pipeline_snapshot_rerun_over_keepalive(spark, sf_dir, monkeypatch, _reset_scratch_root, tmp_path):
+    """pipeline_snapshot's cache dir is the snapshot's own overwrite target:
+    the keepalive cache_dir writes into it on a rerun changes neither the
+    catalog counts nor the read-back."""
+    monkeypatch.setenv("SPARK_GRAFT_SCRATCH_DIR", str(tmp_path))
+    run = load_all()["pipeline_snapshot"].spark_fn
+    first = sorted(tuple(r) for r in run(spark, sf_dir).collect())
+    [out] = [d for d in os.listdir(tmp_path) if d.startswith("librarian_bench_snapshot_")]
+    with open(tmp_path / out / "_catalog.json") as fh:
+        cat1 = json.load(fh)
+    second = sorted(tuple(r) for r in run(spark, sf_dir).collect())
+    with open(tmp_path / out / "_catalog.json") as fh:
+        cat2 = json.load(fh)
+    assert second == first
+    assert cat2["success"] and cat2["num_records_processed"] == len(first)
+    assert {k: cat2[k] for k in ("num_source_records", "num_records_processed", "source")} == {
+        k: cat1[k] for k in ("num_source_records", "num_records_processed", "source")
+    }
+
+
+def test_operators_md_matches_registry(tmp_path):
+    """OPERATORS.md is generated from the registry: regenerating it in a
+    scratch cwd must reproduce the committed file byte for byte."""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    subprocess.run(
+        [sys.executable, os.path.join(repo, "scripts", "gen_operators_md.py")],
+        cwd=tmp_path,
+        check=True,
+        capture_output=True,
+    )
+    with open(os.path.join(repo, "OPERATORS.md"), encoding="utf-8") as fh:
+        committed = fh.read()
+    assert (tmp_path / "OPERATORS.md").read_text(encoding="utf-8") == committed
