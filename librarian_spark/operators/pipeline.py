@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
 from librarian_spark.operators.registry import query
-from librarian_spark.scratch import cache_dir, sweep_stale
+from librarian_spark.scratch import cache_dir, sweep_stale, warn_if_volatile
 
 _SNAP_QUERY = "SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice FROM source"
 
@@ -32,10 +32,14 @@ def _run_dirs(base: str, *prefixes: str) -> list[str]:
     """Sweep previous runs' ``<prefix>*`` dirs under ``base`` and return one
     fresh ``base/<prefix><run id>`` path per prefix, all under ONE run id —
     the swept prefixes and the allocated names come from the same list, so
-    they cannot disagree. Nothing is created on disk."""
+    they cannot disagree. Nothing is created on disk; a ``ckpt_`` path is
+    checked by :func:`scratch.warn_if_volatile`."""
     sweep_stale(base, lambda d: d.startswith(prefixes))
     run_id = uuid.uuid4().hex[:8]
-    return [f"{base}/{p}{run_id}" for p in prefixes]
+    dirs = [f"{base}/{p}{run_id}" for p in prefixes]
+    if "ckpt_" in prefixes:
+        warn_if_volatile(dirs[prefixes.index("ckpt_")])
+    return dirs
 
 
 def _drain(

@@ -15,7 +15,8 @@ anything a restarted driver needs (streaming checkpoints, registry
 versions): set ``SPARK_GRAFT_SCRATCH_DIR`` to that location — the env var
 wins unconditionally. The RAM-disk default is for the single-box case
 where a crash loses the whole run anyway, so durability of the scratch
-tier buys nothing.
+tier buys nothing; :func:`warn_if_volatile` warns when a streaming checkpoint
+lands there.
 
 Every shared cache dir comes from :func:`cache_dir`, which gives it one
 lifecycle:
@@ -43,9 +44,10 @@ import time
 import warnings
 from typing import Callable
 
-__all__ = ["scratch_root", "cache_dir", "sweep_stale"]
+__all__ = ["scratch_root", "cache_dir", "sweep_stale", "warn_if_volatile"]
 
 _ROOT: str | None = None
+_RAM_ROOT = "/dev/shm"
 
 _RUN_DIR_TTL_S = 1800  # sweep only dirs whose newest file is older than this
 
@@ -57,26 +59,33 @@ def scratch_root() -> str:
         env = os.environ.get("SPARK_GRAFT_SCRATCH_DIR")
         if env:
             _ROOT = env.rstrip("/") or "/"
-        elif os.path.isdir("/dev/shm") and os.access("/dev/shm", os.W_OK):
-            # Loud one-time guard: this default puts STREAMING CHECKPOINTS
-            # (offset/commit logs, state versions) in volatile RAM. Right for
-            # a single test box (a reboot loses the run anyway), wrong for any
-            # deployment that needs a restarted driver to resume exactly-once
-            # state — there, SPARK_GRAFT_SCRATCH_DIR must point at durable
-            # shared storage, and it wins unconditionally.
-            warnings.warn(
-                "SPARK_GRAFT_SCRATCH_DIR is unset; scratch (incl. streaming "
-                "checkpoints and state) resolves to RAM-backed /dev/shm and "
-                "will NOT survive a reboot. Set SPARK_GRAFT_SCRATCH_DIR to "
-                "durable storage for any deployment that must resume "
-                "exactly-once streaming state.",
-                RuntimeWarning,
-                stacklevel=2,
-            )
-            _ROOT = "/dev/shm"
+        elif os.path.isdir(_RAM_ROOT) and os.access(_RAM_ROOT, os.W_OK):
+            _ROOT = _RAM_ROOT  # see warn_if_volatile
         else:
             _ROOT = "/tmp"  # noqa: S108 — bounded, uuid-tagged, swept
     return _ROOT
+
+
+def warn_if_volatile(checkpoint: str) -> None:
+    """Warn when the streaming checkpoint dir ``checkpoint`` lands on the
+    RAM-backed default root (``SPARK_GRAFT_SCRATCH_DIR`` unset): offset and
+    commit logs and state versions there do not survive a reboot. Right for
+    a single test box (a reboot loses the run anyway), wrong for any
+    deployment that needs a restarted driver to resume exactly-once state —
+    there the variable must point at durable shared storage. A process that
+    starts no streaming query stays silent, and the default warning filter
+    shows the warning once per process."""
+    if not os.environ.get("SPARK_GRAFT_SCRATCH_DIR") and (
+        os.path.realpath(checkpoint) + os.sep
+    ).startswith(os.path.realpath(_RAM_ROOT) + os.sep):
+        warnings.warn(
+            "SPARK_GRAFT_SCRATCH_DIR is unset; streaming checkpoints land on "
+            f"RAM-backed {_RAM_ROOT} and will NOT survive a reboot. Set "
+            "SPARK_GRAFT_SCRATCH_DIR to durable storage for any deployment "
+            "that must resume exactly-once streaming state.",
+            RuntimeWarning,
+            stacklevel=2,
+        )
 
 
 def sweep_stale(base: str, doomed: Callable[[str], bool]) -> None:

@@ -19,8 +19,9 @@ them, replacing ``FilesystemCheckpointer`` (`pkg/replicator/checkpoint.go:57-126
 
 Scale design: one InputPartition per unconsumed segment file, so a micro-batch
 fans out across executors file-parallel; per-row work is json.loads only (no
-Python UDF per field); a 1000-executor cluster ingests as many segments
-concurrently as the batch contains. The same class serves batch reads (full
+Python UDF per field), and a segment reaches Spark as one Arrow record batch;
+a 1000-executor cluster ingests as many segments concurrently as the batch
+contains. The same class serves batch reads (full
 directory replay) for backfill.
 """
 
@@ -29,8 +30,10 @@ from __future__ import annotations
 import json
 import os
 
+import pyarrow as pa
 from pyspark.sql import types as T
 from pyspark.sql.datasource import DataSource, DataSourceReader, DataSourceStreamReader
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from librarian_spark.sources import segments as _seg
 
@@ -55,49 +58,49 @@ CDC_ROW_SCHEMA = T.StructType(
         T.StructField("position", T.StringType()),
     ]
 )
+_ARROW_SCHEMA = to_arrow_schema(CDC_ROW_SCHEMA)
 
 
-def _rows_of(path: str, fname: str):
-    """Parse one segment file into CDC_ROW_SCHEMA tuples."""
-    full = os.path.join(path, fname)
-    with open(full, encoding="utf-8") as fh:
+def _segment_batch(path: str, fname: str):
+    """Parse one segment file into ONE ``CDC_ROW_SCHEMA`` Arrow record batch
+    (none for a segment without events): columns are built as lists and
+    converted once, instead of a tuple per event converted field by field."""
+    cols = tuple([] for _ in CDC_ROW_SCHEMA)
+    op, ts_ms, db, schema, table, lsn, before, after, position = cols
+    with open(os.path.join(path, fname), encoding="utf-8") as fh:
         for lineno, line in enumerate(fh):
             line = line.strip()
             if not line:
                 continue
-            doc = json.loads(line)
-            p = doc.get("payload", {})
+            p = json.loads(line).get("payload", {})
             src = p.get("source") or {}
-            yield (
-                p.get("op"),
-                p.get("ts_ms"),
-                src.get("db"),
-                src.get("schema"),
-                src.get("table"),
-                src.get("lsn"),
-                _seg.dump_image(p.get("before")),
-                _seg.dump_image(p.get("after")),
-                f"{fname}:{lineno}",
-            )
+            op.append(p.get("op"))
+            ts_ms.append(p.get("ts_ms"))
+            db.append(src.get("db"))
+            schema.append(src.get("schema"))
+            table.append(src.get("table"))
+            lsn.append(src.get("lsn"))
+            before.append(_seg.dump_image(p.get("before")))
+            after.append(_seg.dump_image(p.get("after")))
+            position.append(f"{fname}:{lineno}")
+    if position:
+        yield pa.RecordBatch.from_arrays(list(cols), schema=_ARROW_SCHEMA)
 
 
-class _CdcBatchReader(_seg.SegmentBatchReader):
+class _CdcReaderMixin:
+    exts = (".jsonl", ".json", ".ndjson")
+
+    def rows_of(self, path: str, fname: str):
+        yield from _segment_batch(path, fname)
+
+
+class _CdcBatchReader(_CdcReaderMixin, _seg.SegmentBatchReader):
     """Full-directory replay (backfill / snapshot-rebuild path)."""
 
-    exts = (".jsonl", ".json", ".ndjson")
 
-    def rows_of(self, path: str, fname: str):
-        yield from _rows_of(path, fname)
-
-
-class _CdcStreamReader(_seg.SegmentStreamReader):
+class _CdcStreamReader(_CdcReaderMixin, _seg.SegmentStreamReader):
     """Micro-batch reader over envelope JSONL segments — offset semantics
     and the true-pause protocol live in :mod:`.segments`."""
-
-    exts = (".jsonl", ".json", ".ndjson")
-
-    def rows_of(self, path: str, fname: str):
-        yield from _rows_of(path, fname)
 
 
 class CdcJsonlDataSource(DataSource):

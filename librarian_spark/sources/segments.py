@@ -41,12 +41,17 @@ __all__ = [
 ]
 
 
+# one encoder for every image: json.dumps with non-default arguments builds
+# a new JSONEncoder per call
+_encode_image = json.JSONEncoder(separators=(",", ":"), sort_keys=True).encode
+
+
 def dump_image(v) -> str | None:
     """A before/after row image as JSON text the way Go marshals a
     ``map[string]interface{}`` (sorted keys, no whitespace —
     `internal/integrations/kafka/repository.go:143`); no image stays
     ``None``."""
-    return None if v is None else json.dumps(v, separators=(",", ":"), sort_keys=True)
+    return None if v is None else _encode_image(v)
 
 
 def segment_files(path: str, exts: tuple[str, ...]) -> list[str]:
@@ -76,7 +81,8 @@ class _SegmentSourceBase:
         """Per-format extra options (override as needed)."""
 
     def rows_of(self, path: str, fname: str):
-        """Decode one segment file into schema-shaped tuples (override)."""
+        """Decode one segment file into schema-shaped tuples or Arrow record
+        batches (override)."""
         raise NotImplementedError
 
     def _files(self) -> list[str]:

@@ -39,6 +39,7 @@ __all__ = [
     "OP_READ",
     "build_envelope_json",
     "parse_envelope",
+    "typed_events",
     "kafka_key",
     "snapshot_as_events",
     "CDC_ROW_COLUMNS",
@@ -96,6 +97,15 @@ ENVELOPE_SCHEMA = _envelope_schema(_ROW_MAP)
 # the parse schema: for a StringType field Spark's JSON reader keeps the
 # object's JSON text — the same text get_json_object returns
 _PARSE_SCHEMA = _envelope_schema(T.StringType())
+# parse_envelope's flat columns and where each sits in the parsed envelope
+_FLAT_FIELDS = {
+    "op": "payload.op",
+    "ts_ms": "payload.ts_ms",
+    "db": "payload.source.db",
+    "schema_name": "payload.source.schema",
+    "table": "payload.source.table",
+    "lsn": "payload.source.lsn",
+}
 
 
 def _json_str(col: Column) -> Column:
@@ -206,27 +216,51 @@ def parse_envelope(df: DataFrame, value_col: str = "value") -> DataFrame:
 
     Emits flattened columns (op, ts_ms, db, schema_name, table, lsn, before,
     after) plus the verbatim ``before_json``/``after_json`` text so egress can
-    re-emit byte-identically.
+    re-emit byte-identically. The input columns are kept.
 
     ``value`` is parsed once: ``before_json``/``after_json`` come from that
-    parse, and the ``before``/``after`` maps are ``from_json`` over them, so
-    the optimizer drops the map parses when no caller selects the maps.
+    parse, and the ``before``/``after`` maps are ``from_json`` over them. In a
+    batch frame the optimizer drops the parses of columns no caller selects;
+    it cannot do so across a ``foreachBatch`` boundary, where every column
+    of the stream is computed before the batch function sees it — so a
+    streaming sink projects what it reads BEFORE the boundary (see
+    :func:`typed_events` and ``materialize._keyed``).
     """
     c = F.col(value_col).cast("string")
     parsed = df.withColumn("_env", F.from_json(c, _PARSE_SCHEMA))
     return parsed.select(
         df["*"],
-        F.col("_env.payload.op").alias("op"),
-        F.col("_env.payload.ts_ms").alias("ts_ms"),
-        F.col("_env.payload.source.db").alias("db"),
-        F.col("_env.payload.source.schema").alias("schema_name"),
-        F.col("_env.payload.source.table").alias("table"),
-        F.col("_env.payload.source.lsn").alias("lsn"),
+        *[F.col(f"_env.{path}").alias(name) for name, path in _FLAT_FIELDS.items()],
         F.from_json("_env.payload.before", _ROW_MAP).alias("before"),
         F.from_json("_env.payload.after", _ROW_MAP).alias("after"),
         F.col("_env.payload.before").alias("before_json"),
         F.col("_env.payload.after").alias("after_json"),
     ).drop("_env")
+
+
+def typed_events(df: DataFrame, row: T.StructType) -> DataFrame:
+    """``df``'s ``value`` envelopes parsed ONCE with ``before``/``after``
+    typed as ``row``: :func:`parse_envelope`'s flat columns (op, ts_ms, db,
+    schema_name, table, lsn) and the typed ``before``/``after`` structs.
+
+    One ``from_json`` of the whole value replaces the text-then-struct
+    double parse (envelope with images as text, then ``from_json`` of each
+    image). The results agree except where an image is not a JSON object: an
+    array/number/bool image reads as a NULL struct here (an all-NULL struct
+    there — the same fields either way), and an image sent as a JSON STRING
+    holding object text is not decoded. A type-mismatched field inside an
+    image reads as NULL and leaves the rest of the event intact (Spark's
+    partial results for JSON, on by default)."""
+    env = df.select(
+        F.from_json(F.col("value").cast("string"), _envelope_schema(row)).alias(
+            "_env"
+        )
+    )
+    return env.select(
+        *[F.col(f"_env.{path}").alias(name) for name, path in _FLAT_FIELDS.items()],
+        F.col("_env.payload.before").alias("before"),
+        F.col("_env.payload.after").alias("after"),
+    )
 
 
 def kafka_key(db: Column, schema: Column, table: Column) -> Column:

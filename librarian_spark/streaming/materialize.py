@@ -20,6 +20,15 @@ Semantics per micro-batch:
 3. write the merged state to ``state_dir/v=<batch_id>`` and atomically advance
    the ``_LATEST`` pointer.
 
+Before the ``foreachBatch`` boundary the stream is projected to what the
+merge reads (:func:`_keyed`): each event's ``value`` is parsed once, with
+its images typed by the row DDL, and only the key columns, ``_op_``,
+``_row_`` and the two watermarks cross into the batch. A batch function gets
+a frame over the micro-batch's already-planned rows, so the optimizer cannot
+prune across the boundary — projected after it, every batch would still run
+``parse_envelope``'s whole parse, its map parses and a second parse of each
+image for columns nothing reads.
+
 State is read with a known schema (the row DDL plus the watermark columns),
 never inferred, so a batch costs two Spark jobs: the map stage that parses
 the events and scans the state, and the merge write.
@@ -53,6 +62,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import StructField, StructType
+
+from librarian_spark.streaming.envelope import typed_events
 
 __all__ = ["MaterializeConfig", "materialize", "read_state"]
 
@@ -184,17 +195,20 @@ def _read_latest(
     return df
 
 
-def _start_versioned_sink(
-    envelope_stream: DataFrame, cfg, apply_batch
-) -> StreamingQuery:
-    """Start the ``foreachBatch`` query of a versioned-state sink: ``cfg``
-    carries ``state_dir``, ``checkpoint_dir`` and ``trigger``, and
-    ``apply_batch(spark, cfg, batch_df, batch_id)`` merges one batch."""
+def _start_versioned_sink(keyed: DataFrame, cfg, apply_batch) -> StreamingQuery:
+    """Start the ``foreachBatch`` query of a versioned-state sink over the
+    sink's ``keyed`` projection of the stream: ``cfg`` carries
+    ``state_dir``, ``checkpoint_dir`` and ``trigger``, and
+    ``apply_batch(spark, cfg, batch_df, batch_id)`` merges one batch of it.
+
+    The projection is applied BEFORE the boundary: a batch function gets a
+    frame over the micro-batch's already-planned rows, so a column the
+    stream carries is computed whether or not the batch reads it."""
     os.makedirs(cfg.state_dir, exist_ok=True)
     # each batch plans on its OWN session — the one the query cloned at
     # start, so the batch keeps the width the query started with
     writer = (
-        envelope_stream.writeStream.foreachBatch(
+        keyed.writeStream.foreachBatch(
             lambda bdf, bid: apply_batch(bdf.sparkSession, cfg, bdf, bid)
         )
         .option("checkpointLocation", cfg.checkpoint_dir)
@@ -205,31 +219,35 @@ def _start_versioned_sink(
     return writer.start()
 
 
+def _keyed(envelope_stream: DataFrame, cfg: MaterializeConfig) -> DataFrame:
+    """The columns ``_apply_batch`` reads, from one typed parse of each
+    event's ``value``: the key columns (``after`` image for c/u/r,
+    ``before`` for deletes — ``after`` is null on op='d'), ``_op_``, the
+    typed ``after`` image as ``_row_`` and the (ts_ms, lsn) watermarks."""
+    ev = typed_events(envelope_stream, _schema(cfg.row_ddl))
+    after = F.col("after")
+    before = F.when(F.col("op") == cfg.delete_op, F.col("before"))
+    return ev.select(
+        *[F.coalesce(after[k], before[k]).alias(k) for k in cfg.key_cols],
+        F.col("op").alias("_op_"),
+        after.alias("_row_"),
+        *[F.col(c).alias(w) for w, c in zip(_WATERMARKS, cfg.order_cols)],
+    )
+
+
 def read_state(spark: SparkSession, cfg: MaterializeConfig) -> DataFrame:
     """Current materialized table (empty with the declared schema if none),
     without the internal order-tracking columns."""
     return _read_latest(spark, cfg.state_dir, _schema(cfg.row_ddl))
 
 
-
 def _apply_batch(
     spark: SparkSession, cfg: MaterializeConfig, batch_df: DataFrame, batch_id: int
 ) -> None:
+    """Merge one batch of :func:`_keyed` rows into the state."""
     if _already_applied(cfg.state_dir, batch_id):
         return
     declared = _schema(cfg.row_ddl)
-    after = F.from_json("after_json", declared)
-    # a delete's key is in before (after is null on op='d'); no other row
-    # needs its before image
-    before = F.when(
-        F.col("op") == cfg.delete_op, F.from_json("before_json", declared)
-    )
-    keyed = batch_df.select(
-        *[F.coalesce(after[k], before[k]).alias(k) for k in cfg.key_cols],
-        F.col("op").alias("_op_"),
-        after.alias("_row_"),
-        *[F.col(c).alias(w) for w, c in zip(_WATERMARKS, cfg.order_cols)],
-    )
     # Ordering by event, not by batch: the source is at-least-once (the
     # reference re-produces tail events after a crash —
     # replicator.go:267-275), so a LATER batch can carry an OLDER event for
@@ -241,10 +259,7 @@ def _apply_batch(
     # beats them (the old last-batch-wins behavior, but only for those rows).
     wm_schema = StructType(
         declared.fields
-        + [
-            StructField(w, batch_df.schema[c].dataType)
-            for w, c in zip(_WATERMARKS, cfg.order_cols)
-        ]
+        + [StructField(w, batch_df.schema[w].dataType) for w in _WATERMARKS]
     )
     prev = _read_latest(
         spark, cfg.state_dir, wm_schema, dict.fromkeys(_WATERMARKS, _LONG_MIN)
@@ -256,7 +271,7 @@ def _apply_batch(
         *_WATERMARKS,
     )
     winners = (
-        prev_cand.unionByName(keyed)
+        prev_cand.unionByName(batch_df)
         .groupBy(*cfg.key_cols)
         .agg(
             F.max_by(
@@ -274,5 +289,6 @@ def materialize(
     spark: SparkSession, envelope_stream: DataFrame, cfg: MaterializeConfig
 ) -> StreamingQuery:
     """Start the materialization query over a PARSED envelope stream (the
-    output of :func:`librarian_spark.streaming.envelope.parse_envelope`)."""
-    return _start_versioned_sink(envelope_stream, cfg, _apply_batch)
+    output of :func:`librarian_spark.streaming.envelope.parse_envelope`,
+    which keeps the ``value`` column the keyed projection parses)."""
+    return _start_versioned_sink(_keyed(envelope_stream, cfg), cfg, _apply_batch)

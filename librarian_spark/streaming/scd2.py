@@ -7,7 +7,10 @@ shape for dimension tables fed by a replication stream (the reference
 produces the stream, `/root/reference/pkg/replicator/replicator.go:215-284`;
 applying it is the missing consumer half).
 
-Per micro-batch of parsed Debezium-envelope changes:
+The stream crosses the ``foreachBatch`` boundary already projected to the
+columns the merge reads (:func:`_keyed`, one typed parse of each event's
+``value`` — see :mod:`librarian_spark.streaming.materialize`). Per
+micro-batch of those changes:
 
 1. order the batch per key by ``(ts_ms, lsn)`` — one window pass yields, for
    every change, its position in the key's chain and the NEXT change's
@@ -38,6 +41,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.window import Window as W
 
+from librarian_spark.streaming.envelope import typed_events
 from librarian_spark.streaming.materialize import (
     _already_applied,
     _commit_version,
@@ -78,25 +82,34 @@ def read_history(spark: SparkSession, cfg: SCD2Config) -> DataFrame:
     return _read_latest(spark, cfg.state_dir, _schema(cfg.history_ddl()))
 
 
+def _keyed(envelope_stream: DataFrame, cfg: SCD2Config) -> DataFrame:
+    """The columns ``_apply_batch`` reads, from one typed parse of each
+    event's ``value``: the key columns (``after`` image, else ``before``),
+    ``op``, the order columns and the typed ``after`` image as
+    ``after_row``."""
+    ev = typed_events(envelope_stream, _schema(cfg.row_ddl))
+    return ev.select(
+        *[
+            F.coalesce(F.col("after")[k], F.col("before")[k]).alias(k)
+            for k in cfg.key_cols
+        ],
+        "op",
+        *cfg.order_cols,
+        F.col("after").alias("after_row"),
+    )
+
+
 def _apply_batch(
     spark: SparkSession, cfg: SCD2Config, batch_df: DataFrame, batch_id: int
 ) -> None:
+    """Merge one batch of :func:`_keyed` rows into the history."""
     if _already_applied(cfg.state_dir, batch_id):
         return
     ts, ordc = cfg.order_cols
-    after = F.from_json("after_json", cfg.row_ddl).alias("after_row")
-    before = F.from_json("before_json", cfg.row_ddl).alias("before_row")
-    typed = batch_df.select("op", ts, ordc, after, before)
-    keys = [
-        F.coalesce(F.col(f"after_row.{k}"), F.col(f"before_row.{k}")).alias(k)
-        for k in cfg.key_cols
-    ]
     # at-least-once delivery can duplicate an event inside one batch; without
     # this, the duplicate would become a phantom zero-length version and
     # permanently inflate the version counter
-    keyed = typed.select("op", ts, ordc, F.col("after_row"), *keys).dropDuplicates(
-        [*cfg.key_cols, ts, ordc]
-    )
+    keyed = batch_df.dropDuplicates([*cfg.key_cols, ts, ordc])
 
     w = W.partitionBy(*cfg.key_cols).orderBy(ts, ordc)
     chained = keyed.select(
@@ -181,5 +194,6 @@ def scd2_materialize(
     spark: SparkSession, envelope_stream: DataFrame, cfg: SCD2Config
 ) -> StreamingQuery:
     """Start SCD2 materialization over a PARSED envelope stream (the output
-    of :func:`librarian_spark.streaming.envelope.parse_envelope`)."""
-    return _start_versioned_sink(envelope_stream, cfg, _apply_batch)
+    of :func:`librarian_spark.streaming.envelope.parse_envelope`, which
+    keeps the ``value`` column the keyed projection parses)."""
+    return _start_versioned_sink(_keyed(envelope_stream, cfg), cfg, _apply_batch)

@@ -1066,14 +1066,21 @@ def test_scratch_env_wins_without_warning(monkeypatch, _reset_scratch_root, tmp_
     with warnings.catch_warnings():
         warnings.simplefilter("error")  # any warning fails the test
         assert scratch.scratch_root() == str(tmp_path)
+        scratch.warn_if_volatile("/dev/shm/ckpt_chosen")  # an explicit choice
 
 
-def test_scratch_ram_default_warns(monkeypatch, _reset_scratch_root):
+def test_scratch_ram_default_warns(monkeypatch, _reset_scratch_root, tmp_path):
+    """The RAM default warns when a streaming checkpoint lands on it — not
+    on resolving the root, nor for a checkpoint elsewhere."""
     monkeypatch.delenv("SPARK_GRAFT_SCRATCH_DIR", raising=False)
     if not (os.path.isdir("/dev/shm") and os.access("/dev/shm", os.W_OK)):
         pytest.skip("no writable /dev/shm on this box")
-    with pytest.warns(RuntimeWarning, match="streaming"):
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
         assert scratch.scratch_root() == "/dev/shm"
+        scratch.warn_if_volatile(str(tmp_path / "ckpt_a"))
+    with pytest.warns(RuntimeWarning, match="streaming"):
+        scratch.warn_if_volatile("/dev/shm/ckpt_a")
 
 
 def test_bench_runtime_echo_matches_env(spark):
